@@ -31,7 +31,6 @@ Dataflow (all sizes are per 10^12-row scale reasoning):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..config import DedupConfig, DEFAULT_CONFIG
@@ -273,10 +272,15 @@ def candidate_pairs_from_buckets(
 
 # candidate rows per Python-verify task: small enough that a bench-
 # scale candidate set still fans across every core, large enough that
-# a tiny set stays on one or two workers (worker spin-up + Arrow
-# transfer dominated the old blanket repartition(defaultParallelism):
-# verify_jaccard measured 8.1s @local[2] -> 20.4s @local[8], VERDICT
-# r2 "what's wrong" #3 — MORE cores made it SLOWER).
+# a tiny set stays on one or two workers.  Every Python task pays a
+# fixed cost before its first row: on Python < 3.12 the worker's
+# per-task importlib.invalidate_caches() re-parsed the pyspark.zip
+# directory once per zip sub-package importer, about 0.2 CPU-s per
+# task on a 4-vCPU host (pydaemon.py skips the re-read while the zip
+# is unchanged), plus the Arrow round trip.  The old blanket
+# repartition(defaultParallelism) paid it on every core for any
+# candidate count (verify_jaccard 8.1s @local[2] -> 20.4s @local[8],
+# VERDICT r2 "what's wrong" #3 — MORE cores made it SLOWER).
 _VERIFY_ROWS_PER_TASK = 2048
 
 
@@ -299,8 +303,8 @@ def verify_jaccard(
 ) -> DataFrame:
     """Attach TRUE k-shingle Jaccard to candidate (a,b) pairs and keep
     those ≥ cfg.jaccard_threshold.  Texts join in via two hash joins;
-    the similarity itself is one Arrow-batched UDF over the (small)
-    candidate set.
+    the similarity itself is one Arrow-batched pass over the (small)
+    candidate set (jaccard_at_least).
 
     The candidate set is materialized (scoped persist + count) so the
     pre-UDF fan-out is sized to the actual candidate volume — the
@@ -311,18 +315,7 @@ def verify_jaccard(
     is skipped entirely — micro-batches carry their own partitioning
     (ADVICE r3: plan-build must not trigger jobs it can avoid).
     """
-    k = cfg.shingle_k
     texts = df.select(F.col(id_col).alias("_tid"), F.col(text_col).alias("_txt"))
-
-    @F.pandas_udf(T.DoubleType())
-    def _jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        # one lexsort+bincount pass for the whole Arrow batch — no
-        # per-pair Python set ops (functions/hashing.py:jaccard_batch)
-        return pd.Series(
-            H.jaccard_batch(ta.fillna("").tolist(), tb.fillna("").tolist(), k),
-            dtype="float64",
-        )
-
     if n_candidates is None and not candidates.isStreaming:
         candidates = scoped_persist(candidates)
         n_candidates = candidates.count()
@@ -332,11 +325,43 @@ def verify_jaccard(
     )
     if n_candidates is not None:
         joined = sized_fanout(joined, n_candidates)
-    return (
-        joined.withColumn("jaccard", _jac("_ta", "_tb"))
-        .filter(F.col("jaccard") >= F.lit(cfg.jaccard_threshold))
-        .select("a", "b", "jaccard")
+    return jaccard_at_least(joined, ("a", "b"), ("_ta", "_tb"), cfg)
+
+
+def jaccard_at_least(
+    pairs: DataFrame,
+    key_cols: tuple[str, str],
+    text_cols: tuple[str, str],
+    cfg: DedupConfig = DEFAULT_CONFIG,
+) -> DataFrame:
+    """(*key_cols, jaccard) for the rows of ``pairs`` whose TRUE
+    k-shingle Jaccard between the two ``text_cols`` is ≥
+    cfg.jaccard_threshold; the key columns keep their input types.
+
+    Physical shape: ONE mapInPandas node that scores and thresholds in
+    the same Arrow batch (one lexsort+bincount pass per batch, no
+    per-pair Python set ops: functions/hashing.py:jaccard_batch).  A
+    scalar pandas_udf followed by a filter on its output ran the
+    kernel TWICE per candidate: predicate pushdown copies the UDF into
+    the Filter, so the executed plan held two ArrowEvalPython nodes —
+    the same bug minhash_signatures avoids the same way."""
+    k, t = cfg.shingle_k, cfg.jaccard_threshold
+    ta, tb = text_cols
+    src = pairs.select(*key_cols, *text_cols)
+    out_schema = T.StructType(
+        [src.schema[c] for c in key_cols]
+        + [T.StructField("jaccard", T.DoubleType())]
     )
+
+    def _gen(batches):
+        for pdf in batches:
+            jac = H.jaccard_batch(
+                pdf[ta].fillna("").tolist(), pdf[tb].fillna("").tolist(), k
+            )
+            keep = jac >= t
+            yield pdf.loc[keep, list(key_cols)].assign(jaccard=jac[keep])
+
+    return src.mapInPandas(_gen, out_schema)
 
 
 def minhash_pairs(

@@ -234,7 +234,7 @@ def run_pipeline(
         order = sorted(active, key=lambda t: t != "minhash")
         with ThreadPoolExecutor(max_workers=len(order)) as pool:
             futs = {
-                t: pool.submit(inheritable_thread_target(tier_fns[t]))
+                t: pool.submit(inheritable_thread_target(spark)(tier_fns[t]))
                 for t in order
             }
             tier_dfs = {t: futs[t].result() for t in active}

@@ -40,6 +40,19 @@ def build_session(
         # local[32]).  The one pathological tiny-shuffle case, the CC
         # rounds, sizes its own shuffle partitions instead.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE re-plan the shuffles INSIDE a cached plan (coalesce
+        # them like any other query's).  Off, a persisted frame keeps
+        # its planned shuffle width: the streaming screen persists each
+        # micro-batch's signatures, so a 100-row batch ran as 8 Python
+        # signing tasks plus 8-task scans for both consumers — one
+        # 6-batch drain ran 245 tasks, each Python task paying its
+        # fixed cost for ~12 rows.  With it on, the cached signing plan
+        # gains an AQEShuffleRead, the batch signs in one task and the
+        # drain runs 71 tasks (BENCH/python_fixed_cost.md).  A cache
+        # built on an explicit repartition(n) keeps its n partitions:
+        # AQE never coalesces a user-numbered shuffle
+        # (normalize_parallelism's input caches stay as wide as asked).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # coalesce floor: pair-scoring shuffles compress to a few MB
         # but carry seconds of CPU per MB (candidate pairs are two
         # longs that fan out into vector/array work downstream), and
@@ -77,13 +90,17 @@ def build_session(
     # and the engine kernels ALREADY imported (pydaemon.py): the first
     # task wave of every Arrow UDF stage otherwise pays the imports
     # once per worker — measured ~0.9 s off the first pandas stage of
-    # a fresh session at local[32].  Guarded by find_spec: the daemon
-    # is launched as `python -m <module>` BEFORE any task ships
-    # py-files, so on an executor where the package is not installed
-    # the import would kill worker spawn outright (r7 code review) —
-    # this factory pins local[N] where driver importability == worker
-    # importability, but the guard keeps the conf safe to copy into a
-    # cluster submit.  SPARK_GRAFT_PY_DAEMON= (empty) disables.
+    # a fresh session at local[32].  The daemon also stops every task
+    # from re-parsing the pyspark.zip directory on Python < 3.12
+    # (~0.2 CPU-s per Python task, see pydaemon.py).  Guarded by
+    # find_spec: the daemon is launched as `python -m <module>` BEFORE
+    # any task ships py-files, so on an executor where the package is
+    # not installed the import would kill worker spawn outright (r7
+    # code review) — this factory pins local[N] where driver
+    # importability == worker importability, but the guard keeps the
+    # conf safe to copy into a cluster submit.  SPARK_GRAFT_PY_DAEMON=
+    # (empty) runs the stock daemon, which turns off both the preload
+    # and the zip fix.
     import importlib.util
 
     daemon_mod = os.environ.get(
@@ -124,7 +141,7 @@ def _warmup_async(spark: SparkSession) -> None:
             from pyspark import inheritable_thread_target
             from pyspark.sql import Window, functions as F
 
-            @inheritable_thread_target
+            @inheritable_thread_target(spark)
             def _go() -> None:
                 spark.sparkContext.setJobDescription("session warmup")
                 # codegen + shuffle + agg + broadcast-join + window

@@ -17,13 +17,11 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
-from ..functions import hashing as H
 from ..operators.exact import with_content_hash
-from ..operators.minhash_lsh import minhash_signatures
+from ..operators.minhash_lsh import jaccard_at_least, minhash_signatures
 from ..persistence import scoped_persist
 
 
@@ -125,7 +123,6 @@ def _verify_screen_edges(cand: DataFrame, cfg: DedupConfig) -> DataFrame:
     _rtxt).  Emits (id, ref_id, jaccard ≥ threshold)."""
     t = cfg.jaccard_threshold
     slack = 3.0 * (t * (1.0 - t) / cfg.num_perm) ** 0.5
-    k = cfg.shingle_k
 
     est = F.aggregate(
         F.zip_with("sig", "_rsig", lambda x, y: (x == y).cast("int")),
@@ -133,19 +130,7 @@ def _verify_screen_edges(cand: DataFrame, cfg: DedupConfig) -> DataFrame:
         lambda acc, x: acc + x,
     ).cast("double") / F.lit(float(cfg.num_perm))
     cand = cand.where(est >= F.lit(t - slack))
-
-    @F.pandas_udf(T.DoubleType())
-    def _jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        return pd.Series(
-            H.jaccard_batch(ta.fillna("").tolist(), tb.fillna("").tolist(), k),
-            dtype="float64",
-        )
-
-    return (
-        cand.withColumn("jaccard", _jac("_txt", "_rtxt"))
-        .where(F.col("jaccard") >= F.lit(t))
-        .select("id", "ref_id", "jaccard")
-    )
+    return jaccard_at_least(cand, ("id", "ref_id"), ("_txt", "_rtxt"), cfg)
 
 
 def streaming_near_dup_screen(

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -40,6 +42,17 @@ def images_df(spark, fixture_pdf, tmp_path_factory):
 @pytest.fixture(scope="session")
 def truth_pairs(fixture_pdf) -> pd.DataFrame:
     return fixture_pdf[1]
+
+
+def executed_python_nodes(df) -> list[str]:
+    """Run ``df`` and return the Python-evaluating nodes of its final
+    adaptive plan, one line each (a cached plan's nodes included)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return re.findall(
+        r"(?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow)[^\n]*", final
+    )
 
 
 def pairs_set(pdf: pd.DataFrame) -> set[tuple[str, str]]:

@@ -69,8 +69,6 @@ def test_cc_local_solve_matches_distributed(spark, case):
 
 
 def test_cc_empty_edges_no_crash(spark):
-    import pandas as pd_  # noqa: F401
-
     df = spark.createDataFrame([], "a: long, b: long")
     assert connected_components(df).count() == 0
 

@@ -7,9 +7,9 @@ import pytest
 
 from deduplication_and_compression_spark.functions import hashing as H
 from deduplication_and_compression_spark.operators.minhash_lsh import (
-    band_keys, minhash_pairs, minhash_signatures,
+    band_keys, minhash_pairs, minhash_signatures, verify_jaccard,
 )
-from tests.conftest import pairs_set, transitive_closure_pairs
+from tests.conftest import executed_python_nodes, pairs_set, transitive_closure_pairs
 
 
 @pytest.fixture(scope="module")
@@ -71,3 +71,23 @@ def test_band_count(images_df, cfg):
     bk = band_keys(sigs, cfg)
     n = images_df.count()
     assert bk.count() == n * cfg.lsh_bands
+
+
+def test_verify_jaccard_runs_the_kernel_once(spark, cfg):
+    """One Python node per verify: a scalar UDF filtered on its own
+    output was copied into the Filter by predicate pushdown, so every
+    candidate was scored by two ArrowEvalPython nodes."""
+    caps = ["a striped cat sits on the warm windowsill watching birds",
+            "a striped cat sits on the warm windowsill watching crows",
+            "heavy rain over the harbor as fishing boats return home"]
+    df = spark.createDataFrame(list(zip(["i0", "i1", "i2"], caps)),
+                               "image_id string, caption string")
+    cands = spark.createDataFrame([("i0", "i1"), ("i0", "i2")], "a string, b string")
+    out = verify_jaccard(cands, df, cfg)
+    nodes = executed_python_nodes(out)
+    assert len(nodes) == 1 and "jaccard#" in nodes[0], nodes
+    rows = out.collect()
+    assert [(r["a"], r["b"]) for r in rows] == [("i0", "i1")]
+    expect = H.jaccard_batch([caps[0]], [caps[1]], cfg.shingle_k)[0]
+    assert rows[0]["jaccard"] == expect
+    assert out.schema["a"].dataType == cands.schema["a"].dataType

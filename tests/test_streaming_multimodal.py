@@ -318,6 +318,41 @@ def test_screen_batch_band_explode_is_keys_only(spark, cfg):
         assert "txt" not in low and "sig" not in low, line
 
 
+def test_screen_batch_verifies_once_and_signs_in_one_task(spark, cfg):
+    """The screen's exact-Jaccard verify is one Python node (no
+    ArrowEvalPython pair from a pushed-down UDF filter), and the
+    micro-batch's cached signature plan is re-planned by AQE, so a
+    small batch signs in one coalesced task instead of one per
+    shuffle partition."""
+    import pandas as pd
+    from deduplication_and_compression_spark.persistence import persist_scope
+    from deduplication_and_compression_spark.streaming.ingest import (
+        build_screen_reference, screen_batch_edges,
+    )
+    from tests.conftest import executed_python_nodes
+
+    ref = spark.createDataFrame(pd.DataFrame({
+        "image_id": ["r0", "r1"],
+        "caption": ["a striped cat sits on the warm windowsill watching",
+                    "heavy rain over the harbor as fishing boats return"],
+    }))
+    batch = spark.createDataFrame(pd.DataFrame({
+        "image_id": ["s0", "s1"],
+        "caption": ["a striped cat sits on the warm windowsill looking",
+                    "an unrelated caption about mountain trails at dawn"],
+    }))
+    ref_side = build_screen_reference(ref, cfg)
+    with persist_scope():
+        edges = screen_batch_edges(batch, ref_side, cfg)
+        nodes = executed_python_nodes(edges)
+        rows = edges.collect()
+    assert not [n for n in nodes if "ArrowEvalPython" in n], nodes
+    assert len([n for n in nodes if "jaccard#" in n]) == 1, nodes
+    assert [(r["id"], r["ref_id"]) for r in rows] == [("s0", "r0")]
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert "AQEShuffleRead coalesced" in plan.split("InMemoryRelation", 1)[1], plan
+
+
 def test_screen_batch_dedupes_repeated_id_within_batch(spark, cfg):
     """A micro-batch containing the SAME image_id twice (duplicate
     files in one trigger) must still emit each matching pair once:
