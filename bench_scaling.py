@@ -5,8 +5,8 @@ on IDENTICAL input and reports throughput at both plus efficiency
 
 The BASELINE.json rule targets >= 0.8 between N- and 4N-executor
 cluster runs; this sandbox has one machine, so two local parallelism
-levels are the sanctioned proxy (see BASELINE.md).  Results are
-written to BENCH/BASELINE.md.
+levels are the sanctioned proxy (see BASELINE.md).  Each run appends
+a dated section to BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -131,16 +131,16 @@ def main() -> None:
     bench_dir = REPO / "BENCH"
     bench_dir.mkdir(exist_ok=True)
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    md = f"""# BENCH/BASELINE — throughput & scaling efficiency
+    md = f"""## Scaling sweep, {stamp}
 
-Generated by bench_scaling.py on {stamp}.
+Generated by bench_scaling.py.
 
 Sandbox proxy for the N vs 4N **executor** rule (BASELINE.md): the
 identical job (full 4-tier image dedup pipeline, signature→cluster,
 {r_n['n_images']} images at sf={r_n['sf']}) run at two local
 parallelism levels on identical input.
 
-## Host calibration (why N={n})
+### Host calibration (why N={n})
 
 Pure-CPU multiprocessing efficiency of this host (same work per
 worker, ideal = 1.0): {json.dumps(cal)}.
@@ -150,7 +150,7 @@ not the engine; N={n} vs {4*n} stays inside the host's linear region.
 On a real multi-executor cluster each executor brings its own cores,
 memory bus and Python workers, so this constraint is local-mode-only.
 
-## Full 4-tier pipeline (shuffle/IO-heavy)
+### Full 4-tier pipeline (shuffle/IO-heavy)
 
 Best of {p_runs} interleaved runs per level (max images/sec; all runs:
 {json.dumps(pipe_spread)}).
@@ -162,7 +162,7 @@ Best of {p_runs} interleaved runs per level (max images/sec; all runs:
 
 **Pipeline scaling efficiency** thr({4*n}) / (4 x thr({n})) = **{eff:.3f}**
 
-## Signature+banding stage (compute-heavy, {sig_n['rows']} rows)
+### Signature+banding stage (compute-heavy, {sig_n['rows']} rows)
 
 Best of {k_runs} interleaved runs per level (min wall — co-tenant load
 on this shared host drifts run-to-run by up to 2x; all walls:
@@ -185,7 +185,7 @@ host calibration ~0.96 at this pair) the identical job measured
 tracks ambient co-tenant load; the normalized number is the
 comparable one across sweeps.
 
-## Per-stage walls at both parallelism levels ({s_n['rows']} rows)
+### Per-stage walls at both parallelism levels ({s_n['rows']} rows)
 
 Each stage's input is materialized before its timer starts, so every
 row attributes its own scaling (efficiency = wall[{n}] / (4 x
@@ -197,7 +197,7 @@ hit this host's memory-bus ceiling (see calibration).
 {stage_rows}
 | **total** | {s_n['total_sec']} | {s_4n['total_sec']} | {s_n['total_sec'] / (4 * s_4n['total_sec']):.3f} |
 
-## Reading these numbers
+### Reading these numbers
 
 The compute stage scales; the full pipeline on THIS HOST does not,
 and that is a property of the sandbox, not the plan shapes: the
@@ -226,7 +226,12 @@ Raw JSON:
 {json.dumps(r_4n)}
 ```
 """
-    (bench_dir / "BASELINE.md").write_text(md)
+    # append a dated section: the file also keeps earlier sweeps and
+    # hand-written pins, which a rewrite would erase
+    path = bench_dir / "BASELINE.md"
+    head = "" if path.exists() else "# BENCH/BASELINE — throughput & scaling efficiency\n"
+    with path.open("a") as f:
+        f.write(f"{head}\n{md}")
     print(json.dumps({"eff": round(eff, 3), "thr_n": thr_n, "thr_4n": thr_4n}))
 
 

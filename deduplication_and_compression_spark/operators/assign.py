@@ -130,21 +130,26 @@ def elect_representatives(
     )
 
 
-def payload_bytes(df: DataFrame) -> DataFrame:
-    """(image_id, payload_bytes) = encoded image bytes + caption bytes."""
-    return df.select(
-        "image_id",
-        (
+def payload_bytes(df: DataFrame, id_col: str = "image_id",
+                  length_col: str | None = None) -> DataFrame:
+    """(id_col, payload_bytes): each row's stored payload — encoded
+    image bytes + caption UTF-8 bytes, or the ``length_col`` column
+    when given (a text corpus's n_chars).  NULL counts as 0."""
+    if length_col is not None:
+        size = F.coalesce(F.col(length_col), F.lit(0))
+    else:
+        size = (
             F.coalesce(F.length(F.col("bytes")), F.lit(0))
             + F.coalesce(F.length(F.encode(F.col("caption"), "UTF-8")), F.lit(0))
-        ).cast("long").alias("payload_bytes"),
-    )
+        )
+    return df.select(id_col, size.cast("long").alias("payload_bytes"))
 
 
-def savings(assignments: DataFrame, payloads: DataFrame) -> DataFrame:
+def savings(assignments: DataFrame, payloads: DataFrame,
+            id_col: str = "image_id") -> DataFrame:
     """(cluster_id, members, bytes_total, bytes_saved) per cluster with
     ≥2 members.  bytes_saved = bytes_total - representative's bytes."""
-    joined = assignments.join(payloads, "image_id")
+    joined = assignments.join(payloads, id_col)
     return (
         joined.groupBy("cluster_id")
         .agg(
@@ -159,16 +164,19 @@ def savings(assignments: DataFrame, payloads: DataFrame) -> DataFrame:
     )
 
 
-def dedup_ratio(assignments: DataFrame, payloads: DataFrame) -> DataFrame:
-    """Global one-row accounting mirroring App/Host.cpp:507."""
-    joined = assignments.join(payloads, "image_id")
+def dedup_ratio(assignments: DataFrame, payloads: DataFrame,
+                id_col: str = "image_id") -> DataFrame:
+    """Global one-row accounting mirroring App/Host.cpp:507.  The sums
+    are NULL on an empty table; compression_pct is NULL when there is
+    no payload at all (ANSI mode fails a plain x / 0)."""
+    joined = assignments.join(payloads, id_col)
     return joined.agg(
         F.count(F.lit(1)).alias("rows_total"),
         F.sum(F.when(~F.col("is_duplicate"), 1).otherwise(0)).alias("rows_unique"),
         F.sum("payload_bytes").alias("bytes_total"),
         F.sum(F.when(~F.col("is_duplicate"), F.col("payload_bytes")).otherwise(0)).alias("bytes_after_dedup"),
-        (
+        F.try_divide(
             (F.sum("payload_bytes") - F.sum(F.when(~F.col("is_duplicate"), F.col("payload_bytes")).otherwise(0)))
-            * F.lit(100.0) / F.sum("payload_bytes")
+            * F.lit(100.0), F.sum("payload_bytes")
         ).alias("compression_pct"),
     )

@@ -1,33 +1,23 @@
-"""Tiered document-corpus dedup plan — the text analog of
-``plans.pipeline.run_pipeline``'s detector composition.
+"""Checkpoint-free tiered document-corpus pairs: the same tier builders
+``plans.pipeline.run_pipeline`` runs over the ``DOCS`` contract, built
+as one lazy plan with no checkpoint tables.
 
-The reference encoder applies its WHOLE detection chain to every input
-(/root/reference/Test/Testbench.cpp:81-123); a captions-only corpus
-should get the same treatment as the image+caption table: every
-detector tier over the (doc_id, text) contract, unioned with
-highest-confidence-wins priority election (pairs.union_pairs).
-
-Scale shape is inherited tier by tier: exact is a star-shaped
-pair-with-representative over a content-hash groupBy, MinHash/SimHash/
-substring all go through the shared skew-aware bucket candidate
-generator (value collapse, salting, star-over-reps), and the union is
-a partial aggregation — no stage here is new physical work, only the
-composition is.
+The docs CLI (``main.run_docs_mode``) goes through ``run_pipeline``
+itself; this entry point is for callers that want the (a, b, tier)
+union over a (doc_id, text) frame without an output directory.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 
 from ..config import DedupConfig, DEFAULT_CONFIG
-from ..operators.exact import exact_pairs
-from ..operators.minhash_lsh import minhash_pairs
 from ..operators.pairs import union_pairs
-from ..operators.simhash import phash_hamming_pairs, simhash_from_text
-from ..operators.substring import substring_pairs
-from ..persistence import scoped_persist
+from .pipeline import ALL_TIERS, DOCS, tier_frames
 
-DOC_TIERS = ("exact", "minhash", "simhash", "substring")
+DOC_TIERS = ALL_TIERS
 
 
 def docs_tier_pairs(
@@ -45,40 +35,10 @@ def docs_tier_pairs(
     the corpus to materialize its cache anyway); omitted, the tier
     pins the chunk4 scheme rather than running a count of its own.
 
-    Caller owns the persist scope: the SimHash kernel output is
-    scoped-persisted here (it feeds the keying explode and both verify
-    joins), as are each tier's internal key/candidate tables.
+    Caller owns the persist scope: each tier's signatures, key tables
+    and pairs are scoped-persisted here, as are the tiers' internal
+    candidate tables.
     """
-    unknown = set(tiers) - set(DOC_TIERS)
-    if unknown:
-        raise ValueError(
-            f"unknown doc tiers {sorted(unknown)}; valid: {DOC_TIERS}"
-        )
-    if not tiers:
-        raise ValueError("at least one tier required")
-    tier_dfs: dict[str, DataFrame] = {}
-    if "exact" in tiers:
-        tier_dfs["exact"] = exact_pairs(
-            docs, id_col=id_col, cols=(text_col,)
-        ).select("a", "b")
-    if "minhash" in tiers:
-        tier_dfs["minhash"] = minhash_pairs(
-            docs, cfg, id_col=id_col, text_col=text_col
-        ).select("a", "b")
-    if "simhash" in tiers:
-        sims = scoped_persist(
-            simhash_from_text(docs, id_col=id_col, text_col=text_col)
-        )
-        kw = (
-            {"scheme": "auto", "n_rows": n_docs}
-            if n_docs is not None
-            else {"scheme": "chunk4"}
-        )
-        tier_dfs["simhash"] = phash_hamming_pairs(
-            sims, cfg, id_col="id", hash_col="simhash", **kw
-        ).select("a", "b")
-    if "substring" in tiers:
-        tier_dfs["substring"] = substring_pairs(
-            docs, cfg, id_col=id_col, text_col=text_col
-        ).select("a", "b")
-    return union_pairs(**tier_dfs)
+    contract = replace(DOCS, id_col=id_col, text_col=text_col,
+                       exact_cols=(text_col,))
+    return union_pairs(**tier_frames(docs, contract, cfg, tiers, n_rows=n_docs))

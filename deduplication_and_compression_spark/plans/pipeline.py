@@ -1,18 +1,27 @@
-"""Pipeline orchestration: signature → candidates → pairs → components
+"""The one tiered planner: tiers → pair union → connected components
 → assignments → savings, with per-stage checkpoint tables and resume.
+
+One planner, two column contracts: ``IMAGES`` (image+caption table)
+and ``DOCS`` (a read_documents corpus) name only what differs between
+the tables.  The tiers are written once (``tier_frames``) and build
+each output through a ``stage`` function: ``run_pipeline`` passes the
+checkpointing one; ``plans.docs.docs_tier_pairs`` a checkpoint-free
+one.  The reference likewise applies one detection chain to every
+input (reference Test/Testbench.cpp:81-123).
 
 The reference's pipeline is compile-time-fixed thread topology
 (/root/reference/App/Host.cpp:254-340 spawning core_1/core_2); its only
 resumability is "re-run the whole stream".  Here every stage writes an
 idempotent checkpoint table (Iceberg when a catalog is configured;
 parquet fallback in this sandbox, see sources/tables.py) tagged with
-the config fingerprint, so any stage can resume mid-run
-(BASELINE.json north_rule) and a finished stage is never recomputed.
+the config fingerprint and an input fingerprint, so any stage can
+resume mid-run (BASELINE.json north_rule) and a finished stage is
+never recomputed — unless the config or the input changed.
 
 Metrics mirror the reference's per-stage stopwatch report
 (/root/reference/App/Host.cpp:500-543): per-stage wall_ms, rows_out,
 plus per-partition row counts (lineage) for the key stages.  Since r7
-the four tier stages run CONCURRENTLY (see run_pipeline), so a tier
+the four tier stages run CONCURRENTLY (see tier_frames), so a tier
 stage's wall_ms includes cross-tier contention — compare tier walls
 only against other concurrent runs, or use the pipeline wall; the
 post-union stages (cc_labels onward) remain sequential and their
@@ -31,17 +40,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..operators.assign import (
-    assignments_from_labels, dedup_ratio, payload_bytes, savings,
+    assignments_from_labels, dedup_ratio, elect_representatives,
+    payload_bytes, savings,
 )
 from ..operators.components import connected_components
 from ..operators.exact import exact_pairs
 from ..operators.minhash_lsh import minhash_pairs, minhash_signatures
 from ..operators.pairs import union_pairs
-from ..operators.simhash import phash_hamming_pairs
+from ..operators.simhash import phash_hamming_pairs, simhash_from_text
 from ..operators.substring import substring_pairs, winnow_keys
-from ..persistence import persist_scope
-
-ALL_TIERS = ("exact", "minhash", "simhash", "substring")
+from ..persistence import persist_scope, scoped_persist
 
 # Bumped whenever any stage's OUTPUT SCHEMA changes (e.g. r3 added the
 # bands column to minhash signatures): a checkpoint written under an
@@ -50,6 +58,109 @@ ALL_TIERS = ("exact", "minhash", "simhash", "substring")
 # downstream operator instead of here (ADVICE r3).  Belt-and-braces,
 # the stored schema JSON is compared too.
 CHECKPOINT_SCHEMA_VERSION = 2
+
+
+@dataclass(frozen=True)
+class Contract:
+    """The columns the tiers and the payload accounting read."""
+
+    id_col: str
+    text_col: str
+    exact_cols: tuple[str, ...]  # hashed by the exact tier
+    hash_col: str | None         # 64-bit Hamming hash; None: SimHash of text_col
+    payload_col: str | None      # payload length; None: bytes + caption UTF-8
+
+
+IMAGES = Contract("image_id", "caption", ("bytes", "caption"), "phash", None)
+DOCS = Contract("doc_id", "text", ("text",), None, "n_chars")
+
+ALL_TIERS = ("exact", "minhash", "simhash", "substring")
+
+# stage(name, build) → the stage's output frame
+Stage = Callable[[str, Callable[[], DataFrame]], DataFrame]
+
+
+def _persisted(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+    """The checkpoint-free stage: persisted in the caller's
+    persist_scope (signatures and key tables feed several plan
+    branches; unpersisted, their UDF would run once per branch)."""
+    return scoped_persist(build())
+
+
+def _check_tiers(tiers: tuple[str, ...]) -> None:
+    unknown = set(tiers) - set(ALL_TIERS)
+    if unknown:
+        raise ValueError(f"unknown tiers {sorted(unknown)}; valid: {ALL_TIERS}")
+    if not tiers:
+        raise ValueError("at least one tier required")
+
+
+def tier_frames(
+    table: DataFrame,
+    contract: Contract,
+    cfg: DedupConfig,
+    tiers: tuple[str, ...],
+    stage: Stage = _persisted,
+    n_rows: int | None = None,
+    spark: SparkSession | None = None,
+) -> dict[str, DataFrame]:
+    """{tier: (a, b) pairs} for each requested tier, in ALL_TIERS order:
+    the one place the tiers are written, each output built through
+    ``stage``.  ``n_rows`` feeds the SimHash tier's size-adaptive
+    keying; without it the tier pins chunk4 rather than counting.
+
+    Given ``spark``, the tiers run CONCURRENTLY (for eager, checkpoint-
+    writing stages): they are independent jobs over the same cached
+    input, so they run from a small driver thread pool —
+    each tier's tail of straggler tasks is back-filled by the next
+    tier's work instead of leaving most cores idle, and one tier's
+    JVM/codegen/Python-worker warm-up overlaps another tier's compute
+    (measured: warm tier-stage sum ~14.9 s sequential vs ~max-chain
+    wall overlapped).  Each stage writes its own checkpoint table,
+    persist scopes are per-thread (persistence.py), and FIFO
+    scheduling keeps the earlier-submitted tier's tasks first in line.
+    Without ``spark`` the tiers are built in this thread, so lazy
+    stages register their persists in the caller's scope.
+    """
+    _check_tiers(tiers)
+    t, c = table, contract
+
+    def build(tier: str) -> DataFrame:
+        if tier == "exact":
+            return stage("pairs_exact", lambda: exact_pairs(t, c.id_col, c.exact_cols))
+        if tier == "minhash":
+            # signatures are their own stage: the expensive Arrow UDF
+            # runs exactly once, and a resumed run skips it entirely
+            sigs = stage("sig_minhash",
+                         lambda: minhash_signatures(t, cfg, c.id_col, c.text_col))
+            return stage("pairs_minhash", lambda: minhash_pairs(
+                t, cfg, c.id_col, c.text_col, sigs=sigs).select("a", "b"))
+        if tier == "simhash":
+            src, id_col, hash_col = t, c.id_col, c.hash_col
+            if hash_col is None:
+                src, id_col, hash_col = stage("sig_simhash", lambda: simhash_from_text(
+                    t, c.id_col, c.text_col)), "id", "simhash"
+            scheme = "auto" if n_rows is not None else "chunk4"
+            return stage("pairs_simhash", lambda: phash_hamming_pairs(
+                src, cfg, id_col, hash_col, scheme, n_rows).select("a", "b"))
+        keys = stage("winnow_keys", lambda: winnow_keys(t, cfg, c.id_col, c.text_col))
+        return stage("pairs_substring", lambda: substring_pairs(
+            t, cfg, c.id_col, c.text_col, keys=keys).select("a", "b"))
+
+    active = [tier for tier in ALL_TIERS if tier in tiers]
+    if spark is None or len(active) == 1:
+        return {tier: build(tier) for tier in active}
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # submit the longest chain (minhash: two chained stages) first
+    # so FIFO gives it executors first — it is the critical path
+    order = sorted(active, key=lambda tier: tier != "minhash")
+    with ThreadPoolExecutor(max_workers=len(order)) as pool:
+        futs = {tier: pool.submit(inheritable_thread_target(spark)(build), tier)
+                for tier in order}
+        return {tier: futs[tier].result() for tier in active}
 
 
 def _parquet_rows(data_dir: Path) -> int:
@@ -76,10 +187,11 @@ class PipelineResult:
 
 class _Checkpointer:
     def __init__(self, spark: SparkSession, out_dir: str | Path,
-                 cfg: DedupConfig, resume: bool):
+                 cfg: DedupConfig, resume: bool, input_fp: str):
         self.spark = spark
         self.out = Path(out_dir)
         self.cfg_fp = cfg.fingerprint()
+        self.input_fp = input_fp
         self.resume = resume
         self.metrics: list[dict] = []
 
@@ -90,14 +202,21 @@ class _Checkpointer:
         return self.out / f"chk_{stage}" / "data"
 
     def stage(self, name: str, fn: Callable[[], DataFrame],
-              lineage: bool = False) -> DataFrame:
+              lineage: bool = False, plan: str = "") -> DataFrame:
         """Run-or-resume one stage; always returns the checkpointed
-        (re-read) DataFrame so downstream lineage starts at the table."""
+        (re-read) DataFrame so downstream lineage starts at the table.
+
+        A checkpoint is reused only if it was written under the same
+        config, the same input and the same ``plan`` — the choices
+        upstream of the stage that are not config (tier set, rep
+        policy)."""
         meta_p, data_p = self._meta_path(name), self._data_path(name)
         if self.resume and meta_p.exists():
             meta = json.loads(meta_p.read_text())
             if (
                 meta.get("config_fp") == self.cfg_fp
+                and meta.get("input_fp") == self.input_fp
+                and meta.get("plan", "") == plan
                 and meta.get("complete")
                 and meta.get("schema_version") == CHECKPOINT_SCHEMA_VERSION
             ):
@@ -121,7 +240,9 @@ class _Checkpointer:
         with persist_scope():
             df = fn()
             df.write.mode("overwrite").parquet(str(data_p))
-        out = self.spark.read.parquet(str(data_p))
+        # read back with the written schema: Spark reads it as nullable,
+        # exactly what inference would find, minus inference's job
+        out = self.spark.read.schema(df.schema).parquet(str(data_p))
         rows = _parquet_rows(data_p)
         wall_ms = (time.perf_counter() - t0) * 1000
         self.metrics.append(
@@ -140,7 +261,8 @@ class _Checkpointer:
                 )
         meta_p.parent.mkdir(parents=True, exist_ok=True)
         meta_p.write_text(json.dumps(
-            {"config_fp": self.cfg_fp, "rows_out": rows, "complete": True,
+            {"config_fp": self.cfg_fp, "input_fp": self.input_fp,
+             "plan": plan, "rows_out": rows, "complete": True,
              "schema_version": CHECKPOINT_SCHEMA_VERSION,
              "schema": out.schema.json()}
         ))
@@ -154,6 +276,18 @@ class _Checkpointer:
         self.spark.createDataFrame(pdf).write.mode("append").parquet(str(p))
 
 
+def _assignments(table: DataFrame, labels: DataFrame, c: Contract,
+                 scores: DataFrame | None) -> DataFrame:
+    asg = assignments_from_labels(table, labels, id_col=c.id_col)
+    if scores is None:
+        return asg
+    score_col = next(s for s in scores.columns if s != c.id_col)
+    return elect_representatives(asg, scores, c.id_col, score_col).select(
+        c.id_col, "cluster_id", "is_duplicate",
+        F.col("rep_id").alias("representative_id"),
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     images: DataFrame,
@@ -161,96 +295,45 @@ def run_pipeline(
     cfg: DedupConfig = DEFAULT_CONFIG,
     tiers: tuple[str, ...] = ALL_TIERS,
     resume: bool = True,
+    contract: Contract = IMAGES,
+    scores: DataFrame | None = None,
 ) -> PipelineResult:
-    unknown = set(tiers) - set(ALL_TIERS)
-    if unknown:
-        raise ValueError(f"unknown tiers {sorted(unknown)}; valid: {ALL_TIERS}")
-    ck = _Checkpointer(spark, out_dir, cfg, resume)
-
-    # Normalize input parallelism and cache: every tier scans the images
+    """Dedup ``images`` (any table with ``contract``'s columns) into
+    checkpoint tables under ``out_dir``.  Given an (id, score) frame
+    ``scores``, each cluster's representative is its best-scoring member
+    (elect_representatives), and savings and ratio keep its payload; a
+    resumed run assumes the same scores for the same input."""
+    _check_tiers(tiers)  # before the input is cached and counted
+    c = contract
+    # Normalize input parallelism and cache: every tier scans the
     # table, and a single-file parquet input would otherwise cap the
     # whole pipeline at a handful of input splits.
     from ..sources.tables import normalize_parallelism
 
-    images = normalize_parallelism(images).persist()
-    # materialize the cache AND capture the row count once: the phash
-    # tier's auto keying scheme needs it, and counting here means no
-    # tier ever runs a plan-build-time df.count() of its own
-    n_images = images.count()
+    table = normalize_parallelism(images).persist()
+    # ONE job materializes the cache, counts the rows (the simhash
+    # tier's auto keying scheme needs the count, so no tier runs a
+    # count of its own) and fingerprints the input: a checkpoint
+    # written from another input is never resumed from.  bit_xor, not
+    # sum: Spark 4's ANSI mode fails a sum of xxhash64 on overflow.
+    cols = (c.id_col, c.text_col, *c.exact_cols, c.hash_col, c.payload_col)
+    fp = table.agg(F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(
+        *[x for x in dict.fromkeys(cols) if x in table.columns])).alias("x")).first()
+    n_rows = int(fp["n"])
+    ck = _Checkpointer(spark, out_dir, cfg, resume, f"{n_rows}:{fp['x']}")
 
-    # The four tiers are INDEPENDENT jobs over the same cached input, so
-    # they run from a small driver thread pool (guide §2.6): each tier's
-    # tail of straggler tasks is back-filled by the next tier's work
-    # instead of leaving most cores idle, and the one-time JVM/codegen/
-    # Python-worker warm-up of one tier overlaps another tier's compute
-    # (measured: warm tier-stage sum ~14.9 s sequential vs ~max-chain
-    # wall overlapped; cold first-run wins are larger because every
-    # tier's JIT warm-up was serialized).  Correctness is unaffected:
-    # each stage writes its own checkpoint table, persist scopes are
-    # per-thread (persistence.py), and FIFO scheduling keeps the
-    # earlier-submitted tier's tasks first in line.
-    def _tier_exact() -> DataFrame:
-        return ck.stage("pairs_exact", lambda: exact_pairs(images))
-
-    def _tier_minhash() -> DataFrame:
-        # signatures are their own checkpoint: the expensive Arrow UDF
-        # runs exactly once, and a resumed run skips it entirely
-        sigs = ck.stage("sig_minhash", lambda: minhash_signatures(images, cfg))
-        return ck.stage(
-            "pairs_minhash",
-            lambda: minhash_pairs(images, cfg, sigs=sigs).select("a", "b"),
-        )
-
-    def _tier_simhash() -> DataFrame:
-        return ck.stage(
-            "pairs_simhash",
-            lambda: phash_hamming_pairs(
-                images, cfg, n_rows=n_images
-            ).select("a", "b"),
-        )
-
-    def _tier_substring() -> DataFrame:
-        wkeys = ck.stage("winnow_keys", lambda: winnow_keys(images, cfg))
-        return ck.stage(
-            "pairs_substring",
-            lambda: substring_pairs(images, cfg, keys=wkeys).select("a", "b"),
-        )
-
-    tier_fns = {
-        "exact": _tier_exact,
-        "minhash": _tier_minhash,
-        "simhash": _tier_simhash,
-        "substring": _tier_substring,
-    }
-    active = [t for t in ALL_TIERS if t in tiers]
-    tier_dfs: dict[str, DataFrame] = {}
-    if len(active) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        # submit the longest chain (minhash: two chained stages) first
-        # so FIFO gives it executors first — it is the critical path
-        order = sorted(active, key=lambda t: t != "minhash")
-        with ThreadPoolExecutor(max_workers=len(order)) as pool:
-            futs = {
-                t: pool.submit(inheritable_thread_target(spark)(tier_fns[t]))
-                for t in order
-            }
-            tier_dfs = {t: futs[t].result() for t in active}
-    elif active:
-        tier_dfs = {active[0]: tier_fns[active[0]]()}
-
-    pairs = ck.stage("pairs_union", lambda: union_pairs(**tier_dfs), lineage=True)
-    labels = ck.stage(
-        "cc_labels", lambda: connected_components(pairs, cfg), lineage=True
-    )
-    asg = ck.stage(
-        "assignments", lambda: assignments_from_labels(images, labels), lineage=True
-    )
-    pay = payload_bytes(images)
-    sav = ck.stage("savings", lambda: savings(asg, pay))
-    ratio = dedup_ratio(asg, pay)
+    frames = tier_frames(table, c, cfg, tiers, ck.stage, n_rows, spark)
+    active = ",".join(frames)
+    pairs = ck.stage("pairs_union", lambda: union_pairs(**frames),
+                     lineage=True, plan=active)
+    labels = ck.stage("cc_labels", lambda: connected_components(pairs, cfg),
+                      lineage=True, plan=active)
+    policy = active + ("|scores" if scores is not None else "")
+    asg = ck.stage("assignments", lambda: _assignments(table, labels, c, scores),
+                   lineage=True, plan=policy)
+    pay = payload_bytes(table, c.id_col, c.payload_col)
+    sav = ck.stage("savings", lambda: savings(asg, pay, c.id_col), plan=policy)
+    ratio = dedup_ratio(asg, pay, c.id_col)
     ck.write_metrics()
-    images.unpersist()
+    table.unpersist()
     return PipelineResult(asg, sav, ratio, pairs, ck.metrics)

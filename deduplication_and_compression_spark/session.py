@@ -60,11 +60,8 @@ def build_session(
         # local[32] (srp_topk re-rank: 15 s CPU on 10 tasks).  64k
         # keeps CPU-dense small shuffles wide; measured neutral on
         # genuinely tiny shuffles and -10..-25% on srp/minhash/ppjoin/
-        # cc (OPTIMIZATION_r07.md).  Parameterised for cluster tuning.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        # cc (OPTIMIZATION_r07.md).  Cluster tuning: extra_conf.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
@@ -72,17 +69,14 @@ def build_session(
         # (/root/reference/Server/encoder.cpp:369-485); the engine analog
         # is columnar zstd on every sink table
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         # throughput collector for batch work: G1's pause-time goal
         # buys nothing in a non-interactive engine, and under the
         # r7 concurrent-tier pipeline ParallelGC measured ~10% off the
         # warm pipeline wall (15.1 -> 13.6 s) with every other query
-        # neutral-or-better.  Parameterised for deployments that need
-        # G1 (very large heaps / pause-sensitive co-tenants).
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
-        )
+        # neutral-or-better.  Deployments that need G1 (very large
+        # heaps / pause-sensitive co-tenants) override it in extra_conf.
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -116,8 +110,7 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        _warmup_async(spark)
+    _warmup_async(spark)
     return spark
 
 
@@ -132,8 +125,7 @@ def _warmup_async(spark: SparkSession) -> None:
     it once at build, overlapped with whatever setup the caller runs
     next (FIFO scheduling: the micro jobs finish before real work
     queues behind them).  Total work is a few hundred rows — no user
-    data, no caching, nothing a query could reuse as a result.
-    Disable with SPARK_GRAFT_WARMUP=0."""
+    data, no caching, nothing a query could reuse as a result."""
     import threading
 
     def _run() -> None:

@@ -9,7 +9,7 @@
 
 Replaces the reference's CLI (-b blocksize -f filename,
 /root/reference/Server/encoder.cpp:492-511) with the batch analog:
-read the input table, run the tiered dedup pipeline, write
+read the input table, run the tiered dedup pipeline (both modes), write
 assignments/savings/metrics checkpoint tables under --output, print
 the one-line accounting report (the App/Host.cpp:500-507 analog).
 """
@@ -58,101 +58,50 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
+def _accounting(ratio) -> tuple:
+    """dedup_ratio's row as (rows_total, rows_unique, payload_total,
+    payload_after_dedup, pct); its sums are NULL on an empty input and
+    read as 0."""
+    r = ratio.collect()[0]
+    return (*(int(r[k] or 0) for k in ("rows_total", "rows_unique", "bytes_total",
+                                        "bytes_after_dedup")),
+            round(r["compression_pct"] or 0.0, 3))
+
+
 def run_docs_mode(spark, args) -> dict:
-    """Document-corpus dedup: read_documents (any format) → the full
-    tiered pair union (exact/minhash/simhash/substring, --tiers
-    selectable, priority election) → connected components →
-    assignments + character-savings accounting, written under
-    --output.  The text analog of the image pipeline's report — a
+    """Document-corpus dedup: read_documents (any format) → run_pipeline
+    over the DOCS contract (checkpoints under --output, resumed unless
+    --no-resume) → assignments (and, asked, the leakage-safe split)
+    written under --output → the character-savings report.  A
     captions-only corpus gets the same detector chain the image table
     gets (reference: /root/reference/Test/Testbench.cpp:81-123)."""
-    from pyspark.sql import functions as F
-
     from deduplication_and_compression_spark.config import DEFAULT_CONFIG
-    from deduplication_and_compression_spark.operators.assign import (
-        assignments_from_labels,
-    )
-    from deduplication_and_compression_spark.operators.components import (
-        connected_components,
-    )
-    from deduplication_and_compression_spark.persistence import (
-        persist_scope, scoped_persist,
-    )
-    from deduplication_and_compression_spark.plans.docs import docs_tier_pairs
-    from deduplication_and_compression_spark.sources.tables import (
-        normalize_parallelism, read_documents,
-    )
+    from deduplication_and_compression_spark.operators.assign import leakage_safe_split
+    from deduplication_and_compression_spark.operators.textops import quality_scores
+    from deduplication_and_compression_spark.plans.pipeline import DOCS, run_pipeline
+    from deduplication_and_compression_spark.sources.tables import read_documents
 
     out = Path(args.output)
-    with persist_scope():
-        # scoped: released on scope exit even if the write/collect
-        # throws (a bare persist + manual unpersist leaked on error)
-        docs = scoped_persist(normalize_parallelism(
-            read_documents(spark, args.input, fmt=args.format)
-        ))
-        # materialize the cache and capture the count once: every tier
-        # scans the corpus, and the SimHash tier's size-adaptive keying
-        # needs the row count without an action of its own
-        n_docs = docs.count()
-        pairs = docs_tier_pairs(
-            docs, DEFAULT_CONFIG, tiers=tuple(args.tiers.split(",")),
-            n_docs=n_docs,
-        ).select("a", "b")
-        labels = connected_components(pairs, DEFAULT_CONFIG)
-        asg = assignments_from_labels(docs, labels, id_col="doc_id")
-        if args.rep_policy == "quality":
-            from deduplication_and_compression_spark.operators.assign import (
-                elect_representatives,
-            )
-            from deduplication_and_compression_spark.operators.textops import (
-                quality_scores,
-            )
-
-            scores = quality_scores(docs).select("doc_id", "quality_bp")
-            asg = elect_representatives(
-                asg, scores, id_col="doc_id", score_col="quality_bp"
-            ).withColumnRenamed("rep_id", "representative_id")
-        asg.write.mode("overwrite").parquet(str(out / "assignments"))
-        asg = spark.read.parquet(str(out / "assignments"))
-        split_counts = None
-        if args.emit_split is not None:
-            from deduplication_and_compression_spark.operators.assign import (
-                leakage_safe_split,
-            )
-
-            split = leakage_safe_split(
-                asg, frac_train=args.emit_split, id_col="doc_id"
-            )
-            split.write.mode("overwrite").parquet(str(out / "split"))
-            split_counts = {
-                r["split"]: r["n"]
-                for r in spark.read.parquet(str(out / "split"))
-                .groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-        stats = (
-            asg.join(docs.select("doc_id", "n_chars"), "doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("rows_total"),
-                F.sum((~F.col("is_duplicate")).cast("int")).alias("rows_unique"),
-                F.sum("n_chars").alias("chars_total"),
-                F.sum(F.when(F.col("is_duplicate"), F.col("n_chars"))
-                      .otherwise(F.lit(0))).alias("chars_dupes"),
-            )
-            .collect()[0]
-        )
-    # sums are NULL on an empty corpus — report zeros, not a TypeError
-    chars_total = int(stats["chars_total"] or 0)
-    chars_saved = int(stats["chars_dupes"] or 0)
-    report = {
-        "rows_total": stats["rows_total"],
-        "rows_unique": int(stats["rows_unique"] or 0),
-        "chars_total": chars_total,
-        "chars_saved": chars_saved,
-        "dedup_pct": round(100.0 * chars_saved / max(1, chars_total), 3),
-    }
-    if split_counts is not None:
-        report["split_train"] = int(split_counts.get("train", 0))
-        report["split_val"] = int(split_counts.get("val", 0))
+    docs = read_documents(spark, args.input, fmt=args.format)
+    scores = (quality_scores(docs).select("doc_id", "quality_bp")
+              if args.rep_policy == "quality" else None)
+    res = run_pipeline(
+        spark, docs, out, DEFAULT_CONFIG, tiers=tuple(args.tiers.split(",")),
+        resume=not getattr(args, "no_resume", False), contract=DOCS,
+        scores=scores,
+    )
+    res.assignments.write.mode("overwrite").parquet(str(out / "assignments"))
+    rows, unique, total, kept, pct = _accounting(res.ratio)
+    report = {"rows_total": rows, "rows_unique": unique, "chars_total": total,
+              "chars_saved": total - kept, "dedup_pct": pct}
+    if args.emit_split is not None:
+        leakage_safe_split(
+            res.assignments, frac_train=args.emit_split, id_col="doc_id"
+        ).write.mode("overwrite").parquet(str(out / "split"))
+        counts = dict(spark.read.parquet(str(out / "split"))
+                      .groupBy("split").count().collect())
+        report["split_train"] = int(counts.get("train", 0))
+        report["split_val"] = int(counts.get("val", 0))
     return report
 
 
@@ -168,19 +117,12 @@ def main(argv=None) -> None:
     active = SparkSession.getActiveSession()
     spark = active or build_session(app_name="dedup-pipeline", cores=args.cores)
     if args.mode == "docs":
-        # loud rejection beats a silent no-op: docs mode has no
-        # checkpoint stages, so a user passing --no-resume would
-        # believe resume existed to disable
-        if args.no_resume:
-            raise ValueError("--no-resume applies to --mode images only "
-                             "(docs mode always recomputes and overwrites)")
         t0 = time.perf_counter()
         report = run_docs_mode(spark, args)
         report["wall_sec"] = round(time.perf_counter() - t0, 1)
         print(json.dumps(report))
         return
-    # loud rejections (the --no-resume precedent, inverted): these
-    # stages run over the document contract only
+    # loud rejections: these stages run over the document contract only
     if args.emit_split is not None:
         raise ValueError("--emit-split applies to --mode docs only")
     if args.rep_policy != "first":
@@ -195,16 +137,16 @@ def main(argv=None) -> None:
         tiers=tuple(args.tiers.split(",")),
         resume=not args.no_resume,
     )
-    ratio = res.ratio.collect()[0].asDict()
+    rows, unique, total, kept, pct = _accounting(res.ratio)
     wall = time.perf_counter() - t0
     report = {
-        "rows_total": ratio["rows_total"],
-        "rows_unique": ratio["rows_unique"],
-        "bytes_total": ratio["bytes_total"],
-        "bytes_after_dedup": ratio["bytes_after_dedup"],
-        "compression_pct": round(ratio["compression_pct"], 3),
+        "rows_total": rows,
+        "rows_unique": unique,
+        "bytes_total": total,
+        "bytes_after_dedup": kept,
+        "compression_pct": pct,
         "wall_sec": round(wall, 1),
-        "images_per_sec": round(ratio["rows_total"] / wall, 1),
+        "images_per_sec": round(rows / wall, 1),
         "config_fingerprint": DEFAULT_CONFIG.fingerprint(),
     }
     print(json.dumps(report))

@@ -8,6 +8,7 @@ tiered pipeline + the one-line JSON accounting report).
 from __future__ import annotations
 
 import json
+import shutil
 
 import pytest
 
@@ -116,21 +117,91 @@ def test_cli_docs_mode_tier_selection(spark, tmp_path, capsys, tiers,
 
 def test_cli_docs_mode_rejects_unknown_tier(spark, tmp_path):
     src = _write_docs_corpus(tmp_path)
-    with pytest.raises(ValueError, match="unknown doc tiers"):
+    with pytest.raises(ValueError, match="unknown tiers"):
         cli.main(["--mode", "docs", "--input", str(src), "--format", "json",
                   "--output", str(tmp_path / "bad"), "--tiers", "exact,bogus"])
 
 
 def test_cli_docs_mode_empty_corpus_and_flag_rejection(spark, tmp_path, capsys):
+    """An empty corpus reports zeros; --no-resume, once rejected in docs
+    mode (which had no checkpoints), is now accepted."""
     src = tmp_path / "empty.txt"
     src.write_text("")
-    cli.main(["--mode", "docs", "--input", str(src), "--format", "text",
-              "--output", str(tmp_path / "eo")])
-    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert report["rows_total"] == 0 and report["chars_saved"] == 0
-    with pytest.raises(ValueError, match="--no-resume applies"):
+    for extra in ([], ["--no-resume"]):
         cli.main(["--mode", "docs", "--input", str(src), "--format", "text",
-                  "--output", str(tmp_path / "eo3"), "--no-resume"])
+                  "--output", str(tmp_path / "eo"), *extra])
+        report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert report["rows_total"] == 0 and report["chars_saved"] == 0
+        assert report["dedup_pct"] == 0.0
+    # docs with no characters at all: compression_pct divides by a
+    # zero payload total, which ANSI mode fails unless guarded
+    blank = tmp_path / "blank.jsonl"
+    blank.write_text('{"doc_id": 1, "text": ""}\n{"doc_id": 2, "text": ""}\n')
+    cli.main(["--mode", "docs", "--input", str(blank), "--format", "json",
+              "--output", str(tmp_path / "eb")])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["rows_total"] == 2 and report["chars_total"] == 0
+    assert report["dedup_pct"] == 0.0
+
+
+def test_cli_images_mode_empty_table(spark, tmp_path, capsys):
+    """An empty images table reports zeros (dedup_ratio's sums are NULL
+    there; the report once crashed rounding compression_pct)."""
+    from deduplication_and_compression_spark.fixtures.generator import (
+        generate_images,
+    )
+
+    src = tmp_path / "empty.parquet"
+    generate_images(20, seed=3)[0].head(0).to_parquet(src, index=False)
+    cli.main(["--input", str(src), "--output", str(tmp_path / "eo"),
+              "--tiers", "exact,simhash"])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["rows_total"] == 0 and report["rows_unique"] == 0
+    assert report["bytes_total"] == report["bytes_after_dedup"] == 0
+    assert report["compression_pct"] == 0.0
+
+
+def test_cli_docs_mode_kill_and_resume(spark, tmp_path, capsys):
+    """Docs mode checkpoints under --output: with its post-union
+    checkpoints lost, a rerun recomputes exactly those stages, resumes
+    the rest, and writes the same assignments and split."""
+    import pandas as pd
+
+    from deduplication_and_compression_spark.fixtures.generator import (
+        generate_zipf_docs,
+    )
+
+    src = tmp_path / "docs.parquet"
+    generate_zipf_docs(120, seed=5)[0].to_parquet(src, index=False)
+    out = tmp_path / "out"
+    argv = ["--mode", "docs", "--input", str(src), "--output", str(out),
+            "--rep-policy", "quality", "--emit-split", "0.9"]
+
+    def run():
+        cli.main(argv)
+        report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        report.pop("wall_sec")
+        tables = [pd.read_parquet(out / t).sort_values("doc_id")
+                  .reset_index(drop=True) for t in ("assignments", "split")]
+        return report, tables
+
+    report1, (asg1, split1) = run()
+    assert report1["rows_unique"] < report1["rows_total"] == 120
+    lost = {"cc_labels", "assignments", "savings"}
+    for stage in lost:
+        shutil.rmtree(out / f"chk_{stage}")
+    report2, (asg2, split2) = run()
+    assert report2 == report1
+    pd.testing.assert_frame_equal(asg1, asg2)
+    pd.testing.assert_frame_equal(split1, split2)
+    m = pd.read_parquet(out / "metrics")
+    m = m[m["partition_id"] == -1]
+    stages = set(m["stage"])
+    assert {"sig_minhash", "sig_simhash", "winnow_keys", "pairs_union"} <= stages
+    # the first run resumed nothing, the rerun all but the lost stages
+    assert set(m.loc[m["resumed"], "stage"]) == stages - lost
+    recomputed = m.loc[~m["resumed"], "stage"].value_counts().to_dict()
+    assert recomputed == {s: 2 if s in lost else 1 for s in stages}
 
 
 def test_cli_docs_mode_split_and_quality_reps(spark, tmp_path, capsys):

@@ -187,3 +187,80 @@ def test_metrics_lineage_written(pipe_result, spark):
     assert {"pairs_union", "cc_labels", "assignments"} <= stages
     # per-partition lineage rows exist
     assert m.filter("partition_id >= 0").count() > 0
+
+
+def _fixture_df(spark, tmp_path, n: int, seed: int, edit=None):
+    from deduplication_and_compression_spark.fixtures.generator import (
+        generate_images,
+    )
+
+    pdf = generate_images(n, seed=seed)[0]
+    if edit is not None:
+        edit(pdf)
+    p = tmp_path / f"fx_{n}_{seed}_{edit is not None}.parquet"
+    pdf.to_parquet(p, index=False)
+    return spark.read.parquet(str(p))
+
+
+def test_resume_invalidated_by_input_change(spark, cfg, tmp_path):
+    """Checkpoints written from another input are not resumed from —
+    neither another row count nor the same count with other content —
+    while the same input still resumes every stage."""
+    out = tmp_path / "out"
+
+    def run(df):
+        res = run_pipeline(spark, df, out, cfg, tiers=("exact",))
+        resumed = {m["stage"]: m["resumed"] for m in res.metrics
+                   if m["partition_id"] == -1}
+        return res.assignments.count(), resumed
+
+    def caption_edit(pdf):
+        pdf.loc[0, "caption"] = pdf.loc[0, "caption"] + " edited"
+
+    n, resumed = run(_fixture_df(spark, tmp_path, 200, 3))
+    assert n == 200 and not any(resumed.values())
+    n, resumed = run(_fixture_df(spark, tmp_path, 300, 4))
+    assert n == 300 and not any(resumed.values()), resumed
+    n, resumed = run(_fixture_df(spark, tmp_path, 300, 4))
+    assert n == 300 and all(resumed.values()), resumed
+    n, resumed = run(_fixture_df(spark, tmp_path, 300, 4, caption_edit))
+    assert n == 300 and not any(resumed.values()), resumed
+
+
+def test_resume_invalidated_by_tier_change(spark, cfg, tmp_path):
+    """A changed tier set keeps the unchanged tiers' checkpoints but
+    recomputes everything downstream of the pair union."""
+    small = _fixture_df(spark, tmp_path, 150, 5)
+    run_pipeline(spark, small, tmp_path, cfg, tiers=("exact",))
+    res = run_pipeline(spark, small, tmp_path, cfg, tiers=("exact", "simhash"))
+    resumed = {m["stage"]: m["resumed"] for m in res.metrics
+               if m["partition_id"] == -1}
+    assert resumed == {"pairs_exact": True, "pairs_simhash": False,
+                       "pairs_union": False, "cc_labels": False,
+                       "assignments": False, "savings": False}
+
+
+def test_docs_tier_pairs_equals_checkpointed_docs_pipeline(spark, cfg, tmp_path):
+    """The checkpoint-free docs plan and run_pipeline over the DOCS
+    contract run the same tier builders: identical pair unions."""
+    from deduplication_and_compression_spark.fixtures.generator import (
+        generate_zipf_docs,
+    )
+    from deduplication_and_compression_spark.persistence import persist_scope
+    from deduplication_and_compression_spark.plans.docs import docs_tier_pairs
+    from deduplication_and_compression_spark.plans.pipeline import DOCS
+    from deduplication_and_compression_spark.sources.tables import (
+        read_documents,
+    )
+
+    src = tmp_path / "docs.parquet"
+    generate_zipf_docs(120, seed=6)[0].to_parquet(src, index=False)
+    docs = read_documents(spark, str(src), fmt="parquet")
+    res = run_pipeline(spark, docs, tmp_path / "out", cfg, contract=DOCS)
+    with persist_scope():
+        lazy = docs_tier_pairs(docs, cfg, n_docs=120).toPandas()
+    key = ["a", "b", "tier"]
+    ckpt = res.pairs.toPandas()
+    assert len(lazy) > 0
+    assert (lazy.sort_values(key).reset_index(drop=True)
+            .equals(ckpt[key].sort_values(key).reset_index(drop=True)))
