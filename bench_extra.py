@@ -34,7 +34,8 @@ from deduplication_and_compression_spark.session import build_session
 from deduplication_and_compression_spark.persistence import persist_scope
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# cores this process may run on (what `nproc` prints) unless overridden
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
 
 
 def _spark():

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..persistence import register_local_checkpoint, release_local_checkpoint
+from ..session import broadcast_threshold
 
 
 def _symmetric(edges: DataFrame, parts: int) -> DataFrame:
@@ -111,12 +112,27 @@ def connected_components(
     # Size the rounds' shuffles to the DATA via explicit repartitions
     # inside the round plans (_symmetric/_dedup_pairs) — NEVER by
     # mutating session-global spark.sql.shuffle.partitions.
-    n_edges = cur.count()
+    id_dtype = dict(cur.dtypes)["a"]
+    # the same job also sizes the edge set for the local-solve gate:
+    # two 8-byte ids per edge, or for strings their UTF-8 bytes plus a
+    # 4-byte Arrow offset each
+    if id_dtype == "string":
+        n_edges, n_bytes = cur.agg(
+            F.count(F.lit(1)),
+            F.coalesce(F.sum(F.octet_length("a") + F.octet_length("b")), F.lit(0)),
+        ).collect()[0]
+        n_bytes += 8 * n_edges
+    else:
+        n_edges = cur.count()
+        n_bytes = 16 * n_edges
     # SIZE-GATED LOCAL SOLVE (r7): at or below cfg.cc_local_max_edges
-    # the deduped edge set is a few MB — the same regime where Spark
-    # itself would broadcast a join side — and every star round still
+    # edges AND within the session's autoBroadcastJoinThreshold bytes
+    # (-1 turns the local solve off) the deduped edge set is small —
+    # the regime where Spark itself would broadcast a join side; the
+    # byte bound keeps long string ids from blowing up the driver
+    # collect under the row bound — and every star round still
     # costs 3 shuffles + 1 driver action of latency.  Collect ONCE
-    # (Arrow path, reading the blocks the count() above already
+    # (Arrow path, reading the blocks the sizing job above already
     # materialized), run union-find with min-id roots (bit-identical
     # labels: attaching the larger root under the smaller keeps every
     # root the component minimum, exactly the star fixpoint), and
@@ -129,8 +145,8 @@ def connected_components(
     # a != b filter above drops null-endpoint rows.  Above the gate or
     # for any other id type the distributed rounds below run
     # unchanged.
-    id_dtype = dict(cur.dtypes)["a"]
     if (n_edges <= cfg.cc_local_max_edges
+            and n_bytes <= broadcast_threshold(spark)
             and id_dtype in ("tinyint", "smallint", "int", "bigint", "string")):
         import pandas as pd
 

@@ -1,8 +1,10 @@
 """Document-table text operators: the training-data-pipeline ops
 (dedup variants, token counting, quality scoring, language ID,
 fingerprinting, n-gram similarity) expressed as pure DataFrame plans —
-every one of these stays inside whole-stage codegen (no Python UDFs),
-so filters and projections push down to the parquet scan.
+all but one stay inside whole-stage codegen (no Python UDFs), so
+filters and projections push down to the parquet scan.  The exception
+is the all-pairs Jaccard's direct counting kernel, a numpy mapInPandas
+over a broadcast incidence (bigram_jaccard_pairs_allpairs).
 
 Each operator has a matching ANSI-SQL oracle in __spark_entry__.py;
 column names and arithmetic ORDER are kept identical on both sides so
@@ -13,9 +15,12 @@ between engines).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..persistence import scoped_persist
+from ..persistence import scoped_broadcast, scoped_persist
+from ..session import broadcast_threshold
 
 STOPWORDS = ("a", "the", "of", "and", "to", "in", "is")
 
@@ -215,7 +220,9 @@ def bigram_jaccard_pairs_auto(df: DataFrame, threshold_bp: int = 5000) -> DataFr
     LAST_PLAN_PICK = {"plan": pick, "v": v, "d": d, "sumsq": sumsq}
     if pick == "ppjoin":
         return bigram_jaccard_pairs(df, threshold_bp, bg=bg, freq=freq)
-    return bigram_jaccard_pairs_allpairs(df, threshold_bp, bg=bg)
+    out, kernel = _allpairs(df, threshold_bp, bg)
+    LAST_PLAN_PICK.update(kernel)
+    return out
 
 
 def jaccard_plan_stats(
@@ -248,7 +255,9 @@ def jaccard_plan_stats(
 # Observability: the last cost-based decision made by
 # bigram_jaccard_pairs_auto in this process, with the stats that drove
 # it — bench.py records it so each BENCH_r{N}.json shows which plan the
-# auto-pick chose per corpus regime.  Read-only for callers.
+# auto-pick chose per corpus regime.  An allpairs pick also records its
+# counting kernel ("kernel": "direct" | "join") and the incidence bytes
+# that gated it.  Read-only for callers.
 LAST_PLAN_PICK: dict | None = None
 
 
@@ -268,6 +277,12 @@ LAST_PLAN_PICK: dict | None = None
 # On a real cluster this constant only shrinks relative to the data,
 # so at 10^12-row scale the pick degenerates to "ppjoin whenever a
 # rare tail exists" — exactly the published PPJoin guidance.
+# STALE: every allpairs wall above was the join kernel's.  The direct
+# counting kernel (bigram_jaccard_pairs_allpairs) runs the 30k-doc
+# Zipf fixture about 10x faster than the join (BENCH/direct_jaccard.md),
+# so the crossover has moved up for any corpus whose incidence fits
+# the broadcast threshold; it needs a re-pin
+# (scripts/pin_jaccard_plans.py) before the number is trusted.
 ALLPAIRS_WORK_FLOOR = 100_000_000
 
 
@@ -401,38 +416,67 @@ def bigram_jaccard_pairs(df: DataFrame, threshold_bp: int = 5000,
 
 def bigram_jaccard_pairs_allpairs(df: DataFrame, threshold_bp: int = 5000,
                                   bg: DataFrame | None = None) -> DataFrame:
-    """Naive exact variant: self-join on EVERY bigram.  Faster than the
-    prefix-filtered join only on degenerate tiny-vocabulary corpora
-    (like the driver fixture: 931 distinct bigrams, so there are no
-    rare tokens for the prefix filter to exploit); on realistic
-    Zipfian text the prefix-filtered version wins by orders of
-    magnitude.  Both produce identical output — use
+    """Naive exact variant: every shared bigram counts toward the
+    intersection.  Faster than the prefix-filtered join only on
+    degenerate tiny-vocabulary corpora (like the driver fixture: 931
+    distinct bigrams, so there are no rare tokens for the prefix
+    filter to exploit).  Both produce identical output — use
     bigram_jaccard_pairs_auto for the cost-based pick.
 
-    The (a, b) intersection count groups by ONE packed long
-    (a<<32 | b) instead of two bigint columns whenever doc ids fit in
-    [0, 2^31): the partial/final aggregate maps and their spill (the
-    dominant cost of this plan — ~27 GB spilled on the 30k-doc Zipf
-    fixture) carry a 16-byte UnsafeRow instead of 24, and key
-    hash/compare touch one word instead of two.  Injective by
-    construction, so the counts — and the unpacked (a, b) values —
-    are bit-identical; ids outside that range fall back to the
-    two-column key (one cheap min/max probe on the docs table decides,
-    so the pack is safe at any corpus scale)."""
+    Two kernels, identical output.  One aggregate over the persisted
+    ``bg`` (min/max doc_id, rows, incidence bytes) picks between them:
+
+    - DIRECT (integral doc_id, incidence bytes within the session's
+      spark.sql.autoBroadcastJoinThreshold): the (doc_id, bigram)
+      incidence is collected once, factorized into posting lists and
+      broadcast, and one mapInPandas counts each probe doc's pairs with
+      np.bincount on dense doc indices (_count_block_pairs).  No join
+      rows exist at all: shuffling and hash-aggregating them — one row
+      per shared bigram, 172M on the 30k-doc Zipf fixture, with
+      ~24 GB spilled — was the join kernel's dominant cost, and doc
+      indices from factorizing make the keys dense small integers,
+      where direct addressing beats any hash table.
+    - JOIN (any other id type, a larger incidence, or the threshold at
+      -1): self-join on the bigram, hash-aggregate the (a, b) count.
+      The aggregate groups by ONE packed long (a<<32 | b) instead of
+      two bigint columns whenever doc ids fit in [0, 2^31): its maps
+      carry a 16-byte UnsafeRow instead of 24, and key hash/compare
+      touch one word instead of two; other ids use the two-column key.
+      Both keys are injective, so the counts are bit-identical."""
+    return _allpairs(df, threshold_bp, bg)[0]
+
+
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _allpairs(df: DataFrame, threshold_bp: int, bg: DataFrame | None
+              ) -> tuple[DataFrame, dict]:
+    """bigram_jaccard_pairs_allpairs plus which kernel ran:
+    {"kernel": "direct" | "join", "incidence_bytes": int | None}."""
     if bg is None:
         bg = scoped_persist(word_bigrams(df))
+    id_type = dict(bg.dtypes)["doc_id"]
+    lo = hi = nbytes = None
+    if id_type in _INTEGRAL:
+        ids = F.col("doc_id")
+        # null-id rows never pair (the join's a < b drops them);
+        # bytes: an 8-byte id and a 4-byte Arrow offset per row plus the
+        # bigram's UTF-8 bytes — the collected incidence's size
+        lo, hi, nbytes = bg.where(ids.isNotNull()).agg(
+            F.min(ids), F.max(ids),
+            F.count(F.lit(1)) * F.lit(12)
+            + F.coalesce(F.sum(F.octet_length("bigram")), F.lit(0)),
+        ).first()
+        if nbytes <= broadcast_threshold(bg.sparkSession):
+            return (_direct_allpairs(bg, id_type, threshold_bp),
+                    {"kernel": "direct", "incidence_bytes": nbytes})
     sizes = bg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     pairs = (
         bg.alias("x")
         .join(bg.alias("y"), "bigram")
         .where(F.col("x.doc_id") < F.col("y.doc_id"))
     )
-    id_type = dict(df.dtypes).get("doc_id")
-    bounds = None
-    if id_type in ("tinyint", "smallint", "int", "bigint"):
-        bounds = df.agg(F.min("doc_id"), F.max("doc_id")).first()
-    if (bounds is not None and bounds[0] is not None
-            and bounds[0] >= 0 and bounds[1] < (1 << 31)):
+    if lo is not None and lo >= 0 and hi < (1 << 31):
         inter = (
             pairs.select(
                 F.shiftleft(F.col("x.doc_id").cast("long"), 32)
@@ -452,7 +496,7 @@ def bigram_jaccard_pairs_allpairs(df: DataFrame, threshold_bp: int = 5000,
             pairs.groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
             .agg(F.count(F.lit(1)).alias("i"))
         )
-    return (
+    out = (
         inter.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
         .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
         .select(
@@ -465,6 +509,164 @@ def bigram_jaccard_pairs_allpairs(df: DataFrame, threshold_bp: int = 5000,
         )
         .where(F.col("jaccard_bp") >= threshold_bp)
     )
+    return out, {"kernel": "join", "incidence_bytes": nbytes}
+
+
+# Direct-kernel sizing.  A dense block of probe docs counts into
+# block × D counters, kept within _COUNTER_BUDGET; when that leaves
+# fewer than _MIN_DENSE_BLOCK docs per block (huge D) a block's keys are
+# counted by sorting instead.  One numpy pass gathers about
+# _GATHER_CAP postings, so a task's memory does not grow with D.  A
+# task gets about _TASK_VOLUME gathered postings: a small corpus runs
+# as one task, since every Python task pays a fixed cost.
+_COUNTER_BUDGET = 1 << 22
+_MIN_DENSE_BLOCK = 32
+_GATHER_CAP = 1 << 22
+_TASK_VOLUME = 1 << 24
+
+
+def _direct_allpairs(bg: DataFrame, id_type: str, threshold_bp: int) -> DataFrame:
+    """The direct kernel's driver half: collect the incidence over
+    Arrow, factorize it, broadcast the arrays, and map the counting
+    over probe-doc ranges of equal gathered volume."""
+    spark = bg.sparkSession
+    pdf = bg.where(F.col("doc_id").isNotNull()).select("doc_id", "bigram").toPandas()
+    inc, vol = _factorize_incidence(pdf["doc_id"].to_numpy(), pdf["bigram"])
+    total = int(vol[-1])
+    n_tasks = max(1, min(spark.sparkContext.defaultParallelism,
+                         -(-total // _TASK_VOLUME)))
+    cuts = np.searchsorted(vol, np.arange(1, n_tasks) * (total / n_tasks))
+    bounds = np.concatenate(([0], cuts, [len(vol) - 1])).tolist()
+    # the join raises on a zero Jaccard denominator under ANSI (only
+    # duplicate doc_id rows can make one); the kernel does the same
+    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
+    bc = scoped_broadcast(spark, inc)
+
+    def run(batches):
+        inc = bc.value
+        for batch in batches:
+            for t in batch["id"].tolist():
+                yield from _count_block_pairs(inc, bounds[t], bounds[t + 1],
+                                              threshold_bp, ansi)
+
+    return spark.range(n_tasks, numPartitions=n_tasks).mapInPandas(
+        run, f"a {id_type}, b {id_type}, jaccard_bp bigint")
+
+
+def _factorize_incidence(doc_id: np.ndarray, bigram: pd.Series):
+    """(doc_id, bigram) incidence rows → the direct kernel's arrays
+    (ids, sizes, doc_ptr, start, length, post_docs) and the gathered
+    volume before each doc (length D + 1).
+
+    Docs become indices 0..D-1 in id order, so a < b on ids is a < b on
+    indices (negative, sparse or ≥ 2^31 ids need no special case).
+    Postings list each bigram's doc indices ascending, duplicates kept
+    (duplicate doc_id rows count as often as the join counts them).
+    Entry k is the k-th (doc, bigram) row in doc order; doc d owns
+    entries doc_ptr[d]..doc_ptr[d+1]-1, and entry k gathers
+    post_docs[start[k]:start[k] + length[k]] — the bigram's postings
+    past the doc, so b ≤ a is never gathered."""
+    ids, doc = np.unique(doc_id, return_inverse=True)
+    code = pd.factorize(bigram)[0]
+    D = len(ids)
+    # sizes count every row of a doc (the join's groupBy); a null
+    # bigram joins nothing, so it stays out of the postings
+    sizes = np.bincount(doc, minlength=D)
+    doc, code = doc[code >= 0], code[code >= 0]
+    o = np.lexsort((doc, code))
+    post_docs = doc[o].astype(np.int32)
+    post_key = code[o].astype(np.int64) * D + post_docs  # sorted
+    post_end = np.cumsum(np.bincount(code))
+    o = np.argsort(doc, kind="stable")
+    a, g = doc[o], code[o]
+    start = np.searchsorted(post_key, g.astype(np.int64) * D + a, side="right")
+    length = (post_end[g] - start).astype(np.int32)
+    doc_ptr = np.concatenate(([0], np.cumsum(np.bincount(a, minlength=D))))
+    vol = np.concatenate(([0], np.cumsum(length)))[doc_ptr]
+    return (ids, sizes, doc_ptr, start, length, post_docs), vol
+
+
+def _spans(cum, cap: int, max_items: int):
+    """Consecutive [s, e) spans over the len(cum) - 1 items whose
+    running total is ``cum``: each holds at most ``max_items`` items
+    and at most ``cap`` total, or a single item that alone exceeds it."""
+    n = len(cum) - 1
+    s = 0
+    while s < n:
+        e = int(np.searchsorted(cum, cum[s] + cap, side="right")) - 1
+        e = min(max(e, s + 1), s + max_items, n)
+        yield s, e
+        s = e
+
+
+def _count_block_pairs(inc, lo: int, hi: int, threshold_bp: int,
+                       ansi: bool):
+    """The direct kernel's task half: (a, b, jaccard_bp) frames for the
+    probe docs with indices lo..hi-1 against every later doc, at or
+    above the threshold.  Per block of probe docs, the postings past
+    each doc are gathered as keys a_local·D + b and counted — with
+    np.bincount into block × D counters, or by sorting when D is too
+    large for a useful dense block.  The count i of a pair is the
+    number of (shared bigram occurrence) matches, exactly the join's
+    row count, and jaccard_bp is the join's double arithmetic."""
+    ids, sizes, doc_ptr, start, length, post_docs = inc
+    D = len(ids)
+    block = _COUNTER_BUDGET // max(D, 1)
+    dense = block >= _MIN_DENSE_BLOCK
+    e0 = int(doc_ptr[lo])
+    cum = np.concatenate(([0], np.cumsum(length[e0:doc_ptr[hi]])))
+    ptr = doc_ptr[lo:hi + 1] - e0
+    owner = np.repeat(np.arange(hi - lo), np.diff(ptr))
+    for s, e in _spans(cum[ptr], _GATHER_CAP, block if dense else hi - lo):
+        p, q = int(ptr[s]), int(ptr[e])
+        acc, parts = None, []
+        for cs, ce in _spans(cum[p:q + 1], _GATHER_CAP, q - p):
+            ln = length[e0 + p + cs:e0 + p + ce]
+            n = int(ln.sum())
+            if n == 0:
+                continue
+            skip = np.cumsum(ln) - ln  # gathered before each entry
+            src = np.repeat(start[e0 + p + cs:e0 + p + ce] - skip, ln) + np.arange(n)
+            key = np.repeat(owner[p + cs:p + ce] - s, ln) * D + post_docs[src]
+            if dense:
+                c = np.bincount(key, minlength=(e - s) * D)
+                acc = c if acc is None else acc + c
+            else:
+                parts.append(np.unique(key, return_counts=True))
+        if dense:
+            if acc is None:
+                continue
+            # bp ≥ T needs i·(10⁴ + T) ≥ T·(na + nb) ≥ T·na (den > 0),
+            # so a row's counters below ceil(T·na / (10⁴ + T)) cannot
+            # pass; the scan then touches few counters, not all of them
+            t = max(threshold_bp, 0)
+            lb = np.maximum(-(-t * sizes[lo + s:lo + e] // (10000 + t)), 1)
+            key = np.flatnonzero(acc.reshape(e - s, D) >= lb[:, None])
+            i = acc[key]
+        elif not parts:
+            continue
+        elif len(parts) == 1:
+            key, i = parts[0]
+        else:
+            # one doc's gather split over several passes: merge by key
+            key = np.concatenate([k for k, _ in parts])
+            i = np.concatenate([c for _, c in parts])
+            o = np.argsort(key, kind="stable")
+            key, i = key[o], i[o]
+            first = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+            key, i = key[first], np.add.reduceat(i, first)
+        a = lo + s + key // D
+        b = key % D
+        den = sizes[a] + sizes[b] - i
+        with np.errstate(divide="ignore", invalid="ignore"):
+            bp = np.floor(i.astype(np.float64) / den.astype(np.float64) * 10000.0)
+        if ansi and not den.all():
+            raise ZeroDivisionError("[DIVIDE_BY_ZERO] Jaccard denominator "
+                                    "na + nb - i is 0")
+        keep = (den != 0) & (bp >= threshold_bp)
+        if keep.any():
+            yield pd.DataFrame({"a": ids[a[keep]], "b": ids[b[keep]],
+                                "jaccard_bp": bp[keep].astype(np.int64)})
 
 
 def lgram_substring_pairs(df: DataFrame, L: int = 24) -> DataFrame:

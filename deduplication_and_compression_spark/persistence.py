@@ -99,6 +99,19 @@ def register_local_checkpoint(df: DataFrame) -> DataFrame:
     return df
 
 
+def scoped_broadcast(spark, value):
+    """sparkContext.broadcast() that this thread's innermost
+    persist_scope releases with its frames.  ``unpersist`` drops only
+    the executor copies (the driver keeps the value), so a consumer
+    recomputed after the scope re-fetches it.  Outside any scope the
+    broadcast keeps its session lifetime, like ``scoped_persist``."""
+    bc = spark.sparkContext.broadcast(value)
+    stack = _scopes()
+    if stack:
+        stack[-1].append(bc)
+    return bc
+
+
 @contextmanager
 def persist_scope():
     """Release every scoped_persist() made inside the block (in this

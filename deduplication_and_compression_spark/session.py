@@ -114,6 +114,15 @@ def build_session(
     return spark
 
 
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's spark.sql.autoBroadcastJoinThreshold in bytes, as
+    Spark itself parses it ("10m" and plain byte counts alike); -1
+    means broadcasting is off.  Operators that collect a side to the
+    driver gate on it, so one setting bounds every such collect."""
+    return int(spark._jsparkSession.sessionState().conf()
+               .autoBroadcastJoinThreshold())
+
+
 def _warmup_async(spark: SparkSession) -> None:
     """Warm the session's execution machinery on a background thread:
     one ~micro job through each cold path — codegen+shuffle, the

@@ -112,3 +112,30 @@ def test_cc_matches_union_find(spark, case):
     expect = _oracle_labels(edges)
     assert got == expect
     assert dist == expect
+
+
+def test_cc_local_solve_byte_bound(spark):
+    """The local solve is bounded by bytes as well as edges: string ids
+    long enough to pass the session's autoBroadcastJoinThreshold take
+    the distributed star rounds, with the same labels."""
+    pad = "n" * 200
+    edges = [(f"{pad}{i:03d}", f"{pad}{i + 1:03d}") for i in range(30)] + [
+        (f"{pad}{k}{i:03d}", f"{pad}{k}hub") for k in "xyz" for i in range(4)
+    ]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
+
+    def run():
+        out = connected_components(df)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return {r["id"]: r["cluster_id"] for r in out.collect()}, plan
+
+    local, local_plan = run()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4k")  # the edge set is ~16 KB
+    try:
+        dist, dist_plan = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert "Aggregate" not in local_plan and "Aggregate" in dist_plan
+    assert local == dist == _oracle_labels(edges)

@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import io
+import math
+from contextlib import contextmanager, redirect_stdout
+
 import numpy as np
-from hypothesis import given, settings, strategies as st
+import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from deduplication_and_compression_spark.functions import hashing as H
@@ -161,14 +166,182 @@ def test_allpairs_packed_key_fallback_parity(spark):
 
     docs_pdf, _ = generate_zipf_docs(250, seed=13)
     docs = spark.createDataFrame(docs_pdf)
-    packed_out = bigram_jaccard_pairs_allpairs(docs)
-    assert dict(packed_out.dtypes)["a"] == dict(docs.dtypes)["doc_id"]
-    packed = {(r.a, r.b, r.jaccard_bp) for r in packed_out.collect()}
     off = 1 << 31
     shifted = docs.withColumn("doc_id", (F.col("doc_id") + off).cast("long"))
-    fallback = {(r.a - off, r.b - off, r.jaccard_bp)
-                for r in bigram_jaccard_pairs_allpairs(shifted).collect()}
+    # both keys belong to the join kernel: keep the direct one out
+    with _join_kernel(spark):
+        packed_out = bigram_jaccard_pairs_allpairs(docs)
+        assert dict(packed_out.dtypes)["a"] == dict(docs.dtypes)["doc_id"]
+        assert "MapInPandas" not in _plan(packed_out)
+        packed = {(r.a, r.b, r.jaccard_bp) for r in packed_out.collect()}
+        fallback = {(r.a - off, r.b - off, r.jaccard_bp)
+                    for r in bigram_jaccard_pairs_allpairs(shifted).collect()}
     assert packed == fallback and len(packed) > 0
+
+
+@contextmanager
+def _join_kernel(spark):
+    """Turn broadcasting off, which sends the all-pairs Jaccard to its
+    join kernel; the prior threshold is restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def _edge_docs(spark, id_type: str):
+    """Null and duplicate doc_id rows, null/empty/one-word texts,
+    negative ids and (bigint) ids past 2^31; no pair's Jaccard
+    denominator is 0."""
+    big = 1 << 33 if id_type == "bigint" else 1 << 30
+    rows = [
+        (None, "a b c"), (1, "a b c"), (1, "a b c"), (2, "a b c d"),
+        (3, None), (4, ""), (5, "x"), (-7, "a b c"), (big, "a b c d"),
+        (6, "  a  b  "), (7, "b c"), (-(big + 1), "c d e"), (9, "c d e f"),
+    ]
+    return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+
+@pytest.mark.parametrize("corpus", ["zipf", "edge_bigint", "edge_int", "empty"])
+@pytest.mark.parametrize("threshold_bp", [1, 5000])
+def test_allpairs_direct_kernel_matches_join(spark, corpus, threshold_bp):
+    """The direct-addressed counting kernel and the join + hash
+    aggregate kernel give the same rows, values and column types."""
+    from deduplication_and_compression_spark.fixtures.generator import (
+        generate_zipf_docs,
+    )
+    from deduplication_and_compression_spark.operators.textops import (
+        bigram_jaccard_pairs_allpairs,
+    )
+
+    if corpus == "zipf":
+        docs = spark.createDataFrame(generate_zipf_docs(250, seed=13)[0])
+    elif corpus == "empty":
+        docs = spark.createDataFrame([], "doc_id int, text string")
+    else:
+        docs = _edge_docs(spark, corpus.split("_")[1])
+
+    def run():
+        out = bigram_jaccard_pairs_allpairs(docs, threshold_bp)
+        rows = [tuple(r) for r in out.collect()]
+        assert len(rows) == len(set(rows))
+        return set(rows), out.dtypes, _plan(out)
+
+    direct, direct_types, direct_plan = run()
+    with _join_kernel(spark):
+        joined, join_types, join_plan = run()
+    assert "MapInPandas" in direct_plan and "MapInPandas" not in join_plan
+    assert direct == joined
+    assert direct_types == join_types
+    assert (len(direct) > 0) == (corpus != "empty")
+
+
+def test_allpairs_direct_kernel_plan(spark):
+    """Integral ids take the direct kernel: one MapInPandas and no join
+    on the bigram.  String ids take the join."""
+    from deduplication_and_compression_spark.operators.textops import (
+        bigram_jaccard_pairs_allpairs,
+    )
+
+    docs = _edge_docs(spark, "bigint")
+    plan = _plan(bigram_jaccard_pairs_allpairs(docs))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan and "bigram" not in plan, plan
+    as_str = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
+    plan = _plan(bigram_jaccard_pairs_allpairs(as_str))
+    assert "MapInPandas" not in plan and "Join" in plan, plan
+
+
+def test_allpairs_zero_denominator_raises_like_join(spark):
+    """Duplicate doc_id rows can make na + nb - i zero; under ANSI the
+    join raises DIVIDE_BY_ZERO, and the direct kernel raises too."""
+    from deduplication_and_compression_spark.operators.textops import (
+        bigram_jaccard_pairs_allpairs,
+    )
+
+    docs = spark.createDataFrame([(1, "a b"), (1, "a b"), (2, "a b"), (2, "a b")],
+                                 "doc_id bigint, text string")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        bigram_jaccard_pairs_allpairs(docs, 0).collect()
+    with _join_kernel(spark), pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        bigram_jaccard_pairs_allpairs(docs, 0).collect()
+
+
+def _naive_pairs(doc_ids, bigrams, threshold_bp):
+    """Reference for the direct kernel: the join's counts, pair by pair."""
+    from collections import Counter
+
+    sizes = Counter(doc_ids)
+    bags: dict = {}
+    for d, g in zip(doc_ids, bigrams):
+        if g is not None:
+            bags.setdefault(d, Counter())[g] += 1
+    out = set()
+    docs = sorted(bags)
+    for x, a in enumerate(docs):
+        for b in docs[x + 1:]:
+            i = sum(c * bags[b][g] for g, c in bags[a].items())
+            den = sizes[a] + sizes[b] - i
+            if i == 0 or den == 0:
+                continue
+            bp = math.floor(float(i) / float(den) * 10000.0)
+            if bp >= threshold_bp:
+                out.add((a, b, bp))
+    return out
+
+
+@given(
+    st.lists(st.tuples(st.integers(-3, 12),
+                       st.one_of(st.none(), st.sampled_from("pqrst"))),
+             max_size=100),
+    st.integers(-50, 10050),
+    st.integers(1, 4),
+    # (_COUNTER_BUDGET, _MIN_DENSE_BLOCK, _GATHER_CAP): one dense
+    # block; dense blocks of a few docs gathered in small passes; sort
+    st.sampled_from([(1 << 22, 32, 1 << 22), (64, 1, 7), (4, 32, 5)]),
+)
+@example([(d, g) for d in range(10) for g in "pqrs"] + [(3, "p"), (4, None)],
+         0, 2, (64, 1, 7))
+@example([(d, g) for d in range(10) for g in "pqrs"] + [(3, "p"), (4, None)],
+         0, 2, (4, 32, 5))
+@settings(max_examples=80, deadline=None)
+def test_count_block_pairs_matches_naive(rows, threshold_bp, n_tasks, sizing):
+    """The kernel's numpy half against a pair-by-pair count, over any
+    task split, with the sizing constants shrunk so dense blocks of a
+    few docs, sort-counted blocks and a doc's gather split over several
+    passes all run."""
+    import pandas as pd
+
+    from deduplication_and_compression_spark.operators import textops
+
+    names = ("_COUNTER_BUDGET", "_MIN_DENSE_BLOCK", "_GATHER_CAP")
+    old = [getattr(textops, n) for n in names]
+    for n, v in zip(names, sizing):
+        setattr(textops, n, v)
+    try:
+        doc_ids = np.array([d for d, _ in rows], dtype=np.int64)
+        bigrams = pd.Series([g for _, g in rows], dtype=object)
+        inc, vol = textops._factorize_incidence(doc_ids, bigrams)
+        cuts = np.linspace(0, len(vol) - 1, n_tasks + 1).astype(int).tolist()
+        got = []
+        for lo, hi in zip(cuts, cuts[1:]):
+            for f in textops._count_block_pairs(inc, lo, hi, threshold_bp, False):
+                got += list(f.itertuples(index=False, name=None))
+    finally:
+        for n, v in zip(names, old):
+            setattr(textops, n, v)
+    assert len(got) == len(set(got))
+    assert set(got) == _naive_pairs(doc_ids.tolist(), list(bigrams), threshold_bp)
 
 
 def test_jaccard_plan_pick_per_regime():
