@@ -31,7 +31,9 @@ sys.path.insert(0, str(REPO))
 
 from deduplication_and_compression_spark.config import DEFAULT_CONFIG as CFG
 from deduplication_and_compression_spark.session import build_session
-from deduplication_and_compression_spark.persistence import persist_scope
+from deduplication_and_compression_spark.persistence import (
+    persist_scope, scoped_persist,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # cores this process may run on (what `nproc` prints) unless overridden
@@ -45,82 +47,31 @@ def _spark():
     return spark
 
 
-def _raw_builders(spark):
-    """UN-memoized plan builders mirroring __spark_entry__._q_* — raw
-    operator plans (the memo layer would show an InMemoryRelation)."""
+def _builders(spark, names: list[str]) -> dict:
+    """{name: () -> DataFrame} for the contract queries (all of
+    __spark_entry__.queries()) plus the two Zipf-corpus Jaccard plans,
+    restricted to ``names`` when given.
+
+    The contract's result memo is bypassed in this process: every call
+    rebuilds the operator plan, so the walls time the computation, not
+    a cached result.  Each memoized step still persists its result in
+    the caller's persist_scope, so a chain such as pairs -> CC -> split
+    reads its intermediates once per call."""
     import __spark_entry__ as E
-    from deduplication_and_compression_spark.operators import textops
-    from deduplication_and_compression_spark.operators.minhash_lsh import (
-        minhash_pairs,
+    from deduplication_and_compression_spark.operators.textops import (
+        bigram_jaccard_pairs, bigram_jaccard_pairs_allpairs,
     )
-    from deduplication_and_compression_spark.operators.simhash import (
-        phash_hamming_pairs, simhash_from_text,
-    )
-    from deduplication_and_compression_spark.operators.similarity import (
-        cosine_neighbor_stats, ivf_pq_topk, ivf_topk, srp_bucket_topk,
-    )
-    from deduplication_and_compression_spark.operators.components import (
-        connected_components,
-    )
-    from deduplication_and_compression_spark.persistence import scoped_persist
-    from pyspark.sql import functions as F
 
-    docs = lambda: E._docs(spark, SF_DIR)
-    embs = lambda: E._embs(spark, SF_DIR)
-
-    def train_val_raw():
-        # RAW twin of _q_train_val_split: the contract row routes
-        # through _memo_query (by design — bench.py times that), but
-        # this harness must time/plan the actual compute, so the
-        # pair->CC->split chain is rebuilt without the memo layer
-        from deduplication_and_compression_spark.operators.assign import (
-            assignments_from_labels, leakage_safe_split,
-        )
-
-        d = docs()
-        pairs = scoped_persist(
-            textops.bigram_jaccard_pairs_auto(d, threshold_bp=5000))
-        labels = connected_components(pairs.select("a", "b"), CFG)
-        asg = assignments_from_labels(d, labels, id_col="doc_id")
-        return leakage_safe_split(asg, frac_train=0.9, id_col="doc_id")
-
-    def simhash_pairs():
-        sims = scoped_persist(simhash_from_text(docs()))
-        return phash_hamming_pairs(sims, CFG, id_col="id",
-                                   hash_col="simhash", scheme="chunk4"
-                                   ).select("a", "b", "hamming")
-
-    return {
-        "exact_dedup_docs": lambda: textops.exact_dedup_docs(docs()),
-        "token_heavy_hitters_docs":
-            lambda: textops.token_heavy_hitters(docs(), k=50),
-        "train_val_split_docs": train_val_raw,
-        "bigram_jaccard_pairs":
-            lambda: textops.bigram_jaccard_pairs_auto(docs(),
-                                                      threshold_bp=5000),
-        "bigram_jaccard_ppjoin":
-            lambda: textops.bigram_jaccard_pairs(docs(), threshold_bp=5000),
-        "cc_bigram_clusters": lambda: connected_components(
-            scoped_persist(textops.bigram_jaccard_pairs_auto(
-                docs(), threshold_bp=5000)).select("a", "b"), CFG),
-        "cosine_neighbor_stats":
-            lambda: cosine_neighbor_stats(embs(), n_queries=20, threshold=0.3),
-        "minhash_pairs_docs": lambda: minhash_pairs(
-            docs(), CFG, id_col="doc_id", text_col="text").select("a", "b"),
-        "simhash_hamming_pairs_docs": simhash_pairs,
-        "srp_topk_embeddings": lambda: srp_bucket_topk(
-            embs(), n_bits=E._SRP_BITS, k=E._SRP_K, dim=E._EMB_DIM,
-            n_tables=E._SRP_TABLES, probe_radius=0,
-        ).select("query_id", "neighbor_id", "rank"),
-        "ivf_topk_embeddings": lambda: ivf_topk(
-            embs(), n_cells=E._IVF_CELLS, k=E._SRP_K, dim=E._EMB_DIM,
-            n_probes=E._IVF_PROBES).select("query_id", "neighbor_id", "rank"),
-        "ivf_pq_topk_embeddings": lambda: ivf_pq_topk(
-            embs(), n_cells=E._IVF_CELLS, k=E._SRP_K, m_sub=E._PQ_M,
-            k_sub=E._PQ_KSUB, pq_seed=E._PQ_SEED, dim=E._EMB_DIM,
-            n_probes=E._IVF_PROBES, refine=E._PQ_REFINE,
-        ).select("query_id", "neighbor_id", "rank"),
-    }
+    E._memo_query = lambda s, sf, name, build: scoped_persist(build())
+    builders = {name: (lambda q=q: q(spark, SF_DIR))
+                for name, q in E.queries().items()}
+    if not names or any(n.startswith("zipf") for n in names):
+        zd = _zipf_docs(spark)
+        builders["zipf_bigram_ppjoin"] = (
+            lambda: bigram_jaccard_pairs(zd, threshold_bp=5000))
+        builders["zipf_bigram_allpairs"] = (
+            lambda: bigram_jaccard_pairs_allpairs(zd, threshold_bp=5000))
+    return {n: b for n, b in builders.items() if not names or n in names}
 
 
 def _zipf_docs(spark):
@@ -143,20 +94,7 @@ def cmd_plans(outdir: str, names: list[str]) -> None:
     spark = _spark()
     out = Path(outdir)
     out.mkdir(parents=True, exist_ok=True)
-    builders = _raw_builders(spark)
-    from deduplication_and_compression_spark.operators.textops import (
-        bigram_jaccard_pairs, bigram_jaccard_pairs_allpairs,
-    )
-    zd = None
-    if not names or any(n.startswith("zipf") for n in names):
-        zd = _zipf_docs(spark)
-        builders["zipf_bigram_ppjoin"] = (
-            lambda: bigram_jaccard_pairs(zd, threshold_bp=5000))
-        builders["zipf_bigram_allpairs"] = (
-            lambda: bigram_jaccard_pairs_allpairs(zd, threshold_bp=5000))
-    for name, build in builders.items():
-        if names and name not in names:
-            continue
+    for name, build in _builders(spark, names).items():
         with persist_scope():
             df = build()
             buf = StringIO()
@@ -169,20 +107,9 @@ def cmd_plans(outdir: str, names: list[str]) -> None:
 
 def cmd_time(names: list[str], repeats: int = 3) -> None:
     spark = _spark()
-    builders = _raw_builders(spark)
-    from deduplication_and_compression_spark.operators.textops import (
-        bigram_jaccard_pairs, bigram_jaccard_pairs_allpairs,
-    )
-    if not names or any(n.startswith("zipf") for n in names):
-        zd = _zipf_docs(spark)
-        builders["zipf_bigram_ppjoin"] = (
-            lambda: bigram_jaccard_pairs(zd, threshold_bp=5000))
-        builders["zipf_bigram_allpairs"] = (
-            lambda: bigram_jaccard_pairs_allpairs(zd, threshold_bp=5000))
+    builders = _builders(spark, names)
     walls: dict[str, list[float]] = {}
     for name, build in builders.items():
-        if names and name not in names:
-            continue
         spark.sparkContext.setJobDescription(f"extra:{name}")
         ws = []
         for _ in range(repeats):

@@ -51,7 +51,7 @@ def calibrate_host(workers_list=(1, 2, 8, 16, 32)) -> dict[int, float]:
         with mp.Pool(w) as p:
             # ~2.5s/worker: with the old 3M-iteration unit (~0.25s) Pool
             # fork/teardown dominated and the ceiling read ~0.57 on an
-            # IDLE box (r6 probe: scripts/probe_host_scaling.py) — the
+            # IDLE box (BENCH/BASELINE.md, round-6 host decomposition) — the
             # burn must dwarf process startup for the ratio to mean CPU
             p.map(_burn, [30_000_000] * w)
         return _t.perf_counter() - t0

@@ -1,21 +1,26 @@
 #!/usr/bin/env python
 """Per-stage pipeline throughput at a given parallelism.
 
-Usage: python bench_stage.py <cores> [replicate]
+Usage: python bench_stage.py <cores> [replicate] [all|sig]
 
-Times EVERY pipeline stage separately on the cached 100k-caption image
-fixture (optionally replicated) so bench_scaling.py can attribute
-scaling efficiency stage by stage — shuffle-bound and compute-bound
-stages behave very differently on this sandbox's saturated memory bus,
-and a single pipeline-wall number hides that (VERDICT r1 asked for
-per-stage walls at both parallelism levels).
+``all`` (default) times EVERY pipeline stage separately on the cached
+100k-caption image fixture (optionally replicated) so bench_scaling.py
+can attribute scaling efficiency stage by stage — shuffle-bound and
+compute-bound stages behave very differently on a saturated memory
+bus, and a single pipeline-wall number hides that (VERDICT r1 asked
+for per-stage walls at both parallelism levels).  It runs the
+pipeline's own stages (plans/pipeline.py: tier_frames, then pair
+union, connected components and assignments) through its
+_Checkpointer, tiers in sequence, so each stage's input is a written
+checkpoint table and a stage wall measures that stage only.  The
+MinHash tier's sub-stages (banding, pairgen, estimate, verify) are
+split out by ``perfbench/run.py --trace 1``.
 
-Each stage's input is materialized to a parquet(zstd) checkpoint table
-before its timer starts — exactly how the real pipeline's
-_Checkpointer hands stages to each other — so a stage wall measures
-that stage only.  Prints one JSON line: {"cores", "rows", "stages":
-{name: wall_sec}, "rows_per_sec": signature+banding throughput (the
-headline number)}.
+``sig`` times signature + banding only, the headline compute stage.
+
+Prints one JSON line: {"cores", "rows", "stages": {name: wall_sec},
+"total_sec"}; ``sig`` adds "wall_sec" and "rows_per_sec" (signature +
+banding throughput).
 """
 
 from __future__ import annotations
@@ -36,18 +41,15 @@ from deduplication_and_compression_spark.fixtures.generator import write_fixture
 from deduplication_and_compression_spark.operators.components import (
     connected_components,
 )
-from deduplication_and_compression_spark.operators.exact import exact_pairs
 from deduplication_and_compression_spark.operators.minhash_lsh import (
-    band_keys, candidate_pairs_from_buckets, estimate_filter,
-    minhash_signatures, verify_jaccard,
+    band_keys, minhash_signatures,
 )
 from deduplication_and_compression_spark.operators.pairs import union_pairs
-from deduplication_and_compression_spark.operators.simhash import (
-    phash_hamming_pairs,
-)
-from deduplication_and_compression_spark.operators.substring import substring_pairs
 from deduplication_and_compression_spark.operators.assign import (
     assignments_from_labels,
+)
+from deduplication_and_compression_spark.plans.pipeline import (
+    ALL_TIERS, IMAGES, _Checkpointer, tier_frames,
 )
 from deduplication_and_compression_spark.session import build_session
 
@@ -106,55 +108,20 @@ def main() -> None:
         spark.stop()
         return
 
-    # --- MinHash tier, stage by stage (inputs pre-materialized) ---
-    sigs = timed("signature", lambda: mat(minhash_signatures(df, CFG), "sigs"))
-    bands = timed("banding", lambda: mat(band_keys(sigs, CFG), "bands"))
-    cands = timed(
-        "pairgen",
-        lambda: mat(candidate_pairs_from_buckets(bands, CFG, val_col="_vhash"), "cands"),
-    )
-    est = timed(
-        "estimate_filter", lambda: mat(estimate_filter(cands, sigs, CFG), "est")
-    )
-    mh_pairs = timed(
-        "verify_jaccard",
-        lambda: mat(verify_jaccard(est, df, CFG).select("a", "b"), "mh_pairs"),
-    )
-
-    # --- other tiers end-to-end ---
-    ex_pairs = timed("exact_tier", lambda: mat(exact_pairs(df), "ex_pairs"))
-    sh_pairs = timed(
-        "simhash_tier",
-        lambda: mat(phash_hamming_pairs(df, CFG).select("a", "b"), "sh_pairs"),
-    )
-    ss_pairs = timed(
-        "substring_tier",
-        lambda: mat(substring_pairs(df, CFG).select("a", "b"), "ss_pairs"),
-    )
-
-    # --- graph + sink ---
-    pairs = timed(
-        "pairs_union",
-        lambda: mat(union_pairs(
-            exact=ex_pairs, minhash=mh_pairs, simhash=sh_pairs, substring=ss_pairs
-        ), "pairs"),
-    )
-    labels = timed(
-        "connected_components", lambda: mat(connected_components(pairs, CFG), "labels")
-    )
-    timed(
-        "assign_sink",
-        lambda: assignments_from_labels(df, labels)
-        .write.mode("overwrite").parquet(str(work / "assignments")),
-    )
+    # the pipeline's own stage chain, tiers in sequence so each stage
+    # wall is that stage alone; every stage writes and re-reads its
+    # checkpoint table before the next one starts
+    ck = _Checkpointer(spark, work, CFG, resume=False, input_fp="")
+    frames = tier_frames(df, IMAGES, CFG, ALL_TIERS, ck.stage, n)
+    pairs = ck.stage("pairs_union", lambda: union_pairs(**frames))
+    labels = ck.stage("cc_labels", lambda: connected_components(pairs, CFG))
+    ck.stage("assignments", lambda: assignments_from_labels(df, labels))
     shutil.rmtree(work, ignore_errors=True)
 
-    total = round(sum(stages.values()), 2)
+    walls = {m["stage"]: round(m["wall_ms"] / 1000.0, 2) for m in ck.metrics}
     print(json.dumps({
-        "cores": cores, "rows": n, "stages": stages,
-        "total_sec": total,
-        "wall_sec": stages["signature"] + stages["banding"],
-        "rows_per_sec": round(n / (stages["signature"] + stages["banding"]), 1),
+        "cores": cores, "rows": n, "stages": walls,
+        "total_sec": round(sum(walls.values()), 2),
     }))
     spark.stop()
 

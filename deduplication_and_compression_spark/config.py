@@ -11,7 +11,7 @@ source of truth rather than scattered literals.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 import hashlib
 import json
 

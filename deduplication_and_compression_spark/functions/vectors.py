@@ -22,6 +22,3 @@ def norm(a: Column) -> Column:
         )
     )
 
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

@@ -31,7 +31,7 @@ Dataflow (all sizes are per 10^12-row scale reasoning):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions import hashing as H

@@ -15,13 +15,12 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.hashing import make_seeds, splitmix64
-from ..functions.vectors import cosine, dot, norm
+from ..functions.vectors import dot, norm
 from ..persistence import scoped_persist
 
 # Norms are hoisted: each side of a pair join carries a precomputed
 # per-vector norm column and the per-pair expression is dot/(na*nb) —
-# bit-identical to cosine() (same fold, same sqrt, same values) but
+# the same fold, sqrt and values as dot(a,b)/(norm(a)*norm(b)) but
 # evaluated once per VECTOR instead of twice per PAIR.  Higher-order
 # array functions are interpreted per row in Spark, so on an O(n²) or
 # bucket join this hoist removes two-thirds of the array folds.
@@ -126,59 +125,28 @@ def _srp_code_table(
     n_tables: int,
     id_col: str,
     vec_col: str,
-    code_impl: str = "arrow",
 ) -> DataFrame:
-    """(id, t, bucket): the per-table SRP codes, two interchangeable
-    kernels (VERDICT r4 "what's wrong" #3):
+    """(id, t, bucket): the per-table SRP codes, ONE Arrow-batched
+    numpy matmul per batch: (rows, dim) @ (dim, L·b) sign bits packed
+    to L codes per row.  BLAS-backed; measured 7.9× an interpreted JVM
+    literal-plane fold (best-of-3 interleaved, 1M × dim 64, b=16, L=8,
+    bit-identical code checksums — BENCH/BASELINE.md, round-5 pins).
+    Bit i of table t is set iff v·p_{t,i} >= 0 — the sign convention
+    the DuckDB oracle uses.
 
-    ``arrow`` (default) — ONE Arrow-batched numpy matmul per batch:
-      (rows, dim) @ (dim, L·b) sign bits packed to L codes per row.
-      BLAS-backed; measured 7.9× the fold (best-of-3 interleaved,
-      1M × dim 64, b=16, L=8, bit-identical code checksums —
-      scripts/bench_srp_codes.py).  The production path for 10⁹-vector
-      corpora.
-    ``fold`` — JVM literal-plane higher-order folds (zero Python in
-      the plan).  Higher-order functions are interpreted per row
-      (~L·b·dim interpreted ops), so this loses at scale, but its
-      arithmetic ORDER matches the DuckDB oracle's per-plane SUM
-      exactly — it is kept as the oracle-parity reference kernel.
-
-    Sign parity: the two kernels differ only in float summation order
-    (sequential fold vs BLAS pairwise), so codes can differ solely on
-    the zero-margin set {v : v·p == 0 within rounding}.  For
-    continuous-valued embeddings that set has measure zero; the
-    fixture equality test (tests/test_similarity.py) pins bit-for-bit
-    agreement on the driver data."""
-    if code_impl == "fold":
-        def code_col(vc, t: int):
-            out = F.lit(0)
-            for i in range(n_bits):
-                lit = F.array(*[F.lit(float(x)) for x in planes[t, i]])
-                d = F.aggregate(
-                    F.zip_with(vc, lit, lambda a, b: a.cast("double") * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                # sign convention shared by both kernels and the
-                # oracle: bit i set iff v·p_i >= 0
-                out = out + F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-            return out
-
-        return emb.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(
-                F.array(*[code_col(F.col(vec_col), t) for t in range(n_tables)])
-            ).alias("t", "bucket"),
-        )
-    if code_impl != "arrow":
-        raise ValueError(f"code_impl must be 'arrow' or 'fold', got {code_impl!r}")
-
+    Sign parity: the oracle sums each plane's products in sequence
+    (per-plane list_inner_product), the matmul in BLAS order, so codes
+    can differ solely on the zero-margin set {v : v·p == 0 within
+    rounding}.  For continuous-valued embeddings that set has measure
+    zero; tests/test_similarity.py pins bit-for-bit agreement with a
+    sequential per-plane fold on the driver data, and the oracle rows
+    check the codes' downstream hashes."""
     import pandas as pd
     from pyspark.sql import types as T
 
     dim = planes.shape[2]
     # (dim, L*b) weight matrix; float64 so the matmul accumulates in
-    # double exactly like the fold's cast("double") accumulator
+    # double like the oracle's per-plane inner product
     P = planes.reshape(n_tables * n_bits, dim).T.astype(np.float64)
     weights = 1 << np.arange(n_bits, dtype=np.int64)
     id_field = emb.schema[id_col].dataType
@@ -249,7 +217,6 @@ def srp_cosine_pairs(
     dim: int | None = None,
     n_tables: int = 8,
     probe_radius: int = 1,
-    code_impl: str = "arrow",
 ) -> DataFrame:
     """(a, b, cos_bp): embedding near-dup PAIRS via SRP bucketing —
     the 10^12-row path promised by embedding_cosine_pairs' docstring.
@@ -270,11 +237,10 @@ def srp_cosine_pairs(
         raise ValueError("pass dim explicitly (embedding width)")
     planes = srp_planes(n_tables, n_bits, dim, seed)
     # persisted: the code table feeds the probe branch AND the data
-    # side of the bucket join — unpersisted, the codes kernel (matmul
-    # or fold) executes once per branch (r5 code-review sweep)
+    # side of the bucket join — unpersisted, the matmul kernel
+    # executes once per branch (r5 code-review sweep)
     codes = scoped_persist(_srp_code_table(emb, planes, n_bits, n_tables,
-                                           id_col, vec_col,
-                                           code_impl=code_impl))
+                                           id_col, vec_col))
     qcodes = _srp_probe_codes(codes, n_bits, probe_radius)
     cand = (
         qcodes.alias("x")
@@ -284,7 +250,8 @@ def srp_cosine_pairs(
         .dropDuplicates()
     )
     # exact re-score in the Arrow pair-cosine kernel (bit-parity with
-    # the JVM fold — see _pair_cosine_arrow); same threshold + bp floor
+    # the oracle's list_inner_product — see _pair_cosine_arrow); same
+    # threshold + bp floor
     joined = _attach_pair_vectors(cand, emb, id_col, vec_col, "a", "b")
     return (
         _pair_cosine_arrow(joined, "a", "b")
@@ -303,7 +270,6 @@ def srp_bucket_topk(
     dim: int | None = None,
     n_tables: int = 8,
     probe_radius: int = 1,
-    code_impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: multi-table sign-random-projection LSH
     (Charikar STOC'02) with MULTI-PROBE (Lv et al., VLDB'07): the
@@ -328,22 +294,21 @@ def srp_bucket_topk(
     band amplification the MinHash tier uses, with the probe term
     recovering the single-straddled-hyperplane case.
 
-    Scale shape: codes are JVM-side literal-array dot products (no
-    Python); the candidate join shuffles (table, bucket, id) only and
-    vectors re-join by id for the re-rank.  Hyperplanes derive
-    deterministically from ``seed`` so the DuckDB oracle can embed them
-    as literals.  ``dim`` must be passed (no driver-side action at
-    plan-build time).
+    Scale shape: codes and the re-rank are one Arrow numpy kernel each
+    (_srp_code_table, _pair_cosine_arrow); the candidate join shuffles
+    (table, bucket, id) only and vectors re-join by id for the re-rank.
+    Hyperplanes derive deterministically from ``seed`` so the DuckDB
+    oracle can embed them as literals.  ``dim`` must be passed (no
+    driver-side action at plan-build time).
     """
     if dim is None:
         raise ValueError("pass dim explicitly (embedding width)")
     planes = srp_planes(n_tables, n_bits, dim, seed)
     # persisted: the code table feeds the probe branch AND the data
-    # side of the bucket join — unpersisted, the codes kernel (matmul
-    # or fold) executes once per branch (r5 code-review sweep)
+    # side of the bucket join — unpersisted, the matmul kernel
+    # executes once per branch (r5 code-review sweep)
     codes = scoped_persist(_srp_code_table(emb, planes, n_bits, n_tables,
-                                           id_col, vec_col,
-                                           code_impl=code_impl))
+                                           id_col, vec_col))
     qcodes = _srp_probe_codes(codes, n_bits, probe_radius)
     cand = (
         qcodes.alias("x")
@@ -380,19 +345,19 @@ def _pair_cosine_arrow(
     joined: DataFrame, a_col: str, b_col: str, out_name: str = "cos"
 ) -> DataFrame:
     """(a_col, b_col, cos): Arrow-batched exact cosine over pair rows
-    carrying both vectors as ``_va``/``_vb`` — the guide-§4.2 kernel
-    replacing the interpreted JVM fold on O(candidate) paths.
+    carrying both vectors as ``_va``/``_vb`` — the one scoring kernel
+    every ANN re-rank shares.
 
-    The JVM higher-order ``aggregate(zip_with(...))`` fold is
-    interpreted per row (~9 µs/pair measured on the 64-dim fixture:
-    the srp_topk re-rank stage burned 21-27 s CPU on 2.4M pairs);
-    this kernel is one numpy pass per Arrow batch.  BIT PARITY with
-    the fold (and so with the DuckDB oracles' list_inner_product) is
-    preserved by accumulating with an explicit per-dimension loop —
-    acc = ((0.0 + x₀) + x₁) + ... — the fold's exact left
-    association, vectorized ACROSS rows instead of across dims;
-    norms use the same loop, so every double (and downstream bp
-    floor / rank order) is identical to the fold's."""
+    An interpreted JVM ``aggregate(zip_with(...))`` fold costs
+    ~9 µs/pair on the 64-dim fixture (the srp_topk re-rank burned
+    21-27 s CPU on 2.4M pairs); this kernel is one numpy pass per
+    Arrow batch.  BIT PARITY with the DuckDB oracles'
+    list_inner_product is kept by accumulating with an explicit
+    per-dimension loop — acc = ((0.0 + x₀) + x₁) + ... — a left
+    association vectorized ACROSS rows instead of across dims; norms
+    use the same loop, so every double (and downstream bp floor /
+    rank order) matches the oracle rows hash-for-hash.
+    """
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -429,38 +394,14 @@ def _pair_cosine_arrow(
 
 def _cosine_rerank_topk(
     cand: DataFrame, emb: DataFrame, k: int, id_col: str, vec_col: str,
-    score_impl: str = "arrow",
 ) -> DataFrame:
     """Shared exact re-rank tail of the ANN tiers (SRP + IVF): attach
-    vectors to (query_id, neighbor_id) candidates, score exact cosine,
-    keep per-query top-k (ties broken by neighbor_id — the same total
-    order the DuckDB oracles use).
-
-    ``arrow`` (default) scores pairs in the numpy kernel above;
-    ``fold`` keeps the pure-JVM interpreted fold with hoisted norms —
-    the oracle-parity reference kernel, same convention as
-    _srp_code_table's code_impl."""
-    if score_impl == "fold":
-        vecs = emb.select(F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_n"))
-        scored = (
-            cand.join(
-                vecs.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                            F.col("_n").alias("_qn")),
-                "query_id",
-            )
-            .join(
-                vecs.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"),
-                            F.col("_n").alias("_nn")),
-                "neighbor_id",
-            )
-            .withColumn("cos", dot(F.col("qv"), F.col("nv")) / (F.col("_qn") * F.col("_nn")))
-        )
-    elif score_impl == "arrow":
-        joined = _attach_pair_vectors(cand, emb, id_col, vec_col,
-                                      "query_id", "neighbor_id")
-        scored = _pair_cosine_arrow(joined, "query_id", "neighbor_id")
-    else:
-        raise ValueError(f"score_impl must be 'arrow' or 'fold', got {score_impl!r}")
+    vectors to (query_id, neighbor_id) candidates, score exact cosine
+    in the Arrow pair kernel, keep per-query top-k (ties broken by
+    neighbor_id — the same total order the DuckDB oracles use)."""
+    joined = _attach_pair_vectors(cand, emb, id_col, vec_col,
+                                  "query_id", "neighbor_id")
+    scored = _pair_cosine_arrow(joined, "query_id", "neighbor_id")
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -923,7 +864,6 @@ def semantic_dedup(
     n_tables: int = 8,
     probe_radius: int = 1,
     seed: int = 0xB17_5EED,
-    code_impl: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style embedding-space deduplication (Abbas et al.,
     arXiv:2303.09540 — cluster semantically-near items and keep one
@@ -951,7 +891,7 @@ def semantic_dedup(
     pairs = srp_cosine_pairs(
         emb, threshold=threshold, n_bits=n_bits, seed=seed, id_col=id_col,
         vec_col=vec_col, dim=dim, n_tables=n_tables,
-        probe_radius=probe_radius, code_impl=code_impl,
+        probe_radius=probe_radius,
     )
     labels = connected_components(pairs.select("a", "b"), cfg)
     return assignments_from_labels(emb, labels, id_col=id_col)

@@ -424,7 +424,7 @@ def bigram_jaccard_pairs_allpairs(df: DataFrame, threshold_bp: int = 5000,
     bigram_jaccard_pairs_auto for the cost-based pick.
 
     Two kernels, identical output.  One aggregate over the persisted
-    ``bg`` (min/max doc_id, rows, incidence bytes) picks between them:
+    ``bg`` (the incidence bytes) picks between them:
 
     - DIRECT (integral doc_id, incidence bytes within the session's
       spark.sql.autoBroadcastJoinThreshold): the (doc_id, bigram)
@@ -437,12 +437,8 @@ def bigram_jaccard_pairs_allpairs(df: DataFrame, threshold_bp: int = 5000,
       indices from factorizing make the keys dense small integers,
       where direct addressing beats any hash table.
     - JOIN (any other id type, a larger incidence, or the threshold at
-      -1): self-join on the bigram, hash-aggregate the (a, b) count.
-      The aggregate groups by ONE packed long (a<<32 | b) instead of
-      two bigint columns whenever doc ids fit in [0, 2^31): its maps
-      carry a 16-byte UnsafeRow instead of 24, and key hash/compare
-      touch one word instead of two; other ids use the two-column key.
-      Both keys are injective, so the counts are bit-identical."""
+      -1): self-join on the bigram, hash-aggregate the count per
+      (a, b) doc-id pair."""
     return _allpairs(df, threshold_bp, bg)[0]
 
 
@@ -456,17 +452,15 @@ def _allpairs(df: DataFrame, threshold_bp: int, bg: DataFrame | None
     if bg is None:
         bg = scoped_persist(word_bigrams(df))
     id_type = dict(bg.dtypes)["doc_id"]
-    lo = hi = nbytes = None
+    nbytes = None
     if id_type in _INTEGRAL:
-        ids = F.col("doc_id")
         # null-id rows never pair (the join's a < b drops them);
         # bytes: an 8-byte id and a 4-byte Arrow offset per row plus the
         # bigram's UTF-8 bytes — the collected incidence's size
-        lo, hi, nbytes = bg.where(ids.isNotNull()).agg(
-            F.min(ids), F.max(ids),
+        nbytes = bg.where(F.col("doc_id").isNotNull()).agg(
             F.count(F.lit(1)) * F.lit(12)
             + F.coalesce(F.sum(F.octet_length("bigram")), F.lit(0)),
-        ).first()
+        ).first()[0]
         if nbytes <= broadcast_threshold(bg.sparkSession):
             return (_direct_allpairs(bg, id_type, threshold_bp),
                     {"kernel": "direct", "incidence_bytes": nbytes})
@@ -476,26 +470,10 @@ def _allpairs(df: DataFrame, threshold_bp: int, bg: DataFrame | None
         .join(bg.alias("y"), "bigram")
         .where(F.col("x.doc_id") < F.col("y.doc_id"))
     )
-    if lo is not None and lo >= 0 and hi < (1 << 31):
-        inter = (
-            pairs.select(
-                F.shiftleft(F.col("x.doc_id").cast("long"), 32)
-                .bitwiseOR(F.col("y.doc_id").cast("long"))
-                .alias("_ab")
-            )
-            .groupBy("_ab")
-            .agg(F.count(F.lit(1)).alias("i"))
-            .select(
-                F.shiftright(F.col("_ab"), 32).cast(id_type).alias("a"),
-                F.col("_ab").bitwiseAND(F.lit(0xFFFFFFFF)).cast(id_type).alias("b"),
-                "i",
-            )
-        )
-    else:
-        inter = (
-            pairs.groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
+    inter = (
+        pairs.groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
     out = (
         inter.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
         .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")

@@ -27,9 +27,7 @@ from pyspark.sql import functions as F
 
 from deduplication_and_compression_spark.config import DEFAULT_CONFIG as CFG
 from deduplication_and_compression_spark.fixtures.generator import write_fixture
-from deduplication_and_compression_spark.persistence import (
-    persist_scope, scoped_persist,
-)
+from deduplication_and_compression_spark.persistence import persist_scope
 from deduplication_and_compression_spark.session import build_session
 from deduplication_and_compression_spark.streaming.ingest import (
     build_screen_reference, screen_batch_edges, streaming_near_dup_screen,

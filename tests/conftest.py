@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 import pytest
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from deduplication_and_compression_spark.config import DedupConfig
 from deduplication_and_compression_spark.operators.minhash_lsh import (

@@ -9,7 +9,6 @@ from deduplication_and_compression_spark.functions.images import (
     decode_image, psnr_db,
 )
 from deduplication_and_compression_spark.plans.pipeline import run_pipeline
-from tests.conftest import pairs_set
 
 
 @pytest.fixture(scope="module")

@@ -151,34 +151,6 @@ def test_zipf_plans_agree_and_find_planted_pairs(spark):
     assert planted <= found, planted - found
 
 
-def test_allpairs_packed_key_fallback_parity(spark):
-    """bigram_jaccard_pairs_allpairs groups the intersection count by a
-    packed (a<<32 | b) long when doc ids fit [0, 2^31) and falls back
-    to the two-column key otherwise; both branches must be
-    output-identical.  Shifting the same corpus's ids by 2^31 forces
-    the fallback — results must agree modulo the shift."""
-    from deduplication_and_compression_spark.fixtures.generator import (
-        generate_zipf_docs,
-    )
-    from deduplication_and_compression_spark.operators.textops import (
-        bigram_jaccard_pairs_allpairs,
-    )
-
-    docs_pdf, _ = generate_zipf_docs(250, seed=13)
-    docs = spark.createDataFrame(docs_pdf)
-    off = 1 << 31
-    shifted = docs.withColumn("doc_id", (F.col("doc_id") + off).cast("long"))
-    # both keys belong to the join kernel: keep the direct one out
-    with _join_kernel(spark):
-        packed_out = bigram_jaccard_pairs_allpairs(docs)
-        assert dict(packed_out.dtypes)["a"] == dict(docs.dtypes)["doc_id"]
-        assert "MapInPandas" not in _plan(packed_out)
-        packed = {(r.a, r.b, r.jaccard_bp) for r in packed_out.collect()}
-        fallback = {(r.a - off, r.b - off, r.jaccard_bp)
-                    for r in bigram_jaccard_pairs_allpairs(shifted).collect()}
-    assert packed == fallback and len(packed) > 0
-
-
 @contextmanager
 def _join_kernel(spark):
     """Turn broadcasting off, which sends the all-pairs Jaccard to its
