@@ -1,17 +1,23 @@
 #!/usr/bin/env python
-"""Optimization-round measurement harness (guide §1) — NOT the driver
-bench.  bench.py is frozen for measurement; this file exists so the
-round's before/after evidence (noop-sink isolation, .explain capture,
-per-stage pipeline walls) never touches it.
+"""The measurement harness: plans, query walls and per-stage walls of
+the real operators.  bench.py is frozen for measurement; new
+measurements go here.
 
 Modes:
-  python bench_extra.py plans <outdir>   # .explain("formatted") per query
-  python bench_extra.py time [names...]  # noop-sink best-of-N per query
-  python bench_extra.py stages           # image-pipeline per-stage walls
+  python bench_extra.py plans <outdir> [names...]  # .explain("formatted") per query
+  python bench_extra.py time [names...]            # noop-sink walls, repeats round-robin
+  python bench_extra.py stages <cores> [replicate] [tiers]  # per-stage pipeline walls
 
+``plans`` and ``time`` cover every contract query (__spark_entry__)
+plus the two Zipf-corpus Jaccard plans, at $SPARK_GRAFT_SF_DIR on
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on).
 The noop sink computes every column of every row and discards it
 (guide §1.4), so these walls time the computation, not the sink or the
-driver-side count() pruning.
+driver-side count() pruning.  ``time`` runs repeat r of every named
+query before repeat r+1 of any, so host-load drift hits each query
+alike: ``time bigram_jaccard_ppjoin bigram_jaccard_pairs
+zipf_bigram_ppjoin zipf_bigram_allpairs`` is the A/B behind
+textops.ALLPAIRS_WORK_FLOOR.
 """
 
 from __future__ import annotations
@@ -30,19 +36,29 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 from deduplication_and_compression_spark.config import DEFAULT_CONFIG as CFG
-from deduplication_and_compression_spark.session import build_session
+from deduplication_and_compression_spark.fixtures.generator import (
+    write_fixture, write_zipf_docs,
+)
 from deduplication_and_compression_spark.persistence import (
     persist_scope, scoped_persist,
 )
+from deduplication_and_compression_spark.plans.pipeline import (
+    ALL_TIERS, IMAGES, _Checkpointer, tier_frames,
+)
+from deduplication_and_compression_spark.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # cores this process may run on (what `nproc` prints) unless overridden
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+CACHE = Path(os.environ.get("SPARK_GRAFT_BENCH_CACHE", str(REPO / ".bench_cache")))
+# image rows per replicate in `stages`: enough that fixed stage latency
+# does not dominate the walls
+STAGE_ROWS = 100_000
 
 
-def _spark():
-    spark = build_session(app_name="dedup-bench-extra", cores=CPUS,
-                          shuffle_partitions=max(CPUS, 8))
+def _spark(cores: int = CPUS):
+    spark = build_session(app_name="dedup-bench-extra", cores=cores,
+                          shuffle_partitions=max(cores, 8))
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -50,7 +66,7 @@ def _spark():
 def _builders(spark, names: list[str]) -> dict:
     """{name: () -> DataFrame} for the contract queries (all of
     __spark_entry__.queries()) plus the two Zipf-corpus Jaccard plans,
-    restricted to ``names`` when given.
+    restricted to ``names`` when given (an unknown name is a KeyError).
 
     The contract's result memo is bypassed in this process: every call
     rebuilds the operator plan, so the walls time the computation, not
@@ -71,20 +87,14 @@ def _builders(spark, names: list[str]) -> dict:
             lambda: bigram_jaccard_pairs(zd, threshold_bp=5000))
         builders["zipf_bigram_allpairs"] = (
             lambda: bigram_jaccard_pairs_allpairs(zd, threshold_bp=5000))
-    return {n: b for n, b in builders.items() if not names or n in names}
+    # in the order named: `time` interleaves its repeats in this order
+    return {n: builders[n] for n in names} if names else builders
 
 
 def _zipf_docs(spark):
-    from deduplication_and_compression_spark.fixtures.generator import (
-        write_zipf_docs,
-    )
-
     sf = float(Path(SF_DIR).name.replace("sf", "") or 0.1)
     n_zipf = max(1000, int(round(300_000 * sf)))
-    zcache = Path(
-        os.environ.get("SPARK_GRAFT_BENCH_CACHE", str(REPO / ".bench_cache"))
-    ) / f"zipf_{n_zipf}_seed11"
-    z_path, _ = write_zipf_docs(zcache, n_zipf, seed=11)
+    z_path, _ = write_zipf_docs(CACHE / f"zipf_{n_zipf}_seed11", n_zipf, seed=11)
     z = spark.read.parquet(str(z_path)).repartition(max(CPUS, 8)).cache()
     z.count()
     return z
@@ -108,66 +118,81 @@ def cmd_plans(outdir: str, names: list[str]) -> None:
 def cmd_time(names: list[str], repeats: int = 3) -> None:
     spark = _spark()
     builders = _builders(spark, names)
-    walls: dict[str, list[float]] = {}
-    for name, build in builders.items():
-        spark.sparkContext.setJobDescription(f"extra:{name}")
-        ws = []
-        for _ in range(repeats):
+    walls: dict[str, list[float]] = {name: [] for name in builders}
+    for r in range(repeats):
+        for name, build in builders.items():
+            spark.sparkContext.setJobDescription(f"extra:{name}")
             t0 = time.perf_counter()
             with persist_scope():
                 build().write.format("noop").mode("overwrite").save()
-            ws.append(round(time.perf_counter() - t0, 3))
-        walls[name] = ws
-        print(json.dumps({"query": name, "walls": ws, "best": min(ws)}),
-              flush=True)
-        spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"metric": "noop_walls", "walls": walls}))
+            walls[name].append(round(time.perf_counter() - t0, 3))
+            print(json.dumps({"query": name, "repeat": r,
+                              "wall": walls[name][-1]}), flush=True)
+    spark.sparkContext.setJobDescription(None)
+    print(json.dumps({"metric": "noop_walls", "walls": walls,
+                      "best": {n: min(w) for n, w in walls.items()}}))
     spark.stop()
 
 
-def cmd_stages(repeats: int = 2) -> None:
-    """Per-stage image-pipeline walls (the bench flagship), fixture and
-    methodology identical to bench.py's untimed-generation setup."""
-    from deduplication_and_compression_spark.fixtures.generator import (
-        write_fixture,
-    )
-    from deduplication_and_compression_spark.plans.pipeline import run_pipeline
+def cmd_stages(cores: int, replicate: int = 1,
+               tiers: tuple[str, ...] = ALL_TIERS) -> None:
+    """Per-stage walls of the image pipeline at local[cores], on the
+    cached STAGE_ROWS-row image fixture replicated ``replicate`` times
+    (each copy under its own ids).
 
-    sf = float(Path(SF_DIR).name.replace("sf", "") or 0.1)
-    n_images = max(1000, int(round(200_000 * sf)))
-    cache = Path(
-        os.environ.get("SPARK_GRAFT_BENCH_CACHE", str(REPO / ".bench_cache"))
-    ) / f"images_{n_images}_seed42_{CFG.fingerprint()}"
-    img_path, _ = write_fixture(cache, n_images, seed=42, cfg=CFG)
-    spark = _spark()
-    images = spark.read.parquet(str(img_path))
-    images = images.repartition(max(CPUS, 8)).cache()
-    images.count()
-    for r in range(repeats):
-        workdir = tempfile.mkdtemp(prefix="dedup_extra_")
-        try:
-            t0 = time.perf_counter()
-            with persist_scope():
-                res = run_pipeline(spark, images, workdir, CFG, resume=False)
-            wall = round(time.perf_counter() - t0, 3)
-            stages = {
-                m["stage"]: round(m["wall_ms"] / 1000.0, 3)
-                for m in res.metrics if m["partition_id"] == -1
-            }
-            print(json.dumps({"run": r, "wall": wall, "stages": stages}),
-                  flush=True)
-        finally:
-            shutil.rmtree(workdir, ignore_errors=True)
+    The pipeline's own stages run through its _Checkpointer: tier_frames
+    without ``spark``, so the tiers run one after another, then pair
+    union, connected components and assignments.  Every stage reads its
+    input from a written checkpoint table, so each wall is that stage's
+    own time; run_pipeline's concurrent tier walls include cross-tier
+    contention.  Prints one JSON line {"cores", "rows", "stages":
+    {stage: wall_sec}, "total_sec"}."""
+    from pyspark.sql import functions as F
+
+    from deduplication_and_compression_spark.operators.assign import (
+        assignments_from_labels,
+    )
+    from deduplication_and_compression_spark.operators.components import (
+        connected_components,
+    )
+    from deduplication_and_compression_spark.operators.pairs import union_pairs
+
+    img_path, _ = write_fixture(
+        CACHE / f"images_{STAGE_ROWS}_seed42_{CFG.fingerprint()}",
+        STAGE_ROWS, seed=42, cfg=CFG)
+    spark = _spark(cores)
+    base = spark.read.parquet(str(img_path))
+    df = base
+    for i in range(1, replicate):
+        df = df.union(
+            base.withColumn("image_id", F.concat(F.lit(f"r{i}_"), "image_id")))
+    df = df.repartition(cores * 4).cache()
+    n = df.count()
+
+    work = tempfile.mkdtemp(prefix="dedup_stages_")
+    try:
+        ck = _Checkpointer(spark, work, CFG, resume=False, input_fp="")
+        frames = tier_frames(df, IMAGES, CFG, tiers, ck.stage, n)
+        pairs = ck.stage("pairs_union", lambda: union_pairs(**frames))
+        labels = ck.stage("cc_labels", lambda: connected_components(pairs, CFG))
+        ck.stage("assignments", lambda: assignments_from_labels(df, labels))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    walls = {m["stage"]: round(m["wall_ms"] / 1000.0, 2)
+             for m in ck.metrics if m["partition_id"] == -1}
+    print(json.dumps({"cores": cores, "rows": n, "stages": walls,
+                      "total_sec": round(sum(walls.values()), 2)}))
     spark.stop()
 
 
 if __name__ == "__main__":
-    mode = sys.argv[1] if len(sys.argv) > 1 else "time"
+    mode, args = (sys.argv[1], sys.argv[2:]) if len(sys.argv) > 1 else ("time", [])
     if mode == "plans":
-        cmd_plans(sys.argv[2], sys.argv[3:])
+        cmd_plans(args[0], args[1:])
     elif mode == "time":
-        cmd_time(sys.argv[2:])
+        cmd_time(args)
     elif mode == "stages":
-        cmd_stages()
+        cmd_stages(int(args[0]), int(args[1]) if len(args) > 1 else 1,
+                   tuple(args[2].split(",")) if len(args) > 2 else ALL_TIERS)
     else:
         raise SystemExit(f"unknown mode {mode!r}")

@@ -1,11 +1,14 @@
 #!/usr/bin/env python
-"""Scaling-efficiency evidence: runs bench.py at local[N] and local[4N]
-on IDENTICAL input and reports throughput at both plus efficiency
+"""Scaling-efficiency evidence: the same job at local[N] and local[4N]
+on IDENTICAL input, throughput at both plus efficiency
 = thr(4N) / (4 * thr(N)).
 
 The BASELINE.json rule targets >= 0.8 between N- and 4N-executor
 cluster runs; this sandbox has one machine, so two local parallelism
-levels are the sanctioned proxy (see BASELINE.md).  Each run appends
+levels are the sanctioned proxy (see BASELINE.md).  N is the largest N
+with 4N <= the cores this process may run on (1 on a 4-core host).
+The full-pipeline rows come from bench.py, the signature headline and
+the per-stage table from ``bench_extra.py stages``.  Each run appends
 a dated section to BENCH/BASELINE.md.
 """
 
@@ -19,16 +22,19 @@ from datetime import datetime, timezone
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
+# images per bench.py pipeline run: a compute-dominated size
+_SCALE_ROWS = 100_000
+# interleaved runs per level: bench.py pipeline runs, signature runs
+_PIPE_RUNS = 2
+_SCALE_RUNS = 3
 
 
-def run_bench(cpus: int, sf_dir: str) -> dict:
+def run_bench(cpus: int) -> dict:
     env = dict(
         os.environ,
         SPARK_GRAFT_CPUS=str(cpus),
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        # scaling runs measure the image pipeline at a compute-dominated
-        # size; the fixed-size docs queries would only add constant wall
-        SPARK_GRAFT_BENCH_ROWS=os.environ.get("SPARK_GRAFT_SCALE_ROWS", "100000"),
+        SPARK_GRAFT_BENCH_ROWS=str(_SCALE_ROWS),
+        # the fixed-size docs queries would only add constant wall
         SPARK_GRAFT_BENCH_SKIP_DOCS="1",
     )
     out = subprocess.run(
@@ -38,21 +44,28 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def calibrate_host(workers_list=(1, 2, 8, 16, 32)) -> dict[int, float]:
+def run_stages(cpus: int, replicate: int = 1, tiers: str = "") -> dict:
+    args = [str(cpus), str(replicate)] + ([tiers] if tiers else [])
+    out = subprocess.run(
+        [sys.executable, str(REPO / "bench_extra.py"), "stages", *args],
+        capture_output=True, text=True, check=True,
+    )
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def calibrate_host(workers_list) -> dict[int, float]:
     """Raw CPU-parallel efficiency of THIS host via multiprocessing —
-    published alongside the Spark numbers so the N choice is honest.
-    (This sandbox advertises 32 vCPUs but delivers ~16 cores of real
-    throughput: pure-CPU multiprocessing efficiency ≈ 0.5 at 32.)"""
+    published alongside the Spark numbers: it is the most any engine
+    can show at each worker count under the current ambient load."""
     import multiprocessing as mp
     import time as _t
 
     def run(w):
         t0 = _t.perf_counter()
         with mp.Pool(w) as p:
-            # ~2.5s/worker: with the old 3M-iteration unit (~0.25s) Pool
-            # fork/teardown dominated and the ceiling read ~0.57 on an
-            # IDLE box (BENCH/BASELINE.md, round-6 host decomposition) — the
-            # burn must dwarf process startup for the ratio to mean CPU
+            # ~2.5s/worker: the burn must dwarf Pool fork/teardown for
+            # the ratio to mean CPU (BENCH/BASELINE.md, round-6 host
+            # decomposition)
             p.map(_burn, [30_000_000] * w)
         return _t.perf_counter() - t0
 
@@ -67,26 +80,14 @@ def _burn(n):
     return s
 
 
-def run_stage(cpus: int, replicate: int = 1, mode: str = "all") -> dict:
-    out = subprocess.run(
-        [sys.executable, str(REPO / "bench_stage.py"), str(cpus), str(replicate), mode],
-        env=dict(os.environ), capture_output=True, text=True, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # default N=2 (so 4N=8): the calibration shows this host's vCPUs are
-    # oversubscribed past ~16 workers, so 8-vs-32 measures the hypervisor,
-    # not the engine; 2-vs-8 sits in the host's linear region
-    n = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
-    cal = calibrate_host()
-    p_runs = int(os.environ.get("SPARK_GRAFT_PIPE_RUNS", "2"))
+    cores = len(os.sched_getaffinity(0))
+    n = max(1, cores // 4)
+    cal = calibrate_host(sorted({1, n, 4 * n}))
     pipe_n, pipe_4n = [], []
-    for _ in range(p_runs):
-        pipe_n.append(run_bench(n, sf_dir))
-        pipe_4n.append(run_bench(4 * n, sf_dir))
+    for _ in range(_PIPE_RUNS):
+        pipe_n.append(run_bench(n))
+        pipe_4n.append(run_bench(4 * n))
     r_n = max(pipe_n, key=lambda r: r["images_per_sec"])
     r_4n = max(pipe_4n, key=lambda r: r["images_per_sec"])
     thr_n = r_n["images_per_sec"]
@@ -96,32 +97,36 @@ def main() -> None:
         f"local[{n}]": [r["images_per_sec"] for r in pipe_n],
         f"local[{4*n}]": [r["images_per_sec"] for r in pipe_4n],
     }
-    # headline: signature+banding at 4x replicated rows (400k) so fixed
-    # stage latency amortizes — same methodology as the round-1 gate.
-    # Best-of-K with INTERLEAVED legs: this shared host's co-tenant load
-    # drifts on multi-minute scales (same code measured 44s..87s at
-    # local[8]), so single-shot legs compare two different machines in
-    # effect; min-wall per level estimates uncontended capability.
-    k_runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "3"))
+    # headline: the sig_minhash stage of a minhash-only run at 4x
+    # replicated rows, so fixed stage latency amortizes.  Best-of-K
+    # with INTERLEAVED legs: co-tenant load on a shared host drifts on
+    # multi-minute scales, so single-shot legs compare two different
+    # machines in effect; min-wall per level estimates uncontended
+    # capability.
     sig_runs_n, sig_runs_4n = [], []
-    for _ in range(k_runs):
-        sig_runs_n.append(run_stage(n, replicate=4, mode="sig"))
-        sig_runs_4n.append(run_stage(4 * n, replicate=4, mode="sig"))
-    sig_n = min(sig_runs_n, key=lambda r: r["wall_sec"])
-    sig_4n = min(sig_runs_4n, key=lambda r: r["wall_sec"])
-    s_eff = sig_4n["rows_per_sec"] / (4.0 * sig_n["rows_per_sec"])
+    for _ in range(_SCALE_RUNS):
+        sig_runs_n.append(run_stages(n, 4, "minhash"))
+        sig_runs_4n.append(run_stages(4 * n, 4, "minhash"))
+
+    def sig_wall(r):
+        return r["stages"]["sig_minhash"]
+
+    sig_n = min(sig_runs_n, key=sig_wall)
+    sig_4n = min(sig_runs_4n, key=sig_wall)
+    sig_thr_n = round(sig_n["rows"] / sig_wall(sig_n), 1)
+    sig_thr_4n = round(sig_4n["rows"] / sig_wall(sig_4n), 1)
+    s_eff = sig_thr_4n / (4.0 * sig_thr_n)
     sig_spread = {
-        f"local[{n}]": [r["wall_sec"] for r in sig_runs_n],
-        f"local[{4*n}]": [r["wall_sec"] for r in sig_runs_4n],
+        f"local[{n}]": [sig_wall(r) for r in sig_runs_n],
+        f"local[{4*n}]": [sig_wall(r) for r in sig_runs_4n],
     }
     # host ceiling for this N->4N pair at the CURRENT ambient load:
     # even pure-CPU multiprocessing only scales by cal(4n)*4n/(cal(n)*n)
-    # on this shared box, so that is the max any engine can show here
-    ceil_eff = (cal.get(4 * n, cal[8]) * 4 * n) / (cal.get(n, cal[2]) * n) / 4.0
+    ceil_eff = (cal[4 * n] * 4 * n) / (cal[n] * n) / 4.0
     s_eff_norm = s_eff / ceil_eff if ceil_eff > 0 else float("nan")
-    # per-stage attribution sweep at 100k rows
-    s_n = run_stage(n)
-    s_4n = run_stage(4 * n)
+    # per-stage attribution sweep
+    s_n = run_stages(n)
+    s_4n = run_stages(4 * n)
     stage_rows = "\n".join(
         f"| {name} | {s_n['stages'][name]} | {s_4n['stages'][name]} | "
         f"{s_n['stages'][name] / (4.0 * max(s_4n['stages'][name], 1e-9)):.3f} |"
@@ -137,23 +142,19 @@ Generated by bench_scaling.py.
 
 Sandbox proxy for the N vs 4N **executor** rule (BASELINE.md): the
 identical job (full 4-tier image dedup pipeline, signature→cluster,
-{r_n['n_images']} images at sf={r_n['sf']}) run at two local
-parallelism levels on identical input.
+{r_n['n_images']} images) run at two local parallelism levels on
+identical input.
 
 ### Host calibration (why N={n})
 
-Pure-CPU multiprocessing efficiency of this host (same work per
-worker, ideal = 1.0): {json.dumps(cal)}.
-The box advertises 32 vCPUs but saturates near ~16 workers, so any
-N→4N pair touching 32 threads measures hypervisor oversubscription,
-not the engine; N={n} vs {4*n} stays inside the host's linear region.
-On a real multi-executor cluster each executor brings its own cores,
-memory bus and Python workers, so this constraint is local-mode-only.
+N is the largest N with 4N <= the {cores} cores this process may run
+on.  Pure-CPU multiprocessing efficiency of this host at those worker
+counts (same work per worker, ideal = 1.0): {json.dumps(cal)}.
 
 ### Full 4-tier pipeline (shuffle/IO-heavy)
 
-Best of {p_runs} interleaved runs per level (max images/sec; all runs:
-{json.dumps(pipe_spread)}).
+Best of {_PIPE_RUNS} interleaved bench.py runs per level (max
+images/sec; all runs: {json.dumps(pipe_spread)}).
 
 | parallelism | pipeline wall (s) | images/sec | suite wall (s) |
 |---|---|---|---|
@@ -162,56 +163,33 @@ Best of {p_runs} interleaved runs per level (max images/sec; all runs:
 
 **Pipeline scaling efficiency** thr({4*n}) / (4 x thr({n})) = **{eff:.3f}**
 
-### Signature+banding stage (compute-heavy, {sig_n['rows']} rows)
+### Signature stage (compute-heavy, {sig_n['rows']} rows)
 
-Best of {k_runs} interleaved runs per level (min wall — co-tenant load
-on this shared host drifts run-to-run by up to 2x; all walls:
+The `sig_minhash` stage of a minhash-only `bench_extra.py stages`
+run: signatures plus their checkpoint write, no banding.  Best of
+{_SCALE_RUNS} interleaved runs per level (min wall; all walls:
 {json.dumps(sig_spread)}).
 
 | parallelism | wall (s) | rows/sec |
 |---|---|---|
-| local[{n}]  | {sig_n['wall_sec']} | {sig_n['rows_per_sec']} |
-| local[{4*n}] | {sig_4n['wall_sec']} | {sig_4n['rows_per_sec']} |
+| local[{n}]  | {sig_wall(sig_n)} | {sig_thr_n} |
+| local[{4*n}] | {sig_wall(sig_4n)} | {sig_thr_4n} |
 
 **Stage scaling efficiency** = **{s_eff:.3f}** raw (target >= 0.8).
 Host ceiling at this moment's ambient load (pure-CPU multiprocessing,
-same 2→8 workers, from the calibration above) = **{ceil_eff:.3f}**;
+same {n}→{4*n} workers, from the calibration above) = **{ceil_eff:.3f}**;
 host-normalized stage efficiency = **{s_eff_norm:.3f}**.
-
-Historical reference: under light ambient load (2026-08-16 ~17:30 UTC,
-host calibration ~0.96 at this pair) the identical job measured
-**0.807 raw** — walls 141.1s @ local[2], 43.7s @ local[8], 400k rows
-(recorded in commit ff00e91).  Raw efficiency on this shared box
-tracks ambient co-tenant load; the normalized number is the
-comparable one across sweeps.
 
 ### Per-stage walls at both parallelism levels ({s_n['rows']} rows)
 
-Each stage's input is materialized before its timer starts, so every
-row attributes its own scaling (efficiency = wall[{n}] / (4 x
-wall[{4*n}])); compute-bound stages scale, shuffle/sink-bound stages
-hit this host's memory-bus ceiling (see calibration).
+`bench_extra.py stages`: each stage's input is a written checkpoint
+table, so every row attributes its own scaling (efficiency =
+wall[{n}] / (4 x wall[{4*n}])).
 
 | stage | local[{n}] (s) | local[{4*n}] (s) | efficiency |
 |---|---|---|---|
 {stage_rows}
 | **total** | {s_n['total_sec']} | {s_4n['total_sec']} | {s_n['total_sec'] / (4 * s_4n['total_sec']):.3f} |
-
-### Reading these numbers
-
-The compute stage scales; the full pipeline on THIS HOST does not,
-and that is a property of the sandbox, not the plan shapes: the
-pipeline's joins/shuffles/parquet+zstd sinks are memory-STREAMING
-work, and this box's effective memory bandwidth saturates at ~2-3
-concurrent streaming threads (see calibration: even pure-CPU
-multiprocessing drops to ~0.5 efficiency at 32 workers; numpy fill
-runs at ~40 MB/s under load).  On a real multi-executor cluster each
-executor contributes its own memory bus, page cache, shuffle disks
-and Python worker pool, so the shuffle stages regain the parallelism
-they lose here.  The per-stage evidence (exact/minhash/simhash/
-substring shuffles keyed and partial-aggregated, hot keys salted or
-starred, AQE skew-join on) is in the plan-audit tests
-(tests/test_plans.py) and operator docstrings.
 
 Per-query seconds at local[{4*n}]:
 
@@ -232,7 +210,8 @@ Raw JSON:
     head = "" if path.exists() else "# BENCH/BASELINE — throughput & scaling efficiency\n"
     with path.open("a") as f:
         f.write(f"{head}\n{md}")
-    print(json.dumps({"eff": round(eff, 3), "thr_n": thr_n, "thr_4n": thr_4n}))
+    print(json.dumps({"eff": round(eff, 3), "thr_n": thr_n, "thr_4n": thr_4n,
+                      "sig_eff": round(s_eff, 3)}))
 
 
 if __name__ == "__main__":

@@ -31,7 +31,6 @@ class DedupConfig:
     plant_jaccard: float = 0.65
 
     # --- SimHash over phash-derived image features (§7 step 4) ---
-    simhash_bits: int = 64
     hamming_threshold: int = 3    # pairs with Hamming(phash) <= d
     simhash_chunks: int = 4       # pigeonhole: ceil(64/(d+1)) key chunks
 
@@ -39,12 +38,6 @@ class DedupConfig:
     min_substring_len: int = 32   # L: shared verbatim run to count as dup
 
     # --- Candidate-pair generation / skew (§7 step 6) ---
-    # (a bucket_pair_cap knob existed through r3 but was never read:
-    # the salted/star regimes below bound per-bucket pair volume by
-    # construction — small buckets emit ≤ salt_floor² pairs, medium
-    # ones fan out across salt_buckets partitions, hot ones emit O(k)
-    # star edges — so a separate silent drop-cap is redundant and was
-    # removed rather than wired in, per VERDICT r3 "what's wrong" #1.)
     salt_buckets: int = 16        # salt fan-out for hot band keys
     hot_bucket_threshold: int = 64  # bucket size above which we salt
 

@@ -163,14 +163,6 @@ def token_hashes_batch(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
     return splitmix64(out), counts
 
 
-def token_hashes(text: str) -> np.ndarray:
-    """uint64 hash per whitespace token (for SimHash features) — the
-    single-text view of token_hashes_batch (one definition, shared by
-    pipeline and brute-force oracles)."""
-    flat, _ = token_hashes_batch([text])
-    return flat
-
-
 def simhash_batch(texts: list[str], bits: int = 64,
                   tile_tokens: int = 1 << 16) -> np.ndarray:
     """int64 SimHash per text, fully batched: one token-hash pass, then
@@ -401,7 +393,3 @@ _POPCOUNT_TABLE = np.array([bin(i).count("1") for i in range(256)], dtype=np.int
 def u64_to_i64(a: np.ndarray) -> np.ndarray:
     """Reinterpret uint64 → int64 (Spark LongType carrier)."""
     return np.asarray(a, dtype=_U64).view(np.int64)
-
-
-def i64_to_u64(a: np.ndarray) -> np.ndarray:
-    return np.asarray(a, dtype=np.int64).view(_U64)

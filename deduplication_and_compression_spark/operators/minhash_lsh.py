@@ -387,38 +387,46 @@ def minhash_pairs(
     return verify_jaccard(cands, df, cfg, id_col, text_col)
 
 
+def estimate_at_least(sig_a: str, sig_b: str,
+                      cfg: DedupConfig = DEFAULT_CONFIG) -> Column:
+    """Whether two signature columns' lane agreement (the MinHash
+    Jaccard estimator) is ≥ threshold − 3σ.  The 3σ slack keeps the
+    false-negative probability per true pair < 0.2% at J == threshold
+    (and ~0 for pairs planted at plant_jaccard), preserving the ≥0.99
+    recall budget.  Whole-stage-codegen arithmetic over the two arrays.
+
+    NOTE (r7): an Arrow-kernel variant of this lane-agreement count was
+    measured SLOWER than the interpreted JVM fold — the fold costs ~13 s
+    CPU across 32 cores (~0.4 s wall), while shipping two 128-lane
+    arrays per pair through the Python boundary added more task time
+    than it saved (guide §1.2: the distributed shape, not this per-task
+    expression, bounds the wall)."""
+    t = cfg.jaccard_threshold
+    slack = 3.0 * (t * (1.0 - t) / cfg.num_perm) ** 0.5
+    est = F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ).cast("double") / F.lit(float(cfg.num_perm))
+    return est >= F.lit(t - slack)
+
+
 def estimate_filter(
     candidates: DataFrame, sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """JVM-side prefilter between LSH candidate generation and exact
-    verification: keep pairs whose signature lane-agreement (the
-    MinHash Jaccard estimator) is ≥ threshold − 3σ.
+    verification: keep pairs that pass ``estimate_at_least``.
 
     On densely-similar corpora LSH emits millions of mid-similarity
     candidates; running the exact-Jaccard Python UDF on all of them is
     the bottleneck.  The estimator is whole-stage-codegen arithmetic
     over the two signature arrays, so this stage costs one join +
     vectorized compare, and only near-threshold survivors reach
-    Python.  The 3σ slack keeps the false-negative probability per
-    true pair < 0.2% at J == threshold (and ~0 for pairs planted at
-    plant_jaccard), preserving the ≥0.99 recall budget.
+    Python.
     """
-    t = cfg.jaccard_threshold
-    slack = 3.0 * (t * (1.0 - t) / cfg.num_perm) ** 0.5
     s = sigs.select(F.col("id"), F.col("sig"))
     joined = (
         candidates.join(s.withColumnRenamed("id", "a").withColumnRenamed("sig", "_sa"), "a")
         .join(s.withColumnRenamed("id", "b").withColumnRenamed("sig", "_sb"), "b")
     )
-    # NOTE (r7): an Arrow-kernel variant of this lane-agreement count
-    # was measured SLOWER than the interpreted JVM fold here — the fold
-    # costs ~13 s CPU across 32 cores (~0.4 s wall), while shipping two
-    # 128-lane arrays per pair through the Python boundary added more
-    # task time than it saved.  The fold stays (guide §1.2: the
-    # distributed shape, not this per-task expression, bounds the wall).
-    est = F.aggregate(
-        F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ).cast("double") / F.lit(float(cfg.num_perm))
-    return joined.where(est >= F.lit(t - slack)).select("a", "b")
+    return joined.where(estimate_at_least("_sa", "_sb", cfg)).select("a", "b")

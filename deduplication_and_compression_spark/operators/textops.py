@@ -273,7 +273,9 @@ LAST_PLAN_PICK: dict | None = None
 # (931 vocab / 5000 docs / Σdf² = 73.2M) gives allpairs 3.2s vs
 # ppjoin 11.7s — allpairs wins its regime by 3.6×, the r4 flip was
 # host-load drift, and both discriminator rules still route to the
-# measured-faster plan (scripts/pin_jaccard_plans.py reproduces this).
+# measured-faster plan (``bench_extra.py time bigram_jaccard_ppjoin
+# bigram_jaccard_pairs zipf_bigram_ppjoin zipf_bigram_allpairs``
+# reproduces this, repeats interleaved).
 # On a real cluster this constant only shrinks relative to the data,
 # so at 10^12-row scale the pick degenerates to "ppjoin whenever a
 # rare tail exists" — exactly the published PPJoin guidance.
@@ -281,8 +283,8 @@ LAST_PLAN_PICK: dict | None = None
 # counting kernel (bigram_jaccard_pairs_allpairs) runs the 30k-doc
 # Zipf fixture about 10x faster than the join (BENCH/direct_jaccard.md),
 # so the crossover has moved up for any corpus whose incidence fits
-# the broadcast threshold; it needs a re-pin
-# (scripts/pin_jaccard_plans.py) before the number is trusted.
+# the broadcast threshold; it needs a re-pin (the same ``bench_extra.py
+# time`` run) before the number is trusted.
 ALLPAIRS_WORK_FLOOR = 100_000_000
 
 

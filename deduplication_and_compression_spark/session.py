@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the package, wherever the caller's cwd is
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "dedup-compression-spark",
@@ -90,11 +93,9 @@ def build_session(
     # find_spec: the daemon is launched as `python -m <module>` BEFORE
     # any task ships py-files, so on an executor where the package is
     # not installed the import would kill worker spawn outright (r7
-    # code review) — this factory pins local[N] where driver
-    # importability == worker importability, but the guard keeps the
-    # conf safe to copy into a cluster submit.  SPARK_GRAFT_PY_DAEMON=
-    # (empty) runs the stock daemon, which turns off both the preload
-    # and the zip fix.
+    # code review) — the guard keeps the conf safe to copy into a
+    # cluster submit.  SPARK_GRAFT_PY_DAEMON= (empty) runs the stock
+    # daemon, which turns off both the preload and the zip fix.
     import importlib.util
 
     daemon_mod = os.environ.get(
@@ -107,6 +108,14 @@ def build_session(
             spec = None
         if spec is not None:
             builder = builder.config("spark.python.daemon.module", daemon_mod)
+    # Driver importability is NOT worker importability: the driver finds
+    # the package through its script's directory, a local[N] worker
+    # only through its PYTHONPATH and the JVM's cwd, so without this a
+    # run started outside the repo root fails every Python task with
+    # "No module named deduplication_and_compression_spark".  Spark
+    # merges this path into the workers' PYTHONPATH (it keeps the
+    # inherited one); on a cluster --py-files ships the package.
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -1,24 +1,17 @@
-"""Table IO: Iceberg-or-parquet reader/writer.
+"""Table IO: the Iceberg-or-parquet reader and document ingest.
 
 Production target is an Iceberg catalog (the BASELINE.json north_rule
-input); this sandbox has no Iceberg runtime jar, so reads/writes fall
-back to plain parquet paths transparently.  All pipeline code goes
-through these two functions, so pointing at a real catalog is a
-config change, not a code change.
+input); this sandbox has no Iceberg runtime jar, so ``read_table``
+falls back to plain parquet paths transparently, and pointing it at a
+real catalog is a config change, not a code change.  Checkpoint and
+output tables are written by the pipeline itself (plans/pipeline.py).
 """
 
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-_TPCH_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
 
 
 def normalize_parallelism(df: DataFrame) -> DataFrame:
@@ -48,28 +41,6 @@ def read_table(spark: SparkSession, ref: str) -> DataFrame:
     if os.path.exists(ref) or ref.endswith(".parquet"):
         return spark.read.parquet(ref)
     return spark.read.table(ref)
-
-
-def write_table(df: DataFrame, ref: str, mode: str = "overwrite") -> None:
-    if "/" in ref or ref.endswith(".parquet"):
-        df.write.mode(mode).parquet(ref)
-    else:
-        df.writeTo(ref).createOrReplace()
-
-
-def load_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver-generated TPC-H-ish tables from a sf directory."""
-    out = {}
-    for name in _TPCH_TABLES:
-        p = Path(sf_dir) / f"{name}.parquet"
-        if p.exists():
-            out[name] = spark.read.parquet(str(p))
-    return out
-
-
-def register_sf_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_sf_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 DOCUMENT_COLUMNS = ("doc_id", "text", "lang", "source", "n_chars")

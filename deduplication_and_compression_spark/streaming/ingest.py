@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..operators.exact import with_content_hash
-from ..operators.minhash_lsh import jaccard_at_least, minhash_signatures
+from ..operators.minhash_lsh import (
+    estimate_at_least, jaccard_at_least, minhash_signatures,
+)
 from ..persistence import scoped_persist
 
 
@@ -121,15 +123,7 @@ def _verify_screen_edges(cand: DataFrame, cfg: DedupConfig) -> DataFrame:
     prefilter (threshold − 3σ) then the Arrow-batched exact-Jaccard
     verify, over candidates carrying (id, ref_id, sig, _rsig, _txt,
     _rtxt).  Emits (id, ref_id, jaccard ≥ threshold)."""
-    t = cfg.jaccard_threshold
-    slack = 3.0 * (t * (1.0 - t) / cfg.num_perm) ** 0.5
-
-    est = F.aggregate(
-        F.zip_with("sig", "_rsig", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ).cast("double") / F.lit(float(cfg.num_perm))
-    cand = cand.where(est >= F.lit(t - slack))
+    cand = cand.where(estimate_at_least("sig", "_rsig", cfg))
     return jaccard_at_least(cand, ("id", "ref_id"), ("_txt", "_rtxt"), cfg)
 
 

@@ -8,7 +8,11 @@ tiered pipeline + the one-line JSON accounting report).
 from __future__ import annotations
 
 import json
+import os
 import shutil
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -86,6 +90,26 @@ def test_cli_docs_mode_jsonl(spark, tmp_path, capsys):
     asg = spark.read.parquet(str(out_dir / "assignments")).toPandas()
     by_id = dict(zip(asg["doc_id"], asg["cluster_id"]))
     assert by_id[1] == by_id[3] == 1 and by_id[2] == by_id[4] == 2
+
+
+def test_cli_docs_mode_from_foreign_cwd(tmp_path):
+    """The CLI started outside the repo root: the driver imports the
+    package through the script's directory, the local[N] Python workers
+    only through the PYTHONPATH the session gives them.  The MinHash
+    tier runs Python tasks, so a worker that cannot import the package
+    fails the run."""
+    src = _write_docs_corpus(tmp_path)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    r = subprocess.run(
+        [sys.executable, str(Path(cli.__file__).resolve()), "--mode", "docs",
+         "--input", str(src), "--format", "json", "--output", "out",
+         "--tiers", "exact,minhash"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    report = json.loads(r.stdout.strip().splitlines()[-1])
+    assert report["rows_total"] == 4 and report["rows_unique"] == 2
 
 
 @pytest.mark.parametrize("tiers,expect_unique", [

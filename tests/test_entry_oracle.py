@@ -4,6 +4,11 @@ value (columns sorted by name, rows sorted, exact equality)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import duckdb
 import pandas as pd
 import pytest
@@ -275,3 +280,19 @@ def test_evict_query_memo_releases_and_recomputes(spark):
     assert entrymod.evict_query_memo("srp_topk") == 0
     assert entrymod._q_srp_topk(spark, sf_dir).count() == out.count()
     entrymod.evict_query_memo("srp_topk")  # leave no session-long cache
+
+
+def test_bench_extra_plans_from_foreign_cwd(tmp_path):
+    """The measurement harness's entry point and builder registry, run
+    from outside the repo root: ``plans`` writes one formatted plan per
+    named query (planning only)."""
+    harness = Path(entrymod.__file__).resolve().parent / "bench_extra.py"
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2",
+               SPARK_GRAFT_SF_DIR=str(Path(SF_DIR).with_name("sf0.001")))
+    r = subprocess.run(
+        [sys.executable, str(harness), "plans", "out", "exact_dedup_docs"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    plan = tmp_path / "out" / "exact_dedup_docs.txt"
+    assert plan.exists() and "Physical Plan" in plan.read_text()

@@ -180,11 +180,21 @@ def test_resume_invalidated_by_config_change(spark, images_df, cfg, pipe_result)
 
 
 def test_metrics_lineage_written(pipe_result, spark):
-    _, out = pipe_result
+    """Every computed stage records per-partition rows (from its part
+    files' footers, no extra job), they add up to its rows_out, and the
+    metrics table holds them."""
+    res, out = pipe_result
+    top = {m["stage"]: m["rows_out"] for m in res.metrics
+           if m["partition_id"] == -1 and not m["resumed"]}
+    parts: dict[str, int] = {}
+    for m in res.metrics:
+        if m["partition_id"] >= 0:
+            parts[m["stage"]] = parts.get(m["stage"], 0) + m["rows_out"]
+    assert len(top) == 10, sorted(top)
+    assert parts == top
     m = spark.read.parquet(str(out / "metrics"))
     stages = {r["stage"] for r in m.select("stage").distinct().collect()}
-    assert {"pairs_union", "cc_labels", "assignments"} <= stages
-    # per-partition lineage rows exist
+    assert set(top) <= stages
     assert m.filter("partition_id >= 0").count() > 0
 
 

@@ -488,8 +488,8 @@ def test_screen_batch_keys_only_measured_shuffle_bytes(spark, cfg, images_df):
     ride the ~lsh_bands× band explode.  Bytes come from the driver's
     status store (stage-level shuffleWriteBytes, diffed around each
     plan), so this asserts the actual exchange payload, not the plan
-    string.  scripts/bench_screen_shuffle.py records the same contrast
-    at 100k-doc reference scale for BENCH."""
+    string.  BENCH/BASELINE.md ("Round-6 pins") records the same
+    contrast at 100k-doc reference scale."""
     from deduplication_and_compression_spark.persistence import persist_scope
     from deduplication_and_compression_spark.streaming.ingest import (
         build_screen_reference, screen_batch_edges,
