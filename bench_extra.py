@@ -4,7 +4,7 @@ the real operators.  bench.py is frozen for measurement; new
 measurements go here.
 
 Modes:
-  python bench_extra.py plans <outdir> [names...]  # .explain("formatted") per query
+  python bench_extra.py plans <outdir> [names...]  # .explain("formatted") per query, ids normalised
   python bench_extra.py time [names...]            # noop-sink walls, repeats round-robin
   python bench_extra.py stages <cores> [replicate] [tiers]  # per-stage pipeline walls
 
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -100,6 +101,13 @@ def _zipf_docs(spark):
     return z
 
 
+# run-to-run ids of a formatted plan: expression, AQE query-stage
+# (numbered in stage completion order), codegen and exchange ids
+_PLAN_IDS = [(re.compile(p), r) for p, r in (
+    (r"#\d+", "#N"), (r"(QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+", r"\1N"),
+    (r"\[codegen id : \d+\]", "[codegen id : N]"), (r"plan_id=\d+", "plan_id=N"))]
+
+
 def cmd_plans(outdir: str, names: list[str]) -> None:
     spark = _spark()
     out = Path(outdir)
@@ -110,7 +118,10 @@ def cmd_plans(outdir: str, names: list[str]) -> None:
             buf = StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-        (out / f"{name}.txt").write_text(buf.getvalue())
+        plan = buf.getvalue()
+        for pat, rep in _PLAN_IDS:
+            plan = pat.sub(rep, plan)
+        (out / f"{name}.txt").write_text(plan)
         print(f"wrote {out / (name + '.txt')}")
     spark.stop()
 
@@ -146,7 +157,7 @@ def cmd_stages(cores: int, replicate: int = 1,
     input from a written checkpoint table, so each wall is that stage's
     own time; run_pipeline's concurrent tier walls include cross-tier
     contention.  Prints one JSON line {"cores", "rows", "stages":
-    {stage: wall_sec}, "total_sec"}."""
+    {stage: wall_sec}, "jobs": {stage: spark_jobs}, "total_sec"}."""
     from pyspark.sql import functions as F
 
     from deduplication_and_compression_spark.operators.assign import (
@@ -169,18 +180,24 @@ def cmd_stages(cores: int, replicate: int = 1,
     df = df.repartition(cores * 4).cache()
     n = df.count()
 
+    def stage(name, build):  # one job group per stage: its job count
+        spark.sparkContext.setJobGroup(name, name)
+        return ck.stage(name, build)
+
     work = tempfile.mkdtemp(prefix="dedup_stages_")
     try:
         ck = _Checkpointer(spark, work, CFG, resume=False, input_fp="")
-        frames = tier_frames(df, IMAGES, CFG, tiers, ck.stage, n)
-        pairs = ck.stage("pairs_union", lambda: union_pairs(**frames))
-        labels = ck.stage("cc_labels", lambda: connected_components(pairs, CFG))
-        ck.stage("assignments", lambda: assignments_from_labels(df, labels))
+        frames = tier_frames(df, IMAGES, CFG, tiers, stage, n)
+        pairs = stage("pairs_union", lambda: union_pairs(**frames))
+        labels = stage("cc_labels", lambda: connected_components(pairs, CFG))
+        stage("assignments", lambda: assignments_from_labels(df, labels))
     finally:
         shutil.rmtree(work, ignore_errors=True)
     walls = {m["stage"]: round(m["wall_ms"] / 1000.0, 2)
              for m in ck.metrics if m["partition_id"] == -1}
-    print(json.dumps({"cores": cores, "rows": n, "stages": walls,
+    tracker = spark.sparkContext.statusTracker()
+    jobs = {s: len(tracker.getJobIdsForGroup(s)) for s in walls}
+    print(json.dumps({"cores": cores, "rows": n, "stages": walls, "jobs": jobs,
                       "total_sec": round(sum(walls.values()), 2)}))
     spark.stop()
 

@@ -38,8 +38,7 @@ class DedupConfig:
     min_substring_len: int = 32   # L: shared verbatim run to count as dup
 
     # --- Candidate-pair generation / skew (§7 step 6) ---
-    salt_buckets: int = 16        # salt fan-out for hot band keys
-    hot_bucket_threshold: int = 64  # bucket size above which we salt
+    hot_bucket_threshold: int = 64  # bucket size above which we star
 
     # --- Connected components (§7 step 7) ---
     cc_max_iterations: int = 25

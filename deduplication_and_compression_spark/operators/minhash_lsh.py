@@ -15,13 +15,13 @@ Dataflow (all sizes are per 10^12-row scale reasoning):
                   band hash is public arithmetic an external engine
                   (the DuckDB oracle) can replicate bit-for-bit
   2. band keys    narrow; posexplode of the precomputed bands column
-  3. bucketing    wide; shuffle on (band_idx, band_hash) carrying only
-                  (id, key) pairs
-  4. pair-gen     skew-aware: identical-payload members collapse to a
-                  min-id representative first (the exact-dup flood —
-                  THE hot-bucket case at web scale — becomes O(k) star
-                  edges that verification can never sever), then
-                  all-pairs / salted all-pairs / star-over-reps by
+  3. bucketing    wide; one shuffle on (band_idx, band_hash), sorted
+                  within partitions: each bucket is one contiguous run
+  4. pair-gen     skew-aware numpy pass over the runs: identical-
+                  payload members collapse to a min-id representative
+                  first (the exact-dup flood — THE hot-bucket case at
+                  web scale — becomes O(k) star edges that verification
+                  can never sever), then all-pairs / star-over-reps by
                   DISTINCT-payload bucket size
   5. verify       candidates joined back to captions; TRUE shingle
                   Jaccard computed in an Arrow-batched UDF; edge iff
@@ -31,6 +31,8 @@ Dataflow (all sizes are per 10^12-row scale reasoning):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..config import DedupConfig, DEFAULT_CONFIG
@@ -138,9 +140,15 @@ def candidate_pairs_from_buckets(
     key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
     val_col: str | None = None,
 ) -> DataFrame:
-    """Generic skew-aware bucket → candidate (a,b) pair generation.
+    """Skew-aware bucket → candidate (a, b) pairs, a < b in the input id
+    type; shared by the LSH, SimHash and substring tiers.
 
-    Used by the LSH, SimHash and substring tiers.
+    One hash exchange on the bucket key, sortWithinPartitions(key, val),
+    ONE mapInPandas walking the sorted key runs in numpy, one (a, b)
+    dropDuplicates: a bucket lands whole in one task, and each Arrow
+    batch's trailing key run waits for the next batch, so no bucket is
+    split across kernel calls.  Ids compare as ranks from one np.unique
+    per batch, never pair by pair in Python.
 
     Step 1 — VALUE COLLAPSE (when ``val_col`` names a full-payload hash
     column, e.g. the phash itself or xxhash64 of the signature/text):
@@ -153,33 +161,19 @@ def candidate_pairs_from_buckets(
     the flood collapses to a handful of representatives.
 
     Collision caveat: when ``val_col`` is a 64-bit HASH of the payload
-    rather than the payload itself (the minhash tier hashes the
-    128-lane signature; the phash tier groups on the raw 64-bit phash,
-    no proxy), two distinct payloads sharing a bucket collide with
-    probability 2^-64 per pair, in which case the merged group's star
-    edge can fail verification and sever the non-rep member.  The
-    "exact" claim is therefore collision-probabilistic: at 10^12 rows
-    the expected number of such events across all buckets stays ≪ 1
-    as long as per-bucket distinct payloads ≤ ~10^6 (birthday bound
-    ~k²/2^64 per bucket).  Group on the raw payload column where it is
-    bucket-shuffle-affordable (≤ 8 bytes); hash proxies are for wide
-    payloads only.
+    (the minhash tier hashes the 128-lane signature; the phash tier
+    groups on the raw phash), two distinct payloads in a bucket collide
+    with probability 2^-64 per pair, and the merged group's star edge
+    can fail verification and sever the non-rep member.  At 10^12 rows
+    the expected number of such events stays ≪ 1 while per-bucket
+    distinct payloads ≤ ~10^6 (birthday bound ~k²/2^64 per bucket).
+    Group on the raw payload where it is ≤ 8 bytes; hash proxies are
+    for wide payloads only.
 
-    Step 2 — three regimes over the (collapsed) representatives, by
-    distinct-value bucket size k (north_rule: "salted-shuffle
-    candidate-pair generation ... skew handled explicitly"):
-
-      k ≤ salt_floor            plain self-join on the bucket key —
-                                 uniform small buckets, no skew
-      salt_floor < k ≤ hot      SALTED self-join: the left side gets
-                                 salt = xxhash64(id) % s, the right
-                                 side is exploded to every salt value,
-                                 so one medium-hot bucket fans out to s
-                                 shuffle partitions instead of one
-                                 straggler task (s = cfg.salt_buckets);
-                                 every pair still appears exactly once
-      k > hot                    star pairs around the bucket's min rep:
-                                 O(k) instead of O(k²)
+    Step 2 — over a bucket's k representatives: all pairs when k ≤ hot
+    (hot = 16 · hot_bucket_threshold with the collapse: ≤ ~0.5M pairs
+    per bucket, floods having collapsed away), else a star around the
+    bucket's min rep, O(k) instead of O(k²).
 
     Exactness: any true pair (x, y) sharing a bucket is connected
     through emitted verified edges — x–rep(x) and y–rep(y) at distance
@@ -189,85 +183,81 @@ def candidate_pairs_from_buckets(
     star-over-reps regime is a documented approximation: an edge
     (min-rep, r) with distance > threshold is dropped by verification
     and can sever r's members from the bucket's component.  Without
-    ``val_col`` the collapse is skipped and the regimes apply to raw
-    members (the pre-collapse behavior — approximate for ANY hot
-    bucket, not just payload-diverse ones).
-
-    AQE skew-join mops up residual imbalance in the size-tag join.
-    """
-    keys = [F.col(c) for c in key_cols]
-
-    if val_col is not None:
-        # collapse via groupBy, NOT a window: the partial (map-side)
-        # aggregation shrinks an exact-dup flood BEFORE it shuffles —
-        # a window sort would shuffle every member row.  The group
-        # table is tiny on flood-heavy data, so Catalyst/AQE turns the
-        # member-tag join into a broadcast; persist() because intra
-        # and the three regimes both consume it.
-        grp = scoped_persist(
-            bucketed.groupBy(*key_cols, val_col)
-            .agg(F.min("id").alias("_rep"), F.count(F.lit(1)).alias("_gsz"))
-        )
-        # star edges inside each identical-payload group (rep = min id,
-        # so rep < id always: pairs are already (a<b)-normalized); only
-        # multi-member groups need their members tagged at all
-        multi = grp.filter(F.col("_gsz") > 1).select(*key_cols, val_col, "_rep")
-        intra = (
-            bucketed.join(multi, list(key_cols) + [val_col])
-            .where(F.col("id") != F.col("_rep"))
-            .select(F.col("_rep").alias("a"), F.col("id").alias("b"))
-        )
-        reps = grp.select(*key_cols, F.col("_rep").alias("id"))
-    else:
-        intra = None
-        reps = bucketed.select(*key_cols, "id")
-
-    sizes = reps.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("_bsz"), F.min("id").alias("_bmin")
-    ).filter(F.col("_bsz") > 1)
-
-    tagged = reps.join(sizes, list(key_cols))
-    salt_floor = max(2, cfg.hot_bucket_threshold // 4)
-    s = cfg.salt_buckets
-    # With the collapse active, "bucket size" counts DISTINCT payloads,
-    # so the star fallback can afford a much higher floor: a k-rep
-    # salted all-pairs emits ≤ k²/2 bounded pairs, and real skew
-    # (floods) has already collapsed away.  16x the raw threshold keeps
-    # the exactness guarantee through e.g. 1024-distinct-value buckets
-    # while still refusing adversarial quadratic blowups.
+    ``val_col`` every member is a rep and hot = hot_bucket_threshold
+    (approximate for ANY hot bucket).  The pair set equals the oracle's
+    grp/intra/allp/star CTEs (__spark_entry__._minhash_oracle_sql);
+    key and value columns must be non-null (every tier keys on hashes)."""
     hot = cfg.hot_bucket_threshold * (16 if val_col is not None else 1)
+    sort_cols = [*key_cols, *([val_col] if val_col is not None else [])]
+    id_type = dict(bucketed.dtypes)["id"]
 
-    small = tagged.filter(F.col("_bsz") <= salt_floor)
-    left = small.select(*keys, F.col("id").alias("a"))
-    right = small.select(*keys, F.col("id").alias("b"))
-    small_pairs = left.join(right, list(key_cols)).filter(F.col("a") < F.col("b"))
+    def emit(frames):
+        pdf = pd.concat(frames, ignore_index=True)
+        ids, rank = np.unique(pdf["id"].to_numpy(), return_inverse=True)
+        val = pdf[val_col].to_numpy() if val_col is not None else None
+        for a, b in _bucket_pair_ranks(_run_starts(pdf, key_cols), val, rank, hot):
+            if len(a):
+                yield pd.DataFrame({"a": ids[a], "b": ids[b]})
 
-    medium = tagged.filter(
-        (F.col("_bsz") > salt_floor) & (F.col("_bsz") <= hot)
-    )
-    m_left = medium.select(
-        *keys, F.col("id").alias("a"), F.pmod(F.xxhash64("id"), F.lit(s)).alias("_salt")
-    )
-    m_right = medium.select(
-        *keys, F.col("id").alias("b"),
-        F.explode(F.sequence(F.lit(0).cast("long"), F.lit(s - 1).cast("long"))).alias("_salt"),
-    )
-    medium_pairs = m_left.join(m_right, list(key_cols) + ["_salt"]).filter(
-        F.col("a") < F.col("b")
+    def _gen(batches):
+        held = []  # the trailing key run, until a later row ends it
+        for pdf in filter(len, batches):
+            cut = np.flatnonzero(_run_starts(pdf, key_cols))[-1]
+            if cut or held and any(
+                    held[-1][c].iat[-1] != pdf[c].iat[0] for c in key_cols):
+                yield from emit(held + [pdf.iloc[:cut]])
+                held = []
+            held.append(pdf.iloc[cut:])
+        if held:
+            yield from emit(held)
+
+    return (
+        bucketed.select(*sort_cols, "id")
+        .repartition(*key_cols)
+        .sortWithinPartitions(*sort_cols)
+        .mapInPandas(_gen, f"a {id_type}, b {id_type}")
+        .dropDuplicates(["a", "b"])
     )
 
-    hot_pairs = (
-        tagged.filter(
-            (F.col("_bsz") > hot) & (F.col("id") != F.col("_bmin"))
-        )
-        .select(
-            F.least("id", "_bmin").alias("a"), F.greatest("id", "_bmin").alias("b")
-        )
-    )
-    out = small_pairs.select("a", "b").union(medium_pairs.select("a", "b")).union(hot_pairs)
-    if intra is not None:
-        out = out.union(intra)
-    return out.dropDuplicates(["a", "b"])
+
+# pairs per kernel output frame: one batch of medium buckets (a
+# 1024-rep bucket alone is 523k pairs) never becomes one huge frame
+_PAIR_CHUNK = 1 << 20
+
+
+def _run_starts(pdf, cols) -> np.ndarray:
+    """Mask of the rows of a non-empty ``pdf`` that start a run of ``cols``."""
+    v = [pdf[c].to_numpy() for c in cols]
+    return np.r_[True, np.any([x[1:] != x[:-1] for x in v], axis=0)]
+
+
+def _bucket_pair_ranks(new_bucket, val, rank, hot):
+    """Yield (a, b) id-rank arrays with a < b for rows sorted by
+    (bucket key, val): ``new_bucket`` marks each bucket's first row.
+    See candidate_pairs_from_buckets for the regimes."""
+    rep, rep_new = rank, new_bucket
+    if val is not None:
+        new_grp = new_bucket | np.r_[False, val[1:] != val[:-1]]
+        start = np.flatnonzero(new_grp)
+        rep = np.minimum.reduceat(rank, start)  # min id of each value run
+        member_rep = rep[np.cumsum(new_grp) - 1]
+        star = rank != member_rep
+        yield member_rep[star], rank[star]
+        rep_new = new_bucket[start]
+    start = np.flatnonzero(rep_new)
+    size = np.diff(np.append(start, len(rep)))
+    for k in np.unique(size[size > 1]):
+        first = start[size == k]
+        if k > hot:  # star around each bucket's min rep
+            seg = rep[first[:, None] + np.arange(k)]
+            hub = np.broadcast_to(seg.min(axis=1, keepdims=True), seg.shape)
+            yield hub[seg != hub], seg[seg != hub]
+            continue
+        i, j = np.triu_indices(k, 1)
+        for part in np.array_split(first, -(-len(first) * len(i) // _PAIR_CHUNK)):
+            x, y = rep[part[:, None] + i], rep[part[:, None] + j]
+            keep = x != y
+            yield np.minimum(x, y)[keep], np.maximum(x, y)[keep]
 
 
 # candidate rows per Python-verify task: small enough that a bench-
@@ -374,10 +364,9 @@ def minhash_pairs(
     """Full MinHash tier: (a, b, jaccard) verified near-dup pairs.
 
     Pass a pre-materialized ``sigs`` (e.g. a checkpoint table) to avoid
-    recomputing the signature UDF in each branch of the candidate
-    generator — the plan reuses the bucket table three times (size agg,
-    tag join, hot filter), and an un-materialized UDF upstream would
-    run three times.
+    recomputing the signature UDF in each branch that reads it — the
+    banding and both sides of the estimate filter; an un-materialized
+    UDF upstream would run three times.
     """
     if sigs is None:
         sigs = scoped_persist(minhash_signatures(df, cfg, id_col, text_col))

@@ -13,10 +13,11 @@ q = m - d whole blocks, so keying on every q-block combination
 With m=8, d=3 → C(8,5)=56 keys of 40 bits: at 10^12 rows the expected
 random bucket is small, and real-world phash skew (flat images →
 identical hashes) is exactly the hot-bucket case handled by
-candidate_pairs_from_buckets' star fallback + AQE skew join.
+candidate_pairs_from_buckets' value collapse and star fallback, which
+keep every bucket's work bounded inside the one task that holds it.
 
-Everything here is JVM-side bit arithmetic — no Python at all until
-(optionally) SimHash-from-features for text, which is Arrow-batched.
+Keying and verification are JVM-side bit arithmetic; Python runs only
+in the shared pair kernel and in SimHash-from-features for text.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions import hashing as H
-from ..persistence import scoped_persist
 from .minhash_lsh import candidate_pairs_from_buckets
 
 _NUM_BLOCKS = 8  # m; block width = 64/m = 8 bits
@@ -158,18 +158,11 @@ def phash_hamming_pairs(
     rather than O(k²) pairs (their closure is identical, and a k-clique
     enumeration would be quadratic output at web scale).  Every true
     ≤d pair is connected through emitted verified edges: pigeonhole
-    guarantees bucket sharing, identical phashes star around a
-    distance-0 representative that verification can never sever, and
-    distinct-value representatives go through all-pairs/salted
-    regimes.  The only approximation is a bucket with more than
-    16*cfg.hot_bucket_threshold DISTINCT phash values (star-over-reps;
-    rep edges > d apart are dropped there — see
-    candidate_pairs_from_buckets).  False positives pruned by
-    verify_hamming.
+    guarantees bucket sharing, and candidate_pairs_from_buckets keeps
+    the bucket's pairs connected up to 16*cfg.hot_bucket_threshold
+    DISTINCT phash values.  False positives pruned by verify_hamming.
     """
-    # materialize: the candidate generator consumes the key table in
-    # three branches; without this the keying explode runs three times
-    keys = scoped_persist(hamming_block_keys(df, cfg, id_col, hash_col, scheme, n_rows))
+    keys = hamming_block_keys(df, cfg, id_col, hash_col, scheme, n_rows)
     cands = candidate_pairs_from_buckets(keys, cfg, val_col="_vhash")
     return verify_hamming(cands, df, cfg, id_col, hash_col)
 

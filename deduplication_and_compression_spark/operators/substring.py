@@ -127,9 +127,8 @@ def substring_pairs(
     text_col: str = "caption",
     keys: DataFrame | None = None,
 ) -> DataFrame:
-    """Pass pre-materialized ``keys`` to avoid re-running the winnowing
-    UDF per branch of the candidate generator (see minhash_pairs)."""
+    """``keys``: a precomputed winnow_keys table (e.g. a checkpoint)."""
     if keys is None:
-        keys = scoped_persist(winnow_keys(df, cfg, id_col, text_col))
+        keys = winnow_keys(df, cfg, id_col, text_col)
     cands = candidate_pairs_from_buckets(keys, cfg, val_col="_vhash")
     return verify_substring(cands, df, cfg, id_col, text_col)

@@ -182,6 +182,8 @@ def _parquet_rows(data_dir: Path) -> dict[int, int]:
 
 @dataclass
 class PipelineResult:
+    """Lazy views of ``out_dir``'s checkpoint tables: a later run into
+    that directory under another config or tier set changes their rows."""
     assignments: DataFrame
     savings: DataFrame
     ratio: DataFrame

@@ -1,8 +1,12 @@
-"""Skew regimes of candidate_pairs_from_buckets: plain, salted, star."""
+"""Skew regimes of candidate_pairs_from_buckets: all-pairs and star,
+with and without the value collapse."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
+from hypothesis import given, settings, strategies as st
 
 from deduplication_and_compression_spark.config import DedupConfig
 from deduplication_and_compression_spark.operators.minhash_lsh import (
@@ -11,8 +15,7 @@ from deduplication_and_compression_spark.operators.minhash_lsh import (
 from tests.conftest import pairs_set
 
 
-CFG = DedupConfig(hot_bucket_threshold=16, salt_buckets=4)
-# salt_floor = 16 // 4 = 4
+CFG = DedupConfig(hot_bucket_threshold=16)
 
 
 def _bucket_df(spark, sizes: dict[int, int]):
@@ -37,12 +40,12 @@ def test_small_bucket_all_pairs(spark):
 
 
 def test_salted_medium_bucket_all_pairs_exactly_once(spark):
-    sizes = {2: 10}  # salt_floor(4) < 10 <= hot(16) → salted regime
+    sizes = {2: 10}  # 10 <= hot(16) → all-pairs regime
     df = candidate_pairs_from_buckets(_bucket_df(spark, sizes), CFG)
     pdf = df.toPandas()
     got = pairs_set(pdf)
     assert got == _expected_all_pairs(sizes, 2)
-    assert len(pdf) == len(got)  # exactly once, no salt-induced dups
+    assert len(pdf) == len(got)  # exactly once
 
 
 def test_hot_bucket_star_only(spark):
@@ -89,8 +92,8 @@ def test_hot_bucket_identical_values_star_around_value_rep(spark):
 
 
 def test_hot_bucket_few_distinct_values_is_exact(spark):
-    """40 members, 5 distinct payloads (8 each): reps (5 <= salt_floor
-    exceeded? 5 > 4 → salted regime) get ALL-PAIRS, members get
+    """40 members, 5 distinct payloads (8 each): the 5 reps get
+    ALL-PAIRS, members get
     distance-0 star edges to their value rep — full connectivity, and
     every rep-rep pair present so cross-value true pairs survive any
     verifier."""
@@ -122,3 +125,76 @@ def test_without_val_col_behavior_unchanged(spark):
     sizes = {3: 40}
     pdf = candidate_pairs_from_buckets(_bucket_df(spark, sizes), CFG).toPandas()
     assert len(pdf) == 39 and (pdf["a"] == "k03_m000").all()
+
+
+# ---- the kernel against a transcription of the oracle's pair CTEs
+
+
+def _oracle_pairs(rows, with_val: bool, hot: int) -> set:
+    """The grp/intra/allp/star CTEs of __spark_entry__._minhash_oracle_sql
+    over (id, band_idx, band_hash, val) rows, in plain Python."""
+    groups: dict = {}
+    for i, bi, bh, v in rows:
+        groups.setdefault((bi, bh, v if with_val else i), []).append(i)
+    out, buckets = set(), {}
+    for (bi, bh, _), ids in groups.items():
+        rep = min(ids)
+        out |= {(rep, i) for i in ids if i != rep}  # intra
+        buckets.setdefault((bi, bh), []).append(rep)
+    for reps in buckets.values():
+        if 1 < len(reps) <= hot:  # allp
+            out |= {(x, y) for x in reps for y in reps if x < y}
+        elif len(reps) > hot:  # star
+            out |= {(min(reps), r) for r in reps if r != min(reps)}
+    return out
+
+
+HOT_CFG = DedupConfig(hot_bucket_threshold=2)  # 32 reps with the collapse
+
+
+@given(
+    st.lists(st.tuples(st.integers(0, 59), st.integers(0, 1), st.integers(0, 5)),
+             max_size=120),
+    st.lists(st.integers(0, 3), min_size=60, max_size=60),
+    st.booleans(),
+    st.booleans(),
+)
+@settings(max_examples=12, deadline=None)
+def test_kernel_matches_oracle_ctes(spark, members, vals, with_val, str_ids):
+    """Random bucket tables plus one planted medium bucket (32 distinct
+    values = 16·hot: the largest all-pairs bucket under the collapse)
+    and one hot bucket (41 > 16·hot: star), both holding an identical-
+    value flood.  Arrow batches of 7 rows make buckets span batches."""
+    rows = [(i, bi, bh, vals[i]) for i, bi, bh in members]
+    rows += [(i, 0, 1000, 7 * i) for i in range(100, 131)]
+    rows += [(i, 1, 2000, 7 * i) for i in range(200, 240)]
+    rows += [(i, bi, bh, 5) for bi, bh in ((0, 1000), (1, 2000))
+             for i in range(300, 310)]
+    if str_ids:  # unpadded: "1000" < "99", unlike the integers
+        rows = [(str(i), bi, bh, v) for i, bi, bh, v in rows]
+    pdf = pd.DataFrame(rows, columns=["id", "band_idx", "band_hash", "_vhash"])
+    val_col = "_vhash" if with_val else None
+    hot = HOT_CFG.hot_bucket_threshold * (16 if with_val else 1)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = candidate_pairs_from_buckets(
+            spark.createDataFrame(pdf), HOT_CFG, val_col=val_col).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    assert len(got) == len(set(zip(got["a"], got["b"])))
+    assert set(zip(got["a"], got["b"])) == _oracle_pairs(rows, with_val, hot)
+
+
+def test_kernel_plan_one_python_pass_no_joins(spark):
+    """Between the key table and the final dedupe the plan is an
+    exchange, a sort and ONE MapInPandas: no join of any kind."""
+    members = [(f"m{i:03d}", i % 5) for i in range(40)]
+    df = candidate_pairs_from_buckets(
+        _valued_bucket_df(spark, members), CFG, val_col="_vhash")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"MapInPandas", final)) == 1, final
+    assert not re.search(r"(SortMerge|BroadcastHash|ShuffledHash)Join", final), final

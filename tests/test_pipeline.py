@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import shutil
+
 import numpy as np
 import pytest
 
@@ -169,10 +171,14 @@ def test_connected_components_leaves_session_conf_alone(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_resume_invalidated_by_config_change(spark, images_df, cfg, pipe_result):
-    """A different config fingerprint must NOT reuse checkpoints."""
+def test_resume_invalidated_by_config_change(spark, images_df, cfg, pipe_result,
+                                            tmp_path):
+    """A different config fingerprint must NOT reuse checkpoints.  Runs
+    on a copy of pipe_result's directory: its result frames are views
+    of that directory's tables, which a re-run would overwrite."""
     from dataclasses import replace
-    _, out = pipe_result
+    out = tmp_path / "pipe"
+    shutil.copytree(pipe_result[1], out)
     cfg2 = replace(cfg, hamming_threshold=2, simhash_chunks=3)
     res = run_pipeline(spark, images_df, out, cfg2, tiers=("exact",))
     stage_m = [m for m in res.metrics if m["stage"] == "pairs_exact"]
