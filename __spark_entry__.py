@@ -286,14 +286,14 @@ def _q_simhash_docs(spark, sf):
 def _q_simhash_pairs_docs(spark, sf):
     # doc-level near-dup pairs over the SimHash kernel: the image
     # tier's pigeonhole keying + value collapse reused verbatim on a
-    # (doc_id, simhash) table; scheme pinned so plan-build stays
-    # action-free at any scale.  The simhash UDF output feeds the
-    # keying explode AND both verify joins — persist it or the UDF
-    # recomputes per branch (released by the caller's persist scope)
+    # (doc_id, simhash) table; without a row count the keying uses
+    # d+1 blocks and plan-build stays action-free.  The simhash UDF
+    # output feeds the keying explode AND both verify joins — persist
+    # it or the UDF recomputes per branch (released by the caller's
+    # persist scope)
     sims = scoped_persist(simhash_from_text(_docs(spark, sf)))
-    return phash_hamming_pairs(
-        sims, CFG, id_col="id", hash_col="simhash", scheme="chunk4"
-    ).select("a", "b", "hamming")
+    return phash_hamming_pairs(sims, CFG, id_col="id", hash_col="simhash").select(
+        "a", "b", "hamming")
 
 
 def _q_winnow_pairs_docs(spark, sf):

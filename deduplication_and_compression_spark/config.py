@@ -32,7 +32,6 @@ class DedupConfig:
 
     # --- SimHash over phash-derived image features (§7 step 4) ---
     hamming_threshold: int = 3    # pairs with Hamming(phash) <= d
-    simhash_chunks: int = 4       # pigeonhole: ceil(64/(d+1)) key chunks
 
     # --- Suffix-array exact-substring pass (§7 step 5) ---
     min_substring_len: int = 32   # L: shared verbatim run to count as dup

@@ -64,24 +64,3 @@ def exact_pairs(df: DataFrame, id_col: str = "image_id",
         )
     )
 
-
-def exact_assignments(df: DataFrame, id_col: str = "image_id",
-                      cols: tuple[str, ...] = ("bytes", "caption")) -> DataFrame:
-    """(id, cluster_id=min id per hash group, is_duplicate, representative_id).
-
-    Mirrors the reference's output headers: unique chunk → payload,
-    duplicate → reference to first occurrence
-    (/root/reference/App/Host.cpp:174-190)."""
-    hashed = scoped_persist(
-        with_content_hash(df, cols).select("content_hash", id_col)
-    )
-    reps = hashed.groupBy("content_hash").agg(F.min(id_col).alias("representative_id"))
-    return (
-        hashed.join(reps, "content_hash")
-        .select(
-            F.col(id_col),
-            F.col("representative_id").alias("cluster_id"),
-            (F.col(id_col) != F.col("representative_id")).alias("is_duplicate"),
-            "representative_id",
-        )
-    )

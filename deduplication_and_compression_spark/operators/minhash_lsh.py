@@ -274,13 +274,70 @@ def _bucket_pair_ranks(new_bucket, val, rank, hot):
 _VERIFY_ROWS_PER_TASK = 2048
 
 
-def sized_fanout(joined: DataFrame, n_rows: int, rows_per_task: int = _VERIFY_ROWS_PER_TASK) -> DataFrame:
-    """Repartition a pre-UDF join output to ceil(n_rows/rows_per_task)
+def sized_fanout(joined: DataFrame, n_rows: int) -> DataFrame:
+    """Repartition a pre-UDF join output to ceil(n_rows/_VERIFY_ROWS_PER_TASK)
     partitions, capped at defaultParallelism — the Python stage uses
     every core only when there is enough work to feed every core."""
     par = joined.sparkSession.sparkContext.defaultParallelism
-    parts = max(1, min(par, -(-n_rows // rows_per_task)))
+    parts = max(1, min(par, -(-n_rows // _VERIFY_ROWS_PER_TASK)))
     return joined.repartition(parts)
+
+
+def verify_text_pairs(
+    candidates: DataFrame,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    score,
+    score_col: str | None = None,
+) -> DataFrame:
+    """(a, b[, score_col]) for the candidate pairs whose texts
+    ``score`` keeps (_text_pairs_where): the one text verify of the
+    MinHash and substring tiers.  The candidates are persisted and
+    counted so the pre-UDF fan-out is sized to their actual volume,
+    then each side's text joins in by one hash join."""
+    texts = df.select(F.col(id_col).alias("_tid"), F.col(text_col).alias("_txt"))
+    candidates = scoped_persist(candidates)
+    n_candidates = candidates.count()
+    joined = (
+        candidates.join(texts.withColumnRenamed("_tid", "a").withColumnRenamed("_txt", "_ta"), "a")
+        .join(texts.withColumnRenamed("_tid", "b").withColumnRenamed("_txt", "_tb"), "b")
+    )
+    return _text_pairs_where(sized_fanout(joined, n_candidates), ("a", "b"),
+                             ("_ta", "_tb"), score, score_col)
+
+
+def _text_pairs_where(pairs, key_cols, text_cols, score, score_col=None) -> DataFrame:
+    """(*key_cols[, score_col]) for the rows of ``pairs`` kept by
+    ``score(texts_a, texts_b) -> (keep, value)`` over an Arrow batch's
+    two ``text_cols`` (null → ""); ``value`` fills the double
+    ``score_col``.  The key columns keep their input types.
+
+    ONE mapInPandas node scores and filters in the same Arrow batch.
+    A scalar pandas_udf followed by a filter on its output ran the
+    kernel TWICE per candidate: predicate pushdown copies the UDF into
+    the Filter, so the executed plan held two ArrowEvalPython nodes."""
+    ta, tb = text_cols
+    src = pairs.select(*key_cols, *text_cols)
+    fields = [src.schema[c] for c in key_cols]
+    if score_col:
+        fields.append(T.StructField(score_col, T.DoubleType()))
+
+    def _gen(batches):
+        for pdf in batches:
+            keep, value = score(pdf[ta].fillna("").tolist(), pdf[tb].fillna("").tolist())
+            out = pdf.loc[keep, list(key_cols)]
+            yield out.assign(**{score_col: value[keep]}) if score_col else out
+
+    return src.mapInPandas(_gen, T.StructType(fields))
+
+
+def _jaccard_score(cfg: DedupConfig):
+    def score(texts_a, texts_b):
+        jac = H.jaccard_batch(texts_a, texts_b, cfg.shingle_k)
+        return jac >= cfg.jaccard_threshold, jac
+
+    return score
 
 
 def verify_jaccard(
@@ -289,33 +346,11 @@ def verify_jaccard(
     cfg: DedupConfig = DEFAULT_CONFIG,
     id_col: str = "image_id",
     text_col: str = "caption",
-    n_candidates: int | None = None,
 ) -> DataFrame:
-    """Attach TRUE k-shingle Jaccard to candidate (a,b) pairs and keep
-    those ≥ cfg.jaccard_threshold.  Texts join in via two hash joins;
-    the similarity itself is one Arrow-batched pass over the (small)
-    candidate set (jaccard_at_least).
-
-    The candidate set is materialized (scoped persist + count) so the
-    pre-UDF fan-out is sized to the actual candidate volume — the
-    count costs one pass over an already-computed small table and
-    buys a Python stage whose task count matches its work.  Pass a
-    precomputed ``n_candidates`` to keep plan construction action-free;
-    on a STREAMING candidates frame (count() would raise) the fan-out
-    is skipped entirely — micro-batches carry their own partitioning
-    (ADVICE r3: plan-build must not trigger jobs it can avoid).
-    """
-    texts = df.select(F.col(id_col).alias("_tid"), F.col(text_col).alias("_txt"))
-    if n_candidates is None and not candidates.isStreaming:
-        candidates = scoped_persist(candidates)
-        n_candidates = candidates.count()
-    joined = (
-        candidates.join(texts.withColumnRenamed("_tid", "a").withColumnRenamed("_txt", "_ta"), "a")
-        .join(texts.withColumnRenamed("_tid", "b").withColumnRenamed("_txt", "_tb"), "b")
-    )
-    if n_candidates is not None:
-        joined = sized_fanout(joined, n_candidates)
-    return jaccard_at_least(joined, ("a", "b"), ("_ta", "_tb"), cfg)
+    """(a, b, jaccard) for the candidate pairs whose TRUE k-shingle
+    Jaccard is ≥ cfg.jaccard_threshold (verify_text_pairs)."""
+    return verify_text_pairs(candidates, df, id_col, text_col,
+                             _jaccard_score(cfg), "jaccard")
 
 
 def jaccard_at_least(
@@ -326,32 +361,9 @@ def jaccard_at_least(
 ) -> DataFrame:
     """(*key_cols, jaccard) for the rows of ``pairs`` whose TRUE
     k-shingle Jaccard between the two ``text_cols`` is ≥
-    cfg.jaccard_threshold; the key columns keep their input types.
-
-    Physical shape: ONE mapInPandas node that scores and thresholds in
-    the same Arrow batch (one lexsort+bincount pass per batch, no
-    per-pair Python set ops: functions/hashing.py:jaccard_batch).  A
-    scalar pandas_udf followed by a filter on its output ran the
-    kernel TWICE per candidate: predicate pushdown copies the UDF into
-    the Filter, so the executed plan held two ArrowEvalPython nodes —
-    the same bug minhash_signatures avoids the same way."""
-    k, t = cfg.shingle_k, cfg.jaccard_threshold
-    ta, tb = text_cols
-    src = pairs.select(*key_cols, *text_cols)
-    out_schema = T.StructType(
-        [src.schema[c] for c in key_cols]
-        + [T.StructField("jaccard", T.DoubleType())]
-    )
-
-    def _gen(batches):
-        for pdf in batches:
-            jac = H.jaccard_batch(
-                pdf[ta].fillna("").tolist(), pdf[tb].fillna("").tolist(), k
-            )
-            keep = jac >= t
-            yield pdf.loc[keep, list(key_cols)].assign(jaccard=jac[keep])
-
-    return src.mapInPandas(_gen, out_schema)
+    cfg.jaccard_threshold: one Arrow pass per batch (one lexsort +
+    bincount, no per-pair Python set ops: hashing.jaccard_batch)."""
+    return _text_pairs_where(pairs, key_cols, text_cols, _jaccard_score(cfg), "jaccard")
 
 
 def minhash_pairs(

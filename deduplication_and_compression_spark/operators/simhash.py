@@ -10,7 +10,8 @@ Scale design — generalized pigeonhole (Manku, Jain & Sarma, WWW'07,
 m blocks; any pair within Hamming distance d agrees on at least
 q = m - d whole blocks, so keying on every q-block combination
 (C(m, q) keys of q*64/m bits each) finds all such pairs exactly.
-With m=8, d=3 → C(8,5)=56 keys of 40 bits: at 10^12 rows the expected
+Up to 10^7 rows m = d+1 (d+1 keys of 16 bits at d=3); above, m=8,
+d=3 → C(8,5)=56 keys of 40 bits: at 10^12 rows the expected
 random bucket is small, and real-world phash skew (flat images →
 identical hashes) is exactly the hot-bucket case handled by
 candidate_pairs_from_buckets' value collapse and star fallback, which
@@ -31,18 +32,17 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions import hashing as H
 from .minhash_lsh import candidate_pairs_from_buckets
 
-_NUM_BLOCKS = 8  # m; block width = 64/m = 8 bits
+# Above this row count d+1 blocks of 64/(d+1) bits give fat buckets
+# (n / 2^16 expected members per bucket at d=3), so the keys switch to
+# _NUM_BLOCKS blocks of 8 bits: C(8, 8-d) keys per row of (8-d)*8 bits
+# each — 14x the key volume at d=3, with near-empty buckets at 10^12 rows.
+_FEW_BLOCKS_MAX_ROWS = 10_000_000
+_NUM_BLOCKS = 8
 
 
-def _block(col, i: int):
-    """Extract 8-bit block i of a 64-bit long, JVM-side."""
-    return F.shiftrightunsigned(col, i * 8).bitwiseAND(F.lit(0xFF))
-
-
-# Above this row count the d+1-chunk scheme's 2^16-ary buckets get too
-# fat (n / 2^16 expected members per bucket) and the C(m, m-d) wide-key
-# scheme pays for its 14x key volume with near-empty buckets.
-_CHUNK_SCHEME_MAX_ROWS = 10_000_000
+def _block(col, lo: int, w: int):
+    """Bits [lo, lo+w) of a 64-bit long, JVM-side."""
+    return F.shiftrightunsigned(col, lo).bitwiseAND(F.lit((1 << w) - 1 if w < 64 else -1))
 
 
 def hamming_block_keys(
@@ -50,75 +50,42 @@ def hamming_block_keys(
     cfg: DedupConfig = DEFAULT_CONFIG,
     id_col: str = "image_id",
     hash_col: str = "phash",
-    scheme: str = "auto",
     n_rows: int | None = None,
 ) -> DataFrame:
     """(id, band_idx, band_hash, _vhash): pigeonhole keys for Hamming ≤ d.
 
-    Two EXACT keying schemes (identical no-false-negative guarantee,
-    different bucket geometry — a size-based physical plan choice like
-    a Catalyst CBO pick):
-
-    - ``chunk4``  (d+1 contiguous chunks of 64/(d+1) bits): d bit
-      errors can touch at most d chunks, so ≥1 chunk matches.  Only
-      d+1 keys per row, but each key space is 2^(64/(d+1)) — fat
-      buckets once n outgrows it.  Right below ~10^7 rows.
-    - ``combo56`` (C(m, m-d) combinations of m-d of m=8 byte blocks):
-      any ≤d pair agrees on ≥ m-d whole blocks.  56 keys per row of
-      ~40 bits each — tiny buckets at 10^12 rows; the web-scale plan.
-
-    ``auto`` picks by ``n_rows`` (counted from df if not given —
-    callers holding a cached input should pass it).
+    The 64 bits split into m blocks (64//m bits each, the last block
+    takes the remainder) and every combination of m-d blocks is one key,
+    ``xxhash64(band_idx, *blocks)``: d bit errors touch at most d
+    blocks, so a pair within distance d agrees on some key exactly.
+    m = d+1 (d+1 one-block keys per row) unless ``n_rows`` exceeds
+    10^7, where m = 8 (C(8, 8-d) keys per row) — a size-based physical
+    choice like a Catalyst CBO pick, with the same no-false-negative
+    guarantee either way.  Without ``n_rows`` the few-block keys are
+    used, so plan build never counts ``df``.
     """
     d = cfg.hamming_threshold
-    if scheme == "auto":
-        if n_rows is None:
-            n_rows = df.count()
-        scheme = "chunk4" if n_rows <= _CHUNK_SCHEME_MAX_ROWS else "combo56"
-
-    if scheme == "chunk4":
-        nc = cfg.simhash_chunks
-        if nc < d + 1:
-            raise ValueError(
-                f"simhash_chunks={nc} breaks the pigeonhole guarantee for "
-                f"hamming_threshold={d} (need >= d+1 chunks)"
-            )
-        width = 64 // nc
-        pre = df.select(
-            F.col(id_col).alias("id"),
-            F.col(hash_col).alias("_vhash"),
-        )
-        chunks = []
-        for ci in range(nc):
-            w = width if ci < nc - 1 else 64 - width * (nc - 1)
-            val = F.shiftrightunsigned(F.col("_vhash"), ci * width).bitwiseAND(
-                F.lit((1 << w) - 1)
-            )
-            chunks.append(F.xxhash64(F.lit(ci), val))
-        return pre.select(
-            "id", F.posexplode(F.array(*chunks)).alias("band_idx", "band_hash"),
-            "_vhash",
-        )
-
-    m = _NUM_BLOCKS
-    q = m - d
-    combos = list(combinations(range(m), q))
-    # Two-step select: materialize the 8 block columns once, then hash
+    m = _NUM_BLOCKS if n_rows is not None and n_rows > _FEW_BLOCKS_MAX_ROWS else d + 1
+    width = 64 // m
+    # Two-step select: materialize the block columns once, then hash
     # each combination with ONE variadic xxhash64 — keeps the codegen
-    # tree ~10x smaller than inlining a shift/mask chain per combo.
-    # Also prune to (id, hash) FIRST: never drag the image `bytes`
-    # column through a 56-way explode.
+    # tree ~10x smaller than inlining a shift/mask chain per combo
+    # (at m=8, 400k rows on 4 cores: 1.0-4.4 s vs 9.4-12.8 s; the same
+    # at m=d+1).  Also prune to (id, hash) FIRST: never drag the image `bytes`
+    # column through a C(m, m-d)-way explode.
+    h = F.col(hash_col)
     blocks = df.select(
         F.col(id_col).alias("id"),
-        F.col(hash_col).alias("_vhash"),  # full phash drives value collapse
-        *[_block(F.col(hash_col), i).alias(f"_b{i}") for i in range(m)],
+        h.alias("_vhash"),  # full phash drives value collapse
+        *[_block(h, i * width, width if i < m - 1 else 64 - width * i).alias(f"_b{i}")
+          for i in range(m)],
     )
-    cols = [
+    keys = [
         F.xxhash64(F.lit(ci), *[F.col(f"_b{bi}") for bi in combo])
-        for ci, combo in enumerate(combos)
+        for ci, combo in enumerate(combinations(range(m), m - d))
     ]
     return blocks.select(
-        "id", F.posexplode(F.array(*cols)).alias("band_idx", "band_hash"), "_vhash"
+        "id", F.posexplode(F.array(*keys)).alias("band_idx", "band_hash"), "_vhash"
     )
 
 
@@ -148,7 +115,6 @@ def phash_hamming_pairs(
     cfg: DedupConfig = DEFAULT_CONFIG,
     id_col: str = "image_id",
     hash_col: str = "phash",
-    scheme: str = "auto",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Full image tier: verified (a, b, hamming) edges with Hamming ≤ d.
@@ -162,7 +128,7 @@ def phash_hamming_pairs(
     the bucket's pairs connected up to 16*cfg.hot_bucket_threshold
     DISTINCT phash values.  False positives pruned by verify_hamming.
     """
-    keys = hamming_block_keys(df, cfg, id_col, hash_col, scheme, n_rows)
+    keys = hamming_block_keys(df, cfg, id_col, hash_col, n_rows)
     cands = candidate_pairs_from_buckets(keys, cfg, val_col="_vhash")
     return verify_hamming(cands, df, cfg, id_col, hash_col)
 

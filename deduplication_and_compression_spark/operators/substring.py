@@ -24,8 +24,7 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions import hashing as H
 from ..functions.hashing import u64_to_i64
 from ..functions.text import winnow_fingerprints
-from ..persistence import scoped_persist
-from .minhash_lsh import candidate_pairs_from_buckets, sized_fanout
+from .minhash_lsh import candidate_pairs_from_buckets, verify_text_pairs
 
 
 def winnow_keys(
@@ -66,7 +65,6 @@ def verify_substring(
     cfg: DedupConfig = DEFAULT_CONFIG,
     id_col: str = "image_id",
     text_col: str = "caption",
-    n_candidates: int | None = None,
 ) -> DataFrame:
     """Keep candidate pairs whose sides share a verbatim run of ≥ L
     UTF-8 BYTES.
@@ -83,41 +81,19 @@ def verify_substring(
 
     LCS ≥ L ⟺ the two sides share at least one byte L-gram, so the
     whole Arrow batch is verified with ONE lexsort over L-gram hashes
-    (functions/hashing.py:shared_kgram_batch) — no per-pair Python.
-    The previous implementation ran a per-pair suffix-array +
-    interpreted Kasai LCP loop here; that exact-LCS kernel survives as
-    the brute-force test oracle, while the verify path is now
-    batch-vectorized with an identical keep/drop decision on ASCII
+    (functions/hashing.py:shared_kgram_batch) inside the shared text
+    verify (verify_text_pairs) — no per-pair Python.  The exact-LCS
+    suffix-array + Kasai kernel survives as the brute-force test
+    oracle; the keep/drop decision is identical on ASCII
     (2^-64-per-gram-pair hash-collision caveat, same class as the
     value-collapse caveat).
-
-    Pass ``n_candidates`` to keep plan construction action-free; on a
-    streaming frame the fan-out is skipped (see verify_jaccard).
     """
     L = cfg.min_substring_len
-    texts = df.select(F.col(id_col).alias("_tid"), F.col(text_col).alias("_txt"))
 
-    @F.pandas_udf(T.BooleanType())
-    def _shares_run(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        return pd.Series(
-            H.shared_kgram_batch(ta.fillna("").tolist(), tb.fillna("").tolist(), L)
-        )
+    def score(texts_a, texts_b):
+        return H.shared_kgram_batch(texts_a, texts_b, L), None
 
-    if n_candidates is None and not candidates.isStreaming:
-        candidates = scoped_persist(candidates)
-        n_candidates = candidates.count()
-    joined = (
-        candidates.join(texts.withColumnRenamed("_tid", "a").withColumnRenamed("_txt", "_ta"), "a")
-        .join(texts.withColumnRenamed("_tid", "b").withColumnRenamed("_txt", "_tb"), "b")
-    )
-    # fan out sized to the candidate count (see verify_jaccard note)
-    if n_candidates is not None:
-        joined = sized_fanout(joined, n_candidates)
-    return (
-        joined.withColumn("_hit", _shares_run("_ta", "_tb"))
-        .filter(F.col("_hit"))
-        .select("a", "b")
-    )
+    return verify_text_pairs(candidates, df, id_col, text_col, score)
 
 
 def substring_pairs(

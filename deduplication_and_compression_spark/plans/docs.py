@@ -30,10 +30,10 @@ def docs_tier_pairs(
 ) -> DataFrame:
     """(a, b, tier) candidate-pair union over the requested doc tiers.
 
-    ``n_docs`` feeds the SimHash tier's size-adaptive keying scheme so
-    plan build stays action-free (the caller has usually just counted
-    the corpus to materialize its cache anyway); omitted, the tier
-    pins the chunk4 scheme rather than running a count of its own.
+    ``n_docs`` picks the SimHash tier's block count (d+1 blocks up to
+    10^7 docs, 8 above; the caller has usually just counted the corpus
+    to materialize its cache anyway); omitted, the tier keys d+1
+    blocks.  Plan build runs no count either way.
 
     Caller owns the persist scope: each tier's signatures, key tables
     and pairs are scoped-persisted here, as are the tiers' internal

@@ -107,8 +107,9 @@ def tier_frames(
 ) -> dict[str, DataFrame]:
     """{tier: (a, b) pairs} for each requested tier, in ALL_TIERS order:
     the one place the tiers are written, each output built through
-    ``stage``.  ``n_rows`` feeds the SimHash tier's size-adaptive
-    keying; without it the tier pins chunk4 rather than counting.
+    ``stage``.  ``n_rows`` picks the SimHash tier's block count
+    (hamming_block_keys: d+1 blocks up to 10^7 rows, 8 above); without
+    it the tier keys d+1 blocks and runs no count.
 
     Given ``spark``, the tiers run CONCURRENTLY (for eager, checkpoint-
     writing stages): they are independent jobs over the same cached
@@ -141,9 +142,8 @@ def tier_frames(
             if hash_col is None:
                 src, id_col, hash_col = stage("sig_simhash", lambda: simhash_from_text(
                     t, c.id_col, c.text_col)), "id", "simhash"
-            scheme = "auto" if n_rows is not None else "chunk4"
             return stage("pairs_simhash", lambda: phash_hamming_pairs(
-                src, cfg, id_col, hash_col, scheme, n_rows).select("a", "b"))
+                src, cfg, id_col, hash_col, n_rows).select("a", "b"))
         keys = stage("winnow_keys", lambda: winnow_keys(t, cfg, c.id_col, c.text_col))
         return stage("pairs_substring", lambda: substring_pairs(
             t, cfg, c.id_col, c.text_col, keys=keys).select("a", "b"))
@@ -314,7 +314,7 @@ def run_pipeline(
 
     table = normalize_parallelism(images).persist()
     # ONE job materializes the cache, counts the rows (the simhash
-    # tier's auto keying scheme needs the count, so no tier runs a
+    # tier's block count follows the row count, so no tier runs a
     # count of its own) and fingerprints the input: a checkpoint
     # written from another input is never resumed from.  bit_xor, not
     # sum: Spark 4's ANSI mode fails a sum of xxhash64 on overflow.

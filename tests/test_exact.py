@@ -8,9 +8,10 @@ from pyspark.sql import functions as F
 from deduplication_and_compression_spark.operators.assign import (
     assignments_from_labels, dedup_ratio, payload_bytes, savings,
 )
-from deduplication_and_compression_spark.operators.exact import (
-    exact_assignments, exact_pairs,
+from deduplication_and_compression_spark.operators.components import (
+    connected_components,
 )
+from deduplication_and_compression_spark.operators.exact import exact_pairs
 from tests.conftest import pairs_set, transitive_closure_pairs
 
 
@@ -35,6 +36,13 @@ def test_exact_pairs_match_oracle(images_df, fixture_pdf):
     assert transitive_closure_pairs(got) == oracle
     # and no false positives even before closure
     assert got <= oracle
+
+
+def exact_assignments(images_df):
+    """The pipeline's route to exact-tier assignments: star pairs →
+    connected components → labels joined back onto every row."""
+    labels = connected_components(exact_pairs(images_df).select("a", "b"))
+    return assignments_from_labels(images_df, labels)
 
 
 def test_exact_assignments_first_occurrence_rule(images_df, fixture_pdf):

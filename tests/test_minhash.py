@@ -9,6 +9,7 @@ from deduplication_and_compression_spark.functions import hashing as H
 from deduplication_and_compression_spark.operators.minhash_lsh import (
     band_keys, minhash_pairs, minhash_signatures, verify_jaccard,
 )
+from deduplication_and_compression_spark.operators.substring import verify_substring
 from tests.conftest import executed_python_nodes, pairs_set, transitive_closure_pairs
 
 
@@ -74,20 +75,26 @@ def test_band_count(images_df, cfg):
 
 
 def test_verify_jaccard_runs_the_kernel_once(spark, cfg):
-    """One Python node per verify: a scalar UDF filtered on its own
-    output was copied into the Filter by predicate pushdown, so every
-    candidate was scored by two ArrowEvalPython nodes."""
+    """One Python node per text verify (verify_jaccard and
+    verify_substring): a scalar UDF filtered on its own output was
+    copied into the Filter by predicate pushdown, so every candidate was
+    scored by two ArrowEvalPython nodes."""
     caps = ["a striped cat sits on the warm windowsill watching birds",
             "a striped cat sits on the warm windowsill watching crows",
             "heavy rain over the harbor as fishing boats return home"]
     df = spark.createDataFrame(list(zip(["i0", "i1", "i2"], caps)),
                                "image_id string, caption string")
     cands = spark.createDataFrame([("i0", "i1"), ("i0", "i2")], "a string, b string")
+    for verify, cols in ((verify_jaccard, ["a", "b", "jaccard"]),
+                         (verify_substring, ["a", "b"])):
+        out = verify(cands, df, cfg)
+        nodes = executed_python_nodes(out)
+        assert len(nodes) == 1 and nodes[0].startswith("MapInPandas"), nodes
+        assert out.columns == cols, verify.__name__
+        rows = out.collect()
+        assert [(r["a"], r["b"]) for r in rows] == [("i0", "i1")], verify.__name__
+        assert out.schema["a"].dataType == cands.schema["a"].dataType
     out = verify_jaccard(cands, df, cfg)
-    nodes = executed_python_nodes(out)
-    assert len(nodes) == 1 and "jaccard#" in nodes[0], nodes
-    rows = out.collect()
-    assert [(r["a"], r["b"]) for r in rows] == [("i0", "i1")]
+    assert "jaccard#" in executed_python_nodes(out)[0]
     expect = H.jaccard_batch([caps[0]], [caps[1]], cfg.shingle_k)[0]
-    assert rows[0]["jaccard"] == expect
-    assert out.schema["a"].dataType == cands.schema["a"].dataType
+    assert out.collect()[0]["jaccard"] == expect

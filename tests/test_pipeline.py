@@ -179,7 +179,7 @@ def test_resume_invalidated_by_config_change(spark, images_df, cfg, pipe_result,
     from dataclasses import replace
     out = tmp_path / "pipe"
     shutil.copytree(pipe_result[1], out)
-    cfg2 = replace(cfg, hamming_threshold=2, simhash_chunks=3)
+    cfg2 = replace(cfg, hamming_threshold=2)
     res = run_pipeline(spark, images_df, out, cfg2, tiers=("exact",))
     stage_m = [m for m in res.metrics if m["stage"] == "pairs_exact"]
     assert not stage_m[0]["resumed"]

@@ -7,7 +7,9 @@ import pytest
 
 from deduplication_and_compression_spark.functions import hashing as H
 from deduplication_and_compression_spark.functions.text import lcs_length
-from deduplication_and_compression_spark.operators.simhash import phash_hamming_pairs
+from deduplication_and_compression_spark.operators.simhash import (
+    hamming_block_keys, phash_hamming_pairs,
+)
 from deduplication_and_compression_spark.operators.substring import substring_pairs
 from tests.conftest import pairs_set, transitive_closure_pairs
 
@@ -86,17 +88,42 @@ def test_substring_tier_recall(substring_pairs_got, fixture_pdf, cfg):
 
 
 def test_keying_schemes_equivalent_closures(spark, images_df, cfg, hamming_oracle):
-    """Both exact pigeonhole keying schemes (d+1 chunks vs C(8,5) block
-    combinations) must produce the same verified-edge closure — they are
-    size-based physical plan alternatives, not different detectors."""
+    """Both pigeonhole block geometries (d+1 one-block keys up to 10^7
+    rows, C(8, 8-d) byte-block combinations above) key every row the
+    right number of times and produce the same verified-edge closure —
+    they are size-based physical plan alternatives, not different
+    detectors."""
+    from math import comb
+
     from tests.conftest import transitive_closure_pairs as tc
     want = tc(hamming_oracle)
-    for scheme in ("chunk4", "combo56"):
+    d = cfg.hamming_threshold
+    for n_rows, per_row in ((None, d + 1), (10**8, comb(8, 8 - d))):
+        keys = hamming_block_keys(images_df, cfg, n_rows=n_rows)
+        counts = keys.groupBy("id").count().select("count").distinct().collect()
+        assert [r[0] for r in counts] == [per_row], n_rows
         got = pairs_set(
-            phash_hamming_pairs(images_df, cfg, scheme=scheme).toPandas()
+            phash_hamming_pairs(images_df, cfg, n_rows=n_rows).toPandas()
         )
-        assert got <= hamming_oracle, scheme
-        assert tc(got) == want, scheme
+        assert got <= hamming_oracle, n_rows
+        assert tc(got) == want, n_rows
+
+
+def test_simhash_plan_build_runs_no_job(spark, images_df, cfg):
+    """Without ``n_rows`` the tier keys d+1 blocks and builds its plan
+    without starting a Spark job: it never counts its input."""
+    sc = spark.sparkContext
+    group = "simhash-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        phash_hamming_pairs(images_df, cfg)
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert after == before, sorted(after - before)
 
 
 def test_hot_bucket_far_from_hub_members_not_severed(spark, cfg):
