@@ -23,6 +23,14 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 from ..persistence import register_local_checkpoint, release_local_checkpoint
 from ..session import broadcast_threshold
 
+# Id types whose order Python reproduces exactly, so numpy or Python code
+# over collected ids keeps Spark's < and min(): integers, and plain
+# (UTF8_BINARY-collated) strings — Spark's default string order is the
+# byte order of UTF-8, which equals code-point order, which is exactly
+# Python str comparison.  Any other collation's dtype string is not
+# "string" and falls through to the distributed plan.
+PY_ORDERED_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
+
 
 def _symmetric(edges: DataFrame, parts: int) -> DataFrame:
     """Symmetrized edge list, explicitly hash-partitioned on u.
@@ -136,18 +144,14 @@ def connected_components(
     # materialized), run union-find with min-id roots (bit-identical
     # labels: attaching the larger root under the smaller keeps every
     # root the component minimum, exactly the star fixpoint), and
-    # return a parallelized labels table.  Gated to integral ids and
-    # plain (UTF8_BINARY-collated) strings: Spark's default binary
-    # string order is byte order of UTF-8, which equals code-point
-    # order, which is exactly Python str comparison — so min() agrees
-    # across engines (any other collation's dtype string is not
-    # "string" and falls through).  Nulls cannot reach the solver: the
+    # return a parallelized labels table.  Gated to PY_ORDERED_ID_TYPES, so
+    # min() agrees across engines.  Nulls cannot reach the solver: the
     # a != b filter above drops null-endpoint rows.  Above the gate or
     # for any other id type the distributed rounds below run
     # unchanged.
     if (n_edges <= cfg.cc_local_max_edges
             and n_bytes <= broadcast_threshold(spark)
-            and id_dtype in ("tinyint", "smallint", "int", "bigint", "string")):
+            and id_dtype in PY_ORDERED_ID_TYPES):
         import pandas as pd
 
         pdf = cur.toPandas()

@@ -137,12 +137,13 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame
 def candidate_pairs_from_buckets(
     bucketed: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
     val_col: str | None = None,
 ) -> DataFrame:
     """Skew-aware bucket → candidate (a, b) pairs, a < b in the input id
     type; shared by the LSH, SimHash and substring tiers.
 
+    ``bucketed`` holds (id, band_idx, band_hash[, val_col]); the bucket
+    key is (band_idx, band_hash) in every tier.
     One hash exchange on the bucket key, sortWithinPartitions(key, val),
     ONE mapInPandas walking the sorted key runs in numpy, one (a, b)
     dropDuplicates: a bucket lands whole in one task, and each Arrow
@@ -187,6 +188,7 @@ def candidate_pairs_from_buckets(
     (approximate for ANY hot bucket).  The pair set equals the oracle's
     grp/intra/allp/star CTEs (__spark_entry__._minhash_oracle_sql);
     key and value columns must be non-null (every tier keys on hashes)."""
+    key_cols = ("band_idx", "band_hash")
     hot = cfg.hot_bucket_threshold * (16 if val_col is not None else 1)
     sort_cols = [*key_cols, *([val_col] if val_col is not None else [])]
     id_type = dict(bucketed.dtypes)["id"]

@@ -6,6 +6,12 @@ filters and projections push down to the parquet scan.  The exception
 is the all-pairs Jaccard's direct counting kernel, a numpy mapInPandas
 over a broadcast incidence (bigram_jaccard_pairs_allpairs).
 
+Exact bigram Jaccard has one definition — Jaccard over each doc_id's
+DISTINCT non-null bigram set, the oracle's — and two plans: the direct
+kernel while the incidence fits the broadcast threshold, and the
+prefix-filtered PPJoin plan (bigram_jaccard_pairs) above it.  A doc_id
+spread over several rows (one row per paragraph) is one set.
+
 Each operator has a matching ANSI-SQL oracle in __spark_entry__.py;
 column names and arithmetic ORDER are kept identical on both sides so
 the driver's value-hash comparison is bit-stable (ratios are floored
@@ -21,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..persistence import scoped_broadcast, scoped_persist
 from ..session import broadcast_threshold
+from .components import PY_ORDERED_ID_TYPES
 
 STOPWORDS = ("a", "the", "of", "and", "to", "in", "is")
 
@@ -194,15 +201,16 @@ def word_bigrams(df: DataFrame) -> DataFrame:
 
 
 def bigram_jaccard_pairs_auto(df: DataFrame, threshold_bp: int = 5000) -> DataFrame:
-    """Cost-based choice between the two EXACT Jaccard join plans
+    """Cost-based choice between the two EXACT Jaccard entry points
     (identical output, same oracle):
 
     - prefix-filtered (PPJoin) wins on realistic Zipfian text, where
       most tokens are rare and the prefix self-join prunes candidate
       volume by orders of magnitude;
-    - the naive all-token join wins on tiny-vocabulary corpora (no
-      rare tokens => the prefix filter prunes nothing and its
-      collect/sort/array_intersect overhead is pure loss).
+    - all-pairs counting wins on tiny-vocabulary corpora (no rare
+      tokens => the prefix filter prunes nothing and its
+      collect/sort/array_intersect overhead is pure loss).  It runs
+      the direct kernel under the broadcast gate and PPJoin above it.
 
     The per-bigram frequency table the pick aggregates is the SAME one
     the prefix-filtered plan orders tokens by, so it is computed once
@@ -220,7 +228,7 @@ def bigram_jaccard_pairs_auto(df: DataFrame, threshold_bp: int = 5000) -> DataFr
     LAST_PLAN_PICK = {"plan": pick, "v": v, "d": d, "sumsq": sumsq}
     if pick == "ppjoin":
         return bigram_jaccard_pairs(df, threshold_bp, bg=bg, freq=freq)
-    out, kernel = _allpairs(df, threshold_bp, bg)
+    out, kernel = _allpairs(df, threshold_bp, bg, freq)
     LAST_PLAN_PICK.update(kernel)
     return out
 
@@ -255,36 +263,29 @@ def jaccard_plan_stats(
 # Observability: the last cost-based decision made by
 # bigram_jaccard_pairs_auto in this process, with the stats that drove
 # it — bench.py records it so each BENCH_r{N}.json shows which plan the
-# auto-pick chose per corpus regime.  An allpairs pick also records its
-# counting kernel ("kernel": "direct" | "join") and the incidence bytes
-# that gated it.  Read-only for callers.
+# auto-pick chose per corpus regime.  An allpairs pick also records the
+# kernel that ran ("kernel": "direct" | "ppjoin") and the incidence
+# bytes that gated it.  Read-only for callers.
 LAST_PLAN_PICK: dict | None = None
 
 
-# Estimated allpairs join volume (Σ df(g)² over bigrams) below which
-# the naive join's raw throughput beats ppjoin's extra stages even
-# when a rare-token tail exists.  Calibrated on the r4 bench host
-# (32-core, Zipf fixture): 31M rows → allpairs 6.1s vs ppjoin 13.8s;
-# 280M rows → allpairs 46.2s vs ppjoin 18.6s; log-midpoint ≈ 1e8.
-# RE-VALIDATED post r4 persist-fix (VERDICT r4 "what's wrong" #1 —
-# BENCH_r04's single-shot sweep showed forced-ppjoin 31.8s beating
-# auto-allpairs 47.7s on the driver fixture, suggesting the crossover
-# had moved): best-of-3 INTERLEAVED on the sf0.1 driver docs fixture
-# (931 vocab / 5000 docs / Σdf² = 73.2M) gives allpairs 3.2s vs
-# ppjoin 11.7s — allpairs wins its regime by 3.6×, the r4 flip was
-# host-load drift, and both discriminator rules still route to the
-# measured-faster plan (``bench_extra.py time bigram_jaccard_ppjoin
-# bigram_jaccard_pairs zipf_bigram_ppjoin zipf_bigram_allpairs``
-# reproduces this, repeats interleaved).
+# Estimated all-pairs volume (Σ df(g)² over bigrams, the postings that
+# counting every shared bigram touches) below which all-pairs is picked
+# even when a rare-token tail exists: fixed per-stage overhead then
+# dominates both plans.  First set on a 32-core host against the removed
+# join plan (log-midpoint of 31M and 280M rows).  Re-measured for the
+# direct kernel on 4 vCPU with ``bench_extra.py time zipf_bigram_ppjoin
+# zipf_bigram_allpairs`` (repeats interleaved), both corpora under the
+# 64 MB gate:
+#   Zipf 30k docs, Σdf² 3.45e8, 33.8 MB: direct 10.7 s, PPJoin 11.1 s
+#   (medians of 6);
+#   Zipf 55k docs, Σdf² 1.03e9, 62.0 MB: direct 24.5 s, PPJoin 23.7 s
+#   (medians of 3).
+# The crossover lies between them, so the floor routes both to PPJoin,
+# which is within 4% of the direct kernel at 30k and faster at 55k.
 # On a real cluster this constant only shrinks relative to the data,
 # so at 10^12-row scale the pick degenerates to "ppjoin whenever a
 # rare tail exists" — exactly the published PPJoin guidance.
-# STALE: every allpairs wall above was the join kernel's.  The direct
-# counting kernel (bigram_jaccard_pairs_allpairs) runs the 30k-doc
-# Zipf fixture about 10x faster than the join (BENCH/direct_jaccard.md),
-# so the crossover has moved up for any corpus whose incidence fits
-# the broadcast threshold; it needs a re-pin (the same ``bench_extra.py
-# time`` run) before the number is trusted.
 ALLPAIRS_WORK_FLOOR = 100_000_000
 
 
@@ -296,10 +297,10 @@ def choose_jaccard_plan(
 
     'allpairs' when |vocab| < |docs| (tiny-vocab corpus: every posting
     list is dense, the prefix filter prunes nothing and its overhead
-    is pure loss) OR when the estimated naive join volume Σ df² is
+    is pure loss) OR when the estimated all-pairs volume Σ df² is
     below ALLPAIRS_WORK_FLOOR (small corpus: fixed per-stage overhead
-    dominates both plans and the naive one has fewer stages);
-    'ppjoin' otherwise — a rare-token tail exists AND the naive join
+    dominates both plans);
+    'ppjoin' otherwise — a rare-token tail exists AND the all-pairs
     volume is large enough that pruning it pays."""
     if n_distinct_bigrams < n_docs:
         return "allpairs"
@@ -320,9 +321,10 @@ def bigram_jaccard_pairs(df: DataFrame, threshold_bp: int = 5000,
     |x| − ⌈t·|x|⌉ + 1 tokens, so the self-join runs on the RARE-token
     prefixes only; exact intersections are then computed with
     array_intersect over the candidates.  Output is identical to the
-    naive all-token join (the DuckDB oracle) with candidate volume cut
-    by orders of magnitude on skewed corpora — this is the exact twin
-    of what MinHash/LSH approximates at 10^12 rows.
+    naive all-token join over each doc_id's distinct bigram set (the
+    DuckDB oracle) with candidate volume cut by orders of magnitude on
+    skewed corpora — this is the exact twin of what MinHash/LSH
+    approximates at 10^12 rows.
     """
     t = threshold_bp / 10000.0
     # materialize: bg feeds frequencies, prefixes and the arrays
@@ -366,11 +368,15 @@ def bigram_jaccard_pairs(df: DataFrame, threshold_bp: int = 5000,
     # persisted: referenced three times (prefix explode + both sides of
     # the verify join-back) — unpersisted, each branch re-ran the
     # freq join + collect_list + sort, tripling the plan's real work
+    # array_distinct: a doc_id over several rows repeats bigrams, and
+    # n, the prefix and array_intersect must all see the doc's SET
     docs = scoped_persist(
         bg.join(freqid, "bigram")
         .groupBy("doc_id")
         .agg(
-            F.array_sort(F.collect_list(F.struct("_gf", "_bid"))).alias("_ord"),
+            F.array_distinct(
+                F.array_sort(F.collect_list(F.struct("_gf", "_bid")))
+            ).alias("_ord"),
         )
         .select(
             "doc_id",
@@ -418,78 +424,55 @@ def bigram_jaccard_pairs(df: DataFrame, threshold_bp: int = 5000,
 
 def bigram_jaccard_pairs_allpairs(df: DataFrame, threshold_bp: int = 5000,
                                   bg: DataFrame | None = None) -> DataFrame:
-    """Naive exact variant: every shared bigram counts toward the
-    intersection.  Faster than the prefix-filtered join only on
+    """All-pairs exact variant: every shared bigram is counted, with no
+    prefix filter.  Faster than the prefix-filtered join only on
     degenerate tiny-vocabulary corpora (like the driver fixture: 931
     distinct bigrams, so there are no rare tokens for the prefix
     filter to exploit).  Both produce identical output — use
     bigram_jaccard_pairs_auto for the cost-based pick.
 
-    Two kernels, identical output.  One aggregate over the persisted
-    ``bg`` (the incidence bytes) picks between them:
+    One aggregate over the persisted ``bg`` (the incidence bytes)
+    picks the plan:
 
-    - DIRECT (integral doc_id, incidence bytes within the session's
-      spark.sql.autoBroadcastJoinThreshold): the (doc_id, bigram)
-      incidence is collected once, factorized into posting lists and
-      broadcast, and one mapInPandas counts each probe doc's pairs with
-      np.bincount on dense doc indices (_count_block_pairs).  No join
-      rows exist at all: shuffling and hash-aggregating them — one row
-      per shared bigram, 172M on the 30k-doc Zipf fixture, with
-      ~24 GB spilled — was the join kernel's dominant cost, and doc
-      indices from factorizing make the keys dense small integers,
+    - DIRECT (integral or string doc_id, incidence bytes within the
+      session's spark.sql.autoBroadcastJoinThreshold): the (doc_id,
+      bigram) incidence is collected once, factorized into posting
+      lists and broadcast, and one mapInPandas counts each probe doc's
+      pairs with np.bincount on dense doc indices (_count_block_pairs).
+      No join rows exist at all: shuffling and hash-aggregating them —
+      one row per shared bigram, 172M on the 30k-doc Zipf fixture,
+      with ~24 GB spilled — was the old join plan's dominant cost, and
+      doc indices from factorizing make the keys dense small integers,
       where direct addressing beats any hash table.
-    - JOIN (any other id type, a larger incidence, or the threshold at
-      -1): self-join on the bigram, hash-aggregate the count per
-      (a, b) doc-id pair."""
+    - PPJOIN (any other id type, a larger incidence, or the threshold
+      at -1): bigram_jaccard_pairs, which prunes the Σ df² join rows
+      that counting every shared bigram would materialize."""
     return _allpairs(df, threshold_bp, bg)[0]
 
 
-_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
-
-
-def _allpairs(df: DataFrame, threshold_bp: int, bg: DataFrame | None
-              ) -> tuple[DataFrame, dict]:
+def _allpairs(df: DataFrame, threshold_bp: int, bg: DataFrame | None,
+              freq: DataFrame | None = None) -> tuple[DataFrame, dict]:
     """bigram_jaccard_pairs_allpairs plus which kernel ran:
-    {"kernel": "direct" | "join", "incidence_bytes": int | None}."""
+    {"kernel": "direct" | "ppjoin", "incidence_bytes": int | None}.
+    ``freq`` is handed to the PPJoin plan when it runs."""
     if bg is None:
         bg = scoped_persist(word_bigrams(df))
     id_type = dict(bg.dtypes)["doc_id"]
     nbytes = None
-    if id_type in _INTEGRAL:
-        # null-id rows never pair (the join's a < b drops them);
-        # bytes: an 8-byte id and a 4-byte Arrow offset per row plus the
-        # bigram's UTF-8 bytes — the collected incidence's size
+    if id_type in PY_ORDERED_ID_TYPES:
+        # null-id rows never pair; bytes: per row the bigram's UTF-8 bytes
+        # and a 4-byte Arrow offset, plus an 8-byte id — or a string id's
+        # UTF-8 bytes and a second offset — the collected incidence's size
+        id_bytes = (F.octet_length("doc_id") + F.lit(4) if id_type == "string"
+                    else F.lit(8))
+        row_bytes = id_bytes + F.lit(4) + F.coalesce(F.octet_length("bigram"), F.lit(0))
         nbytes = bg.where(F.col("doc_id").isNotNull()).agg(
-            F.count(F.lit(1)) * F.lit(12)
-            + F.coalesce(F.sum(F.octet_length("bigram")), F.lit(0)),
-        ).first()[0]
+            F.coalesce(F.sum(row_bytes), F.lit(0))).first()[0]
         if nbytes <= broadcast_threshold(bg.sparkSession):
             return (_direct_allpairs(bg, id_type, threshold_bp),
                     {"kernel": "direct", "incidence_bytes": nbytes})
-    sizes = bg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    pairs = (
-        bg.alias("x")
-        .join(bg.alias("y"), "bigram")
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-    )
-    inter = (
-        pairs.groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
-        .select(
-            "a", "b",
-            F.floor(
-                F.col("i").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("i")).cast("double")
-                * F.lit(10000.0)
-            ).cast("long").alias("jaccard_bp"),
-        )
-        .where(F.col("jaccard_bp") >= threshold_bp)
-    )
-    return out, {"kernel": "join", "incidence_bytes": nbytes}
+    return (bigram_jaccard_pairs(df, threshold_bp, bg=bg, freq=freq),
+            {"kernel": "ppjoin", "incidence_bytes": nbytes})
 
 
 # Direct-kernel sizing.  A dense block of probe docs counts into
@@ -517,9 +500,6 @@ def _direct_allpairs(bg: DataFrame, id_type: str, threshold_bp: int) -> DataFram
                          -(-total // _TASK_VOLUME)))
     cuts = np.searchsorted(vol, np.arange(1, n_tasks) * (total / n_tasks))
     bounds = np.concatenate(([0], cuts, [len(vol) - 1])).tolist()
-    # the join raises on a zero Jaccard denominator under ANSI (only
-    # duplicate doc_id rows can make one); the kernel does the same
-    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
     bc = scoped_broadcast(spark, inc)
 
     def run(batches):
@@ -527,35 +507,42 @@ def _direct_allpairs(bg: DataFrame, id_type: str, threshold_bp: int) -> DataFram
         for batch in batches:
             for t in batch["id"].tolist():
                 yield from _count_block_pairs(inc, bounds[t], bounds[t + 1],
-                                              threshold_bp, ansi)
+                                              threshold_bp)
 
     return spark.range(n_tasks, numPartitions=n_tasks).mapInPandas(
         run, f"a {id_type}, b {id_type}, jaccard_bp bigint")
 
 
 def _factorize_incidence(doc_id: np.ndarray, bigram: pd.Series):
-    """(doc_id, bigram) incidence rows → the direct kernel's arrays
-    (ids, sizes, doc_ptr, start, length, post_docs) and the gathered
-    volume before each doc (length D + 1).
+    """(doc_id, bigram) incidence rows with non-null ids (integral or
+    string) → the direct kernel's arrays (ids, sizes, doc_ptr, start,
+    length, post_docs) and the gathered volume before each doc (length
+    D + 1).
 
     Docs become indices 0..D-1 in id order, so a < b on ids is a < b on
-    indices (negative, sparse or ≥ 2^31 ids need no special case).
-    Postings list each bigram's doc indices ascending, duplicates kept
-    (duplicate doc_id rows count as often as the join counts them).
-    Entry k is the k-th (doc, bigram) row in doc order; doc d owns
-    entries doc_ptr[d]..doc_ptr[d+1]-1, and entry k gathers
+    indices (negative, sparse or ≥ 2^31 ids need no special case; a
+    string id sorts as Python str, which is Spark's UTF-8 binary
+    order).  Each doc is its SET of non-null bigrams: null bigrams and
+    repeated (doc, bigram) rows — a doc_id over several rows — are
+    dropped, so sizes count distinct bigrams and postings list each
+    bigram's doc indices ascending, once each.  Entry k is the k-th
+    (doc, bigram) pair in doc order; doc d owns entries
+    doc_ptr[d]..doc_ptr[d+1]-1, and entry k gathers
     post_docs[start[k]:start[k] + length[k]] — the bigram's postings
     past the doc, so b ≤ a is never gathered."""
-    ids, doc = np.unique(doc_id, return_inverse=True)
+    # pd.factorize hashes; np.unique over an object array would sort
+    # every row with Python compares
+    doc, ids = pd.factorize(doc_id, sort=True)
     code = pd.factorize(bigram)[0]
     D = len(ids)
-    # sizes count every row of a doc (the join's groupBy); a null
-    # bigram joins nothing, so it stays out of the postings
-    sizes = np.bincount(doc, minlength=D)
     doc, code = doc[code >= 0], code[code >= 0]
     o = np.lexsort((doc, code))
-    post_docs = doc[o].astype(np.int32)
-    post_key = code[o].astype(np.int64) * D + post_docs  # sorted
+    doc, code = doc[o], code[o]
+    post_key = code.astype(np.int64) * D + doc  # sorted
+    first = np.diff(post_key, prepend=-1) != 0
+    doc, code, post_key = doc[first], code[first], post_key[first]
+    sizes = np.bincount(doc, minlength=D)
+    post_docs = doc.astype(np.int32)
     post_end = np.cumsum(np.bincount(code))
     o = np.argsort(doc, kind="stable")
     a, g = doc[o], code[o]
@@ -579,16 +566,15 @@ def _spans(cum, cap: int, max_items: int):
         s = e
 
 
-def _count_block_pairs(inc, lo: int, hi: int, threshold_bp: int,
-                       ansi: bool):
+def _count_block_pairs(inc, lo: int, hi: int, threshold_bp: int):
     """The direct kernel's task half: (a, b, jaccard_bp) frames for the
     probe docs with indices lo..hi-1 against every later doc, at or
     above the threshold.  Per block of probe docs, the postings past
     each doc are gathered as keys a_local·D + b and counted — with
     np.bincount into block × D counters, or by sorting when D is too
     large for a useful dense block.  The count i of a pair is the
-    number of (shared bigram occurrence) matches, exactly the join's
-    row count, and jaccard_bp is the join's double arithmetic."""
+    number of bigrams the two sets share, and jaccard_bp is the
+    oracle's double arithmetic."""
     ids, sizes, doc_ptr, start, length, post_docs = inc
     D = len(ids)
     block = _COUNTER_BUDGET // max(D, 1)
@@ -616,7 +602,7 @@ def _count_block_pairs(inc, lo: int, hi: int, threshold_bp: int,
         if dense:
             if acc is None:
                 continue
-            # bp ≥ T needs i·(10⁴ + T) ≥ T·(na + nb) ≥ T·na (den > 0),
+            # bp ≥ T needs i·(10⁴ + T) ≥ T·(na + nb) ≥ T·na,
             # so a row's counters below ceil(T·na / (10⁴ + T)) cannot
             # pass; the scan then touches few counters, not all of them
             t = max(threshold_bp, 0)
@@ -637,13 +623,10 @@ def _count_block_pairs(inc, lo: int, hi: int, threshold_bp: int,
             key, i = key[first], np.add.reduceat(i, first)
         a = lo + s + key // D
         b = key % D
+        # sets: i ≤ min(na, nb), so na + nb - i ≥ max(na, nb) ≥ 1
         den = sizes[a] + sizes[b] - i
-        with np.errstate(divide="ignore", invalid="ignore"):
-            bp = np.floor(i.astype(np.float64) / den.astype(np.float64) * 10000.0)
-        if ansi and not den.all():
-            raise ZeroDivisionError("[DIVIDE_BY_ZERO] Jaccard denominator "
-                                    "na + nb - i is 0")
-        keep = (den != 0) & (bp >= threshold_bp)
+        bp = np.floor(i.astype(np.float64) / den.astype(np.float64) * 10000.0)
+        keep = bp >= threshold_bp
         if keep.any():
             yield pd.DataFrame({"a": ids[a[keep]], "b": ids[b[keep]],
                                 "jaccard_bp": bp[keep].astype(np.int64)})

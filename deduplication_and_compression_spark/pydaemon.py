@@ -24,10 +24,11 @@ is inherited copy-on-write by every worker for free:
 Wired in session.py via ``spark.python.daemon.module``; the module
 resolves exactly like the engine package itself (workers run with the
 driver's cwd on local mode, and on a cluster the package ships with
-the job).  ``SPARK_GRAFT_PY_DAEMON=`` (empty) runs the stock daemon and
-so turns both fixes off.  Import failures fall through to a bare
-daemon rather than breaking worker spawn — preloading is an
-optimization, never a correctness dependency.
+the job).  ``build_session(extra_conf={"spark.python.daemon.module":
+"pyspark.daemon"})`` runs the stock daemon and so turns both fixes off.
+Import failures fall through to a bare daemon rather than breaking
+worker spawn — preloading is an optimization, never a correctness
+dependency.
 """
 
 from __future__ import annotations

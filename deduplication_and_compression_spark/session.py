@@ -94,20 +94,18 @@ def build_session(
     # any task ships py-files, so on an executor where the package is
     # not installed the import would kill worker spawn outright (r7
     # code review) — the guard keeps the conf safe to copy into a
-    # cluster submit.  SPARK_GRAFT_PY_DAEMON= (empty) runs the stock
-    # daemon, which turns off both the preload and the zip fix.
+    # cluster submit.  extra_conf={"spark.python.daemon.module":
+    # "pyspark.daemon"} runs the stock daemon, which turns off both the
+    # preload and the zip fix.
     import importlib.util
 
-    daemon_mod = os.environ.get(
-        "SPARK_GRAFT_PY_DAEMON", "deduplication_and_compression_spark.pydaemon"
-    )
-    if daemon_mod:
-        try:
-            spec = importlib.util.find_spec(daemon_mod)
-        except (ImportError, ModuleNotFoundError, ValueError):
-            spec = None
-        if spec is not None:
-            builder = builder.config("spark.python.daemon.module", daemon_mod)
+    daemon_mod = "deduplication_and_compression_spark.pydaemon"
+    try:
+        spec = importlib.util.find_spec(daemon_mod)
+    except (ImportError, ModuleNotFoundError, ValueError):
+        spec = None
+    if spec is not None:
+        builder = builder.config("spark.python.daemon.module", daemon_mod)
     # Driver importability is NOT worker importability: the driver finds
     # the package through its script's directory, a local[N] worker
     # only through its PYTHONPATH and the JVM's cwd, so without this a

@@ -179,6 +179,54 @@ def test_minhash_oracle_on_adversarial_table(spark):
     assert not any(5 in p or 6 in p for p in got)
 
 
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_bigram_jaccard_oracle_on_adversarial_table(spark, id_type):
+    """The sf0.01 fixture has unique doc_ids, so the gate never sees a
+    doc stored over several rows.  Here one doc repeats an identical
+    row, others are split into paragraph rows that repeat bigrams, and
+    null ids, null and empty texts and one-word texts ride along.  The
+    oracle's Jaccard is over each doc_id's DISTINCT bigram set; every
+    exact entry point must equal it, under the broadcast gate (direct
+    kernel) and with broadcasting off (PPJoin)."""
+    import duckdb
+    from deduplication_and_compression_spark.operators import textops
+
+    fox = "the quick brown fox jumps over the lazy dog"
+    rows = [
+        (-7, fox), (-7, fox), (1, fox),                  # identical rows
+        (2, "the quick brown fox"), (2, "jumps over the lazy dog"),
+        (3, "the quick brown fox jumps"), (3, "the quick brown fox"),
+        (4, "over the lazy dog"), (4, "over the lazy dog sleeps"),
+        (None, fox), (None, "over the lazy dog"),        # null ids
+        (5, None), (6, ""), (8, "fox"), (8, "dog"),       # no bigrams
+        (9, "  the   quick brown  "), (12, "quick brown"),
+    ]
+    if id_type == "string":
+        # decimal text sorts unlike the integers; "é" sorts after ASCII
+        rows = [(None if d is None else "é" if d == 12 else str(d), t)
+                for d, t in rows]
+    docs = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"])
+                 .astype({"doc_id": "Int64" if id_type == "bigint" else object}))
+    want = {tuple(r) for r in
+            con.sql(entrymod.oracle_sql()["bigram_jaccard_pairs"]).fetchall()}
+    assert want and all(bp <= 10000 for _, _, bp in want)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        for threshold in (prev, "-1"):
+            spark.conf.set(key, threshold)
+            for plan in (textops.bigram_jaccard_pairs_auto,
+                         textops.bigram_jaccard_pairs,
+                         textops.bigram_jaccard_pairs_allpairs):
+                got = {tuple(r) for r in plan(docs, 5000).collect()}
+                assert got == want, (threshold, plan.__name__,
+                                     sorted(got ^ want))
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_rows_only_queries_run(spark):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

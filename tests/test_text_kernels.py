@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import io
 import math
-from contextlib import contextmanager, redirect_stdout
+from contextlib import contextmanager, nullcontext, redirect_stdout
 
 import numpy as np
 import pytest
@@ -152,9 +152,9 @@ def test_zipf_plans_agree_and_find_planted_pairs(spark):
 
 
 @contextmanager
-def _join_kernel(spark):
-    """Turn broadcasting off, which sends the all-pairs Jaccard to its
-    join kernel; the prior threshold is restored afterwards."""
+def _above_gate(spark):
+    """Turn broadcasting off, which sends the all-pairs Jaccard to the
+    PPJoin plan; the prior threshold is restored afterwards."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -172,23 +172,29 @@ def _plan(df) -> str:
 
 
 def _edge_docs(spark, id_type: str):
-    """Null and duplicate doc_id rows, null/empty/one-word texts,
-    negative ids and (bigint) ids past 2^31; no pair's Jaccard
-    denominator is 0."""
-    big = 1 << 33 if id_type == "bigint" else 1 << 30
+    """Null and duplicate doc_id rows (identical and paragraph rows),
+    null/empty/one-word texts, negative ids and (bigint, string) ids
+    past 2^31; string ids are the integers' decimal text, whose order
+    is not the integers'."""
+    big = 1 << 30 if id_type == "int" else 1 << 33
     rows = [
         (None, "a b c"), (1, "a b c"), (1, "a b c"), (2, "a b c d"),
         (3, None), (4, ""), (5, "x"), (-7, "a b c"), (big, "a b c d"),
         (6, "  a  b  "), (7, "b c"), (-(big + 1), "c d e"), (9, "c d e f"),
+        (10, "a b c"), (10, "d e f"),
     ]
+    if id_type == "string":
+        rows = [(None if d is None else str(d), t) for d, t in rows]
     return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
 
 
-@pytest.mark.parametrize("corpus", ["zipf", "edge_bigint", "edge_int", "empty"])
+@pytest.mark.parametrize("corpus", ["zipf", "edge_bigint", "edge_int",
+                                    "edge_string", "empty"])
 @pytest.mark.parametrize("threshold_bp", [1, 5000])
 def test_allpairs_direct_kernel_matches_join(spark, corpus, threshold_bp):
-    """The direct-addressed counting kernel and the join + hash
-    aggregate kernel give the same rows, values and column types."""
+    """The direct-addressed counting kernel and the PPJoin plan it
+    hands off to above the broadcast gate give the same rows, values
+    and column types."""
     from deduplication_and_compression_spark.fixtures.generator import (
         generate_zipf_docs,
     )
@@ -210,63 +216,68 @@ def test_allpairs_direct_kernel_matches_join(spark, corpus, threshold_bp):
         return set(rows), out.dtypes, _plan(out)
 
     direct, direct_types, direct_plan = run()
-    with _join_kernel(spark):
+    with _above_gate(spark):
         joined, join_types, join_plan = run()
     assert "MapInPandas" in direct_plan and "MapInPandas" not in join_plan
     assert direct == joined
     assert direct_types == join_types
     assert (len(direct) > 0) == (corpus != "empty")
+    assert all(bp <= 10000 for _, _, bp in direct)
 
 
 def test_allpairs_direct_kernel_plan(spark):
-    """Integral ids take the direct kernel: one MapInPandas and no join
-    on the bigram.  String ids take the join."""
+    """Integral and string ids take the direct kernel under the gate:
+    one MapInPandas and no join on the bigram.  Threshold -1 takes the
+    PPJoin plan, with no MapInPandas."""
     from deduplication_and_compression_spark.operators.textops import (
         bigram_jaccard_pairs_allpairs,
     )
 
     docs = _edge_docs(spark, "bigint")
-    plan = _plan(bigram_jaccard_pairs_allpairs(docs))
-    assert plan.count("MapInPandas") == 1, plan
-    assert "Join" not in plan and "bigram" not in plan, plan
     as_str = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
-    plan = _plan(bigram_jaccard_pairs_allpairs(as_str))
-    assert "MapInPandas" not in plan and "Join" in plan, plan
+    for d in (docs, as_str):
+        plan = _plan(bigram_jaccard_pairs_allpairs(d))
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Join" not in plan and "bigram" not in plan, plan
+        with _above_gate(spark):
+            plan = _plan(bigram_jaccard_pairs_allpairs(d))
+        assert "MapInPandas" not in plan and "array_intersect" in plan, plan
 
 
-def test_allpairs_zero_denominator_raises_like_join(spark):
-    """Duplicate doc_id rows can make na + nb - i zero; under ANSI the
-    join raises DIVIDE_BY_ZERO, and the direct kernel raises too."""
+def test_allpairs_duplicate_rows_bounded_jaccard(spark):
+    """Duplicate doc_id rows are one set per doc: under ANSI no plan
+    divides by zero, and no jaccard_bp exceeds 10000."""
     from deduplication_and_compression_spark.operators.textops import (
-        bigram_jaccard_pairs_allpairs,
+        bigram_jaccard_pairs, bigram_jaccard_pairs_allpairs,
+        bigram_jaccard_pairs_auto,
     )
 
+    assert spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
     docs = spark.createDataFrame([(1, "a b"), (1, "a b"), (2, "a b"), (2, "a b")],
                                  "doc_id bigint, text string")
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        bigram_jaccard_pairs_allpairs(docs, 0).collect()
-    with _join_kernel(spark), pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        bigram_jaccard_pairs_allpairs(docs, 0).collect()
+    for gate in (nullcontext, _above_gate):
+        for plan in (bigram_jaccard_pairs_allpairs, bigram_jaccard_pairs,
+                     bigram_jaccard_pairs_auto):
+            with gate(spark):
+                got = {tuple(r) for r in plan(docs, 0).collect()}
+            assert got == {(1, 2, 10000)}, (gate, plan)
 
 
 def _naive_pairs(doc_ids, bigrams, threshold_bp):
-    """Reference for the direct kernel: the join's counts, pair by pair."""
-    from collections import Counter
-
-    sizes = Counter(doc_ids)
-    bags: dict = {}
+    """Reference for the direct kernel: Jaccard over each doc's set of
+    non-null bigrams, pair by pair."""
+    sets: dict = {}
     for d, g in zip(doc_ids, bigrams):
         if g is not None:
-            bags.setdefault(d, Counter())[g] += 1
+            sets.setdefault(d, set()).add(g)
     out = set()
-    docs = sorted(bags)
+    docs = sorted(sets)
     for x, a in enumerate(docs):
         for b in docs[x + 1:]:
-            i = sum(c * bags[b][g] for g, c in bags[a].items())
-            den = sizes[a] + sizes[b] - i
-            if i == 0 or den == 0:
+            i = len(sets[a] & sets[b])
+            if i == 0:
                 continue
-            bp = math.floor(float(i) / float(den) * 10000.0)
+            bp = math.floor(float(i) / float(len(sets[a] | sets[b])) * 10000.0)
             if bp >= threshold_bp:
                 out.add((a, b, bp))
     return out
@@ -307,7 +318,7 @@ def test_count_block_pairs_matches_naive(rows, threshold_bp, n_tasks, sizing):
         cuts = np.linspace(0, len(vol) - 1, n_tasks + 1).astype(int).tolist()
         got = []
         for lo, hi in zip(cuts, cuts[1:]):
-            for f in textops._count_block_pairs(inc, lo, hi, threshold_bp, False):
+            for f in textops._count_block_pairs(inc, lo, hi, threshold_bp):
                 got += list(f.itertuples(index=False, name=None))
     finally:
         for n, v in zip(names, old):
