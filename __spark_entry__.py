@@ -33,6 +33,7 @@ from deduplication_and_compression_spark.config import DEFAULT_CONFIG as CFG
 from deduplication_and_compression_spark.operators import textops
 from deduplication_and_compression_spark.operators.assign import (
     assignments_from_labels, elect_representatives, leakage_safe_split,
+    payload_bytes, savings,
 )
 from deduplication_and_compression_spark.operators.components import (
     connected_components,
@@ -202,9 +203,9 @@ def _cc_labels(spark, sf):
 
 
 def _q_bigram_jaccard(spark, sf):
-    # cost-based plan pick (allpairs on this tiny-vocab corpus,
-    # prefix-filtered PPJoin on Zipfian text) — both oracled against
-    # the SAME SQL (identical semantics)
+    # the exact entry: the direct kernel under the broadcast gate (this
+    # corpus), PPJoin above it; bigram_jaccard_ppjoin runs PPJoin here,
+    # and both are oracled against the SAME SQL
     return _bigram_pairs(spark, sf)
 
 
@@ -245,22 +246,16 @@ def _q_quality_reps(spark, sf):
 
 
 def _q_cluster_savings(spark, sf):
+    """The engine's savings operator over the bigram near-dup clusters,
+    with n_chars as each doc's payload.  payload_bytes counts a NULL
+    n_chars as 0 where the oracle's sum skips it; the fixtures hold no
+    NULL n_chars."""
     docs = _docs(spark, sf)
     asg = assignments_from_labels(docs, _cc_labels(spark, sf),
                                   id_col="doc_id")
-    joined = asg.join(docs.select("doc_id", "n_chars"), "doc_id")
-    return (
-        joined.groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("members"),
-            F.sum("n_chars").alias("chars_total"),
-            (
-                F.sum("n_chars")
-                - F.max(F.when(~F.col("is_duplicate"), F.col("n_chars")))
-            ).cast("long").alias("chars_saved"),
-        )
-        .where(F.col("members") > 1)
-    )
+    out = savings(asg, payload_bytes(docs, "doc_id", "n_chars"), "doc_id")
+    return out.withColumnsRenamed({"bytes_total": "chars_total",
+                                   "bytes_saved": "chars_saved"})
 
 
 def _q_cosine_stats(spark, sf):

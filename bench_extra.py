@@ -15,9 +15,11 @@ The noop sink computes every column of every row and discards it
 (guide §1.4), so these walls time the computation, not the sink or the
 driver-side count() pruning.  ``time`` runs repeat r of every named
 query before repeat r+1 of any, so host-load drift hits each query
-alike: ``time bigram_jaccard_ppjoin bigram_jaccard_pairs
-zipf_bigram_ppjoin zipf_bigram_allpairs`` is the A/B behind
-textops.ALLPAIRS_WORK_FLOOR.
+alike, and gives each repeat its own job group, so every wall is
+printed with the Spark jobs its query ran (plan-build jobs included):
+``time bigram_jaccard_ppjoin bigram_jaccard_pairs zipf_bigram_ppjoin
+zipf_bigram_allpairs`` is the PPJoin vs exact-entry A/B on both
+corpora.
 """
 
 from __future__ import annotations
@@ -130,17 +132,20 @@ def cmd_time(names: list[str], repeats: int = 3) -> None:
     spark = _spark()
     builders = _builders(spark, names)
     walls: dict[str, list[float]] = {name: [] for name in builders}
+    jobs: dict[str, list[int]] = {name: [] for name in builders}
+    tracker = spark.sparkContext.statusTracker()
     for r in range(repeats):
         for name, build in builders.items():
-            spark.sparkContext.setJobDescription(f"extra:{name}")
+            group = f"extra:{name}:{r}"
+            spark.sparkContext.setJobGroup(group, group)
             t0 = time.perf_counter()
             with persist_scope():
                 build().write.format("noop").mode("overwrite").save()
             walls[name].append(round(time.perf_counter() - t0, 3))
-            print(json.dumps({"query": name, "repeat": r,
-                              "wall": walls[name][-1]}), flush=True)
-    spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"metric": "noop_walls", "walls": walls,
+            jobs[name].append(len(tracker.getJobIdsForGroup(group)))
+            print(json.dumps({"query": name, "repeat": r, "wall": walls[name][-1],
+                              "jobs": jobs[name][-1]}), flush=True)
+    print(json.dumps({"metric": "noop_walls", "walls": walls, "jobs": jobs,
                       "best": {n: min(w) for n, w in walls.items()}}))
     spark.stop()
 

@@ -290,8 +290,8 @@ def generate_zipf_docs(
     docs: (doc_id:int64, text:string).  truth_pairs: (a, b) planted
     near-dup pairs (word substitutions keeping word-bigram Jaccard
     well above 0.5).  vocab_size defaults to 8×n_docs so distinct
-    bigrams ≫ docs, which is both the Zipf-text reality and what flips
-    bigram_jaccard_pairs_auto's discriminator to the prefix plan.
+    bigrams ≫ docs, which is both the Zipf-text reality and what
+    choose_jaccard_plan labels the prefix plan's regime.
     """
     rng = np.random.default_rng(seed)
     if vocab_size is None:

@@ -3,14 +3,16 @@
 fingerprinting, n-gram similarity) expressed as pure DataFrame plans —
 all but one stay inside whole-stage codegen (no Python UDFs), so
 filters and projections push down to the parquet scan.  The exception
-is the all-pairs Jaccard's direct counting kernel, a numpy mapInPandas
-over a broadcast incidence (bigram_jaccard_pairs_allpairs).
+is the exact Jaccard's direct counting kernel, a numpy mapInPandas
+over a broadcast incidence.
 
 Exact bigram Jaccard has one definition — Jaccard over each doc_id's
-DISTINCT non-null bigram set, the oracle's — and two plans: the direct
-kernel while the incidence fits the broadcast threshold, and the
-prefix-filtered PPJoin plan (bigram_jaccard_pairs) above it.  A doc_id
-spread over several rows (one row per paragraph) is one set.
+DISTINCT non-null bigram set, the oracle's — and one entry,
+bigram_jaccard_pairs_auto (also named bigram_jaccard_pairs_allpairs),
+whose only plan choice is the broadcast gate: the direct kernel while
+the incidence fits the broadcast threshold, the prefix-filtered PPJoin
+plan (bigram_jaccard_pairs, also callable on its own) above it.  A
+doc_id spread over several rows (one row per paragraph) is one set.
 
 Each operator has a matching ANSI-SQL oracle in __spark_entry__.py;
 column names and arithmetic ORDER are kept identical on both sides so
@@ -201,53 +203,65 @@ def word_bigrams(df: DataFrame) -> DataFrame:
 
 
 def bigram_jaccard_pairs_auto(df: DataFrame, threshold_bp: int = 5000) -> DataFrame:
-    """Cost-based choice between the two EXACT Jaccard entry points
-    (identical output, same oracle):
+    """(a, b, jaccard_bp): the exact bigram-Jaccard entry, word-bigram
+    Jaccard ≥ threshold over each doc_id's distinct bigram set, a<b.
+    Also named bigram_jaccard_pairs_allpairs.
 
-    - prefix-filtered (PPJoin) wins on realistic Zipfian text, where
-      most tokens are rare and the prefix self-join prunes candidate
-      volume by orders of magnitude;
-    - all-pairs counting wins on tiny-vocabulary corpora (no rare
-      tokens => the prefix filter prunes nothing and its
-      collect/sort/array_intersect overhead is pure loss).  It runs
-      the direct kernel under the broadcast gate and PPJoin above it.
+    The broadcast gate is its only plan choice: one aggregate over the
+    persisted ``bg`` (the incidence bytes) picks the plan, and both
+    give the same rows.
 
-    The per-bigram frequency table the pick aggregates is the SAME one
-    the prefix-filtered plan orders tokens by, so it is computed once
-    (scoped-persisted) and handed to whichever plan wins — through r4
-    the ppjoin branch recomputed an identical freq groupBy (ADVICE r4).
-    The doc-count job reads the already-cached bigram table.
-    """
-    bg = scoped_persist(word_bigrams(df))
-    freq = scoped_persist(
-        bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("_gf"))
-    )
-    v, d, sumsq = jaccard_plan_stats(bg, freq)
-    pick = choose_jaccard_plan(v, d, sumsq)
+    - DIRECT (integral or string doc_id, incidence bytes within the
+      session's spark.sql.autoBroadcastJoinThreshold): the (doc_id,
+      bigram) incidence is collected once, factorized into posting
+      lists and broadcast, and one mapInPandas counts each probe doc's
+      pairs with np.bincount on dense doc indices (_count_block_pairs).
+      No join rows exist at all: shuffling and hash-aggregating them —
+      one row per shared bigram, 172M on the 30k-doc Zipf fixture,
+      with ~24 GB spilled — was the old join plan's dominant cost, and
+      doc indices from factorizing make the keys dense small integers,
+      where direct addressing beats any hash table.
+    - PPJOIN (any other id type, a larger incidence, or the threshold
+      at -1): bigram_jaccard_pairs, which prunes the Σ df² join rows
+      that counting every shared bigram would materialize.
+
+    LAST_PLAN_PICK is set before this returns."""
     global LAST_PLAN_PICK
-    LAST_PLAN_PICK = {"plan": pick, "v": v, "d": d, "sumsq": sumsq}
-    if pick == "ppjoin":
-        return bigram_jaccard_pairs(df, threshold_bp, bg=bg, freq=freq)
-    out, kernel = _allpairs(df, threshold_bp, bg, freq)
-    LAST_PLAN_PICK.update(kernel)
-    return out
+    bg = scoped_persist(word_bigrams(df))
+    id_type = dict(bg.dtypes)["doc_id"]
+    nbytes = None
+    if id_type in PY_ORDERED_ID_TYPES:
+        # null-id rows never pair; bytes: per row the bigram's UTF-8 bytes
+        # and a 4-byte Arrow offset, plus an 8-byte id — or a string id's
+        # UTF-8 bytes and a second offset — the collected incidence's size
+        id_bytes = (F.octet_length("doc_id") + F.lit(4) if id_type == "string"
+                    else F.lit(8))
+        row_bytes = id_bytes + F.lit(4) + F.coalesce(F.octet_length("bigram"), F.lit(0))
+        nbytes = bg.where(F.col("doc_id").isNotNull()).agg(
+            F.coalesce(F.sum(row_bytes), F.lit(0))).first()[0]
+        if nbytes <= broadcast_threshold(bg.sparkSession):
+            out, stats = _direct_allpairs(bg, id_type, threshold_bp)
+            LAST_PLAN_PICK = {"plan": "allpairs", **stats, "kernel": "direct",
+                              "incidence_bytes": nbytes}
+            return out
+    LAST_PLAN_PICK = {"plan": "ppjoin", "kernel": "ppjoin",
+                      "incidence_bytes": nbytes}
+    return bigram_jaccard_pairs(df, threshold_bp, bg=bg)
 
 
-def jaccard_plan_stats(
-    bg: DataFrame, freq: DataFrame | None = None
-) -> tuple[int, int, float]:
-    """(v, d, sumsq): the cost inputs choose_jaccard_plan consumes —
-    distinct bigrams, approx distinct docs, and the estimated naive
-    join volume Σ df².  ONE implementation shared by the auto-pick,
-    bench.py's per-regime observability record, and the calibration
-    pin script (r5 code-review: three hand-rolled copies of this
-    aggregation would drift apart on the next cost-model change).
-    Pass an (ideally persisted) ``bg``; ``freq`` may be supplied when
-    the caller already computed the per-bigram counts."""
-    if freq is None:
-        freq = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("_gf"))
+# the name bench.py, bench_extra.py and the tests call the entry by
+bigram_jaccard_pairs_allpairs = bigram_jaccard_pairs_auto
+
+
+def jaccard_plan_stats(bg: DataFrame) -> tuple[int, int, float]:
+    """(v, d, sumsq) of a (doc_id, bigram) table: distinct bigrams,
+    approx distinct docs and Σ df², the naive join volume, with df
+    counted over rows.  The inputs of choose_jaccard_plan, for bench.py's
+    per-regime record; the engine does not call it.  Pass an (ideally
+    persisted) ``bg``."""
     fstats = (
-        freq.agg(
+        bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("_gf"))
+        .agg(
             F.count(F.lit(1)).alias("v"),
             # double, not long: Σ df² overflows int64 (ANSI mode would
             # raise) long before 10^12-row corpora; this is an estimate
@@ -260,40 +274,38 @@ def jaccard_plan_stats(
     return int(fstats["v"]), int(d), float(fstats["sumsq"] or 0.0)
 
 
-# Observability: the last cost-based decision made by
-# bigram_jaccard_pairs_auto in this process, with the stats that drove
-# it — bench.py records it so each BENCH_r{N}.json shows which plan the
-# auto-pick chose per corpus regime.  An allpairs pick also records the
-# kernel that ran ("kernel": "direct" | "ppjoin") and the incidence
-# bytes that gated it.  Read-only for callers.
+# Observability: the plan the last bigram_jaccard_pairs_auto call in this
+# process built, set before it returns.  "plan" is "allpairs" under the
+# broadcast gate and "ppjoin" above it, "kernel" is "direct" | "ppjoin",
+# and "incidence_bytes" is the size that gated it (None for an id type
+# the direct kernel cannot take).  The direct kernel adds the exact
+# corpus statistics it reads off its factorized arrays: "v" distinct
+# bigrams, "d" docs with a bigram and "sumsq" Σ df², df counted over
+# distinct docs.  Read-only for callers.
 LAST_PLAN_PICK: dict | None = None
 
 
-# Estimated all-pairs volume (Σ df(g)² over bigrams, the postings that
-# counting every shared bigram touches) below which all-pairs is picked
-# even when a rare-token tail exists: fixed per-stage overhead then
-# dominates both plans.  First set on a 32-core host against the removed
-# join plan (log-midpoint of 31M and 280M rows).  Re-measured for the
-# direct kernel on 4 vCPU with ``bench_extra.py time zipf_bigram_ppjoin
-# zipf_bigram_allpairs`` (repeats interleaved), both corpora under the
-# 64 MB gate:
+# bench.py's regime label for a corpus (choose_jaccard_plan); the engine
+# routes by the broadcast gate alone.  An estimated all-pairs volume
+# (Σ df(g)² over bigrams, the postings that counting every shared bigram
+# touches) below this labels a corpus "allpairs" even when a rare-token
+# tail exists.  Measured on 4 vCPU with ``bench_extra.py time
+# zipf_bigram_ppjoin zipf_bigram_allpairs`` (repeats interleaved), both
+# corpora under the 64 MB gate:
 #   Zipf 30k docs, Σdf² 3.45e8, 33.8 MB: direct 10.7 s, PPJoin 11.1 s
 #   (medians of 6);
 #   Zipf 55k docs, Σdf² 1.03e9, 62.0 MB: direct 24.5 s, PPJoin 23.7 s
 #   (medians of 3).
-# The crossover lies between them, so the floor routes both to PPJoin,
-# which is within 4% of the direct kernel at 30k and faster at 55k.
-# On a real cluster this constant only shrinks relative to the data,
-# so at 10^12-row scale the pick degenerates to "ppjoin whenever a
-# rare tail exists" — exactly the published PPJoin guidance.
+# The two plans are within 4% of each other there, so the engine runs
+# the direct kernel on both.
 ALLPAIRS_WORK_FLOOR = 100_000_000
 
 
 def choose_jaccard_plan(
     n_distinct_bigrams: int, n_docs: int, est_join_rows: int | None = None
 ) -> str:
-    """The cost-based discriminator, factored out so tests can pin the
-    pick per corpus regime (VERDICT r3 Next #2).
+    """A corpus's regime label, recorded by bench.py per corpus; the
+    engine's plan choice is the broadcast gate, not this.
 
     'allpairs' when |vocab| < |docs| (tiny-vocab corpus: every posting
     list is dense, the prefix filter prunes nothing and its overhead
@@ -310,8 +322,7 @@ def choose_jaccard_plan(
 
 
 def bigram_jaccard_pairs(df: DataFrame, threshold_bp: int = 5000,
-                         bg: DataFrame | None = None,
-                         freq: DataFrame | None = None) -> DataFrame:
+                         bg: DataFrame | None = None) -> DataFrame:
     """(a, b, jaccard_bp): word-bigram Jaccard ≥ threshold, a<b.
 
     Exact similarity join with PREFIX FILTERING (Chaudhuri et al.
@@ -330,10 +341,7 @@ def bigram_jaccard_pairs(df: DataFrame, threshold_bp: int = 5000,
     # materialize: bg feeds frequencies, prefixes and the arrays
     if bg is None:
         bg = scoped_persist(word_bigrams(df))
-    # the auto-pick hands its own freq table down so the groupBy runs
-    # once per corpus, not once per plan branch (ADVICE r4)
-    if freq is None:
-        freq = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("_gf"))
+    freq = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("_gf"))
     # COLLISION-FREE int64 token ids replace the bigram strings
     # everywhere downstream (r7): the prefix self-join keys and the
     # verify array_intersect then run on longs instead of variable-
@@ -422,59 +430,6 @@ def bigram_jaccard_pairs(df: DataFrame, threshold_bp: int = 5000,
     )
 
 
-def bigram_jaccard_pairs_allpairs(df: DataFrame, threshold_bp: int = 5000,
-                                  bg: DataFrame | None = None) -> DataFrame:
-    """All-pairs exact variant: every shared bigram is counted, with no
-    prefix filter.  Faster than the prefix-filtered join only on
-    degenerate tiny-vocabulary corpora (like the driver fixture: 931
-    distinct bigrams, so there are no rare tokens for the prefix
-    filter to exploit).  Both produce identical output — use
-    bigram_jaccard_pairs_auto for the cost-based pick.
-
-    One aggregate over the persisted ``bg`` (the incidence bytes)
-    picks the plan:
-
-    - DIRECT (integral or string doc_id, incidence bytes within the
-      session's spark.sql.autoBroadcastJoinThreshold): the (doc_id,
-      bigram) incidence is collected once, factorized into posting
-      lists and broadcast, and one mapInPandas counts each probe doc's
-      pairs with np.bincount on dense doc indices (_count_block_pairs).
-      No join rows exist at all: shuffling and hash-aggregating them —
-      one row per shared bigram, 172M on the 30k-doc Zipf fixture,
-      with ~24 GB spilled — was the old join plan's dominant cost, and
-      doc indices from factorizing make the keys dense small integers,
-      where direct addressing beats any hash table.
-    - PPJOIN (any other id type, a larger incidence, or the threshold
-      at -1): bigram_jaccard_pairs, which prunes the Σ df² join rows
-      that counting every shared bigram would materialize."""
-    return _allpairs(df, threshold_bp, bg)[0]
-
-
-def _allpairs(df: DataFrame, threshold_bp: int, bg: DataFrame | None,
-              freq: DataFrame | None = None) -> tuple[DataFrame, dict]:
-    """bigram_jaccard_pairs_allpairs plus which kernel ran:
-    {"kernel": "direct" | "ppjoin", "incidence_bytes": int | None}.
-    ``freq`` is handed to the PPJoin plan when it runs."""
-    if bg is None:
-        bg = scoped_persist(word_bigrams(df))
-    id_type = dict(bg.dtypes)["doc_id"]
-    nbytes = None
-    if id_type in PY_ORDERED_ID_TYPES:
-        # null-id rows never pair; bytes: per row the bigram's UTF-8 bytes
-        # and a 4-byte Arrow offset, plus an 8-byte id — or a string id's
-        # UTF-8 bytes and a second offset — the collected incidence's size
-        id_bytes = (F.octet_length("doc_id") + F.lit(4) if id_type == "string"
-                    else F.lit(8))
-        row_bytes = id_bytes + F.lit(4) + F.coalesce(F.octet_length("bigram"), F.lit(0))
-        nbytes = bg.where(F.col("doc_id").isNotNull()).agg(
-            F.coalesce(F.sum(row_bytes), F.lit(0))).first()[0]
-        if nbytes <= broadcast_threshold(bg.sparkSession):
-            return (_direct_allpairs(bg, id_type, threshold_bp),
-                    {"kernel": "direct", "incidence_bytes": nbytes})
-    return (bigram_jaccard_pairs(df, threshold_bp, bg=bg, freq=freq),
-            {"kernel": "ppjoin", "incidence_bytes": nbytes})
-
-
 # Direct-kernel sizing.  A dense block of probe docs counts into
 # block × D counters, kept within _COUNTER_BUDGET; when that leaves
 # fewer than _MIN_DENSE_BLOCK docs per block (huge D) a block's keys are
@@ -488,14 +443,22 @@ _GATHER_CAP = 1 << 22
 _TASK_VOLUME = 1 << 24
 
 
-def _direct_allpairs(bg: DataFrame, id_type: str, threshold_bp: int) -> DataFrame:
+def _direct_allpairs(bg: DataFrame, id_type: str,
+                     threshold_bp: int) -> tuple[DataFrame, dict]:
     """The direct kernel's driver half: collect the incidence over
     Arrow, factorize it, broadcast the arrays, and map the counting
-    over probe-doc ranges of equal gathered volume."""
+    over probe-doc ranges of equal gathered volume.  Also returns the
+    corpus statistics {"v", "d", "sumsq"} read off the arrays."""
     spark = bg.sparkSession
     pdf = bg.where(F.col("doc_id").isNotNull()).select("doc_id", "bigram").toPandas()
     inc, vol = _factorize_incidence(pdf["doc_id"].to_numpy(), pdf["bigram"])
+    _, sizes, _, _, length, post_docs = inc
     total = int(vol[-1])
+    # each bigram's last posting gathers nothing, and a bigram in df docs
+    # gathers df(df-1)/2 postings in all, so Σ df² = 2·total + Σ df
+    stats = {"v": int(np.count_nonzero(length == 0)),
+             "d": int(np.count_nonzero(sizes)),
+             "sumsq": 2 * total + len(post_docs)}
     n_tasks = max(1, min(spark.sparkContext.defaultParallelism,
                          -(-total // _TASK_VOLUME)))
     cuts = np.searchsorted(vol, np.arange(1, n_tasks) * (total / n_tasks))
@@ -510,7 +473,7 @@ def _direct_allpairs(bg: DataFrame, id_type: str, threshold_bp: int) -> DataFram
                                               threshold_bp)
 
     return spark.range(n_tasks, numPartitions=n_tasks).mapInPandas(
-        run, f"a {id_type}, b {id_type}, jaccard_bp bigint")
+        run, f"a {id_type}, b {id_type}, jaccard_bp bigint"), stats
 
 
 def _factorize_incidence(doc_id: np.ndarray, bigram: pd.Series):

@@ -227,6 +227,44 @@ def test_bigram_jaccard_oracle_on_adversarial_table(spark, id_type):
         spark.conf.set(key, prev)
 
 
+def test_plan_pick_reads_exact_stats(spark):
+    """On the sf0.01 documents the exact entry records, at plan-build
+    time, the direct kernel with the corpus statistics read off its
+    arrays: d is the exact count of docs with a bigram, v and sumsq
+    agree with jaccard_plan_stats.  With broadcasting off it records
+    only the PPJoin plan and the incidence bytes, and gives the same
+    rows."""
+    from deduplication_and_compression_spark.operators import textops
+    from deduplication_and_compression_spark.persistence import (
+        persist_scope, scoped_persist,
+    )
+
+    docs = entrymod._docs(spark, SF_DIR)
+    with persist_scope():
+        bg = scoped_persist(textops.word_bigrams(docs))
+        v, _, sumsq = textops.jaccard_plan_stats(bg)
+        d = bg.select("doc_id").distinct().count()
+        want = {tuple(r) for r in
+                textops.bigram_jaccard_pairs_auto(docs, 5000).collect()}
+        pick = dict(textops.LAST_PLAN_PICK)
+    assert pick["plan"] == "allpairs" and pick["kernel"] == "direct", pick
+    assert (pick["v"], pick["d"], pick["sumsq"]) == (v, d, sumsq), pick
+    assert d == 500
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        with persist_scope():
+            got = {tuple(r) for r in
+                   textops.bigram_jaccard_pairs_allpairs(docs, 5000).collect()}
+            pick = dict(textops.LAST_PLAN_PICK)
+    finally:
+        spark.conf.set(key, prev)
+    assert pick["kernel"] == "ppjoin", pick
+    assert not {"v", "d", "sumsq"} & set(pick), pick
+    assert got == want
+
+
 def test_rows_only_queries_run(spark):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
