@@ -10,12 +10,12 @@ hyperplanes embedded as SQL literals), the full MinHash/LSH tier
 replayed in HUGEINT mod-2⁶⁴ SQL (signatures, banding, skew-aware pair
 generation, estimate prefilter, Jaccard verify — the band keys are the
 repo's public poly-fold + splitmix64 hash, so no Spark-internal
-hashing remains anywhere in the contract), BOTH streaming-screen
-dataflows (the stateless full-carry plan and the keys-only foreachBatch
-plan), and since round 5 the IVF-flat ANN tier (unit-norm quantizer
-centroids embedded as SQL literals) and the SemDeDup-style
-embedding-space dedup (SRP pair predicate + recursive-CTE connected
-components + assignment contract, end to end).
+hashing remains anywhere in the contract), the streaming near-dup
+screen (two contract rows over its one implementation), and since
+round 5 the IVF-flat ANN tier (unit-norm quantizer centroids embedded
+as SQL literals) and the SemDeDup-style embedding-space dedup (SRP
+pair predicate + recursive-CTE connected components + assignment
+contract, end to end).
 
 Column names and arithmetic order match between the Spark plans and
 the SQL strings so the driver's order-insensitive value-hash agrees;
@@ -297,50 +297,14 @@ def _q_winnow_pairs_docs(spark, sf):
     ).select("a", "b")
 
 
-def _q_screen_near_dups(spark, sf):
-    """Batch rehearsal of the STREAMING near-dup screen
-    (streaming/ingest.py:streaming_near_dup_screen): the documents
-    table screened against itself as the static reference.  Runs the
-    exact plan every micro-batch runs (signature → band explode →
-    stream-static band join → estimate prefilter → Arrow-batched
-    exact-Jaccard verify), so the driver's oracle now gates the
-    screen's dataflow, not just the batch tiers.  Per-band duplicate
-    edges collapsed as run_screen_once does; jaccard floored to bp
-    for engine-stable value hashing."""
-    from deduplication_and_compression_spark.streaming.ingest import (
-        streaming_near_dup_screen,
-    )
-
-    from deduplication_and_compression_spark.streaming.ingest import (
-        build_screen_reference,
-    )
-
-    def build():
-        docs = _docs(spark, sf)
-        ref_side = build_screen_reference(docs, CFG, id_col="doc_id",
-                                          text_col="text")
-        # materialize the static side before the two consuming branches
-        # so the reference signature UDF runs once (released with the
-        # memo scope; only the small edge table survives)
-        scoped_persist(ref_side.base).count()
-        edges = streaming_near_dup_screen(
-            docs, cfg=CFG, id_col="doc_id", text_col="text", ref_side=ref_side
-        )
-        return edges.dropDuplicates(["id", "ref_id"]).select(
-            "id", "ref_id",
-            F.floor(F.col("jaccard") * 10000.0).cast("long").alias("jaccard_bp"),
-        )
-
-    return _memo_query(spark, sf, "screen_near_dups", build)
-
-
-def _q_screen_batch_near_dups(spark, sf):
-    """The KEYS-ONLY foreachBatch screen plan (streaming/ingest.py:
-    screen_batch_edges — the exact dataflow run_screen_once executes
-    per micro-batch since r5: keys-only band explode, exact (id,
-    ref_id) dedupe BEFORE the verify, caption+signature re-attached by
-    id).  Same semantics as the stateless variant above, so both rows
-    share one oracle — the driver now gates both screen dataflows."""
+def _screen_edges(spark, sf, name):
+    """The documents table screened against itself as the static
+    reference by screen_batch_edges — the micro-batch body
+    run_screen_once executes — so the driver's oracle gates the
+    screen's dataflow, not just the batch tiers.  The static side is
+    persisted, so the reference signature UDF runs once (released with
+    the memo scope; only the small edge table survives); jaccard
+    floored to bp for engine-stable value hashing."""
     from deduplication_and_compression_spark.streaming.ingest import (
         build_screen_reference, screen_batch_edges,
     )
@@ -349,7 +313,7 @@ def _q_screen_batch_near_dups(spark, sf):
         docs = _docs(spark, sf)
         ref_side = build_screen_reference(docs, CFG, id_col="doc_id",
                                           text_col="text")
-        scoped_persist(ref_side.base).count()  # sig UDF once per ref row
+        scoped_persist(ref_side.base)  # probe_index's aggregate fills it
         edges = screen_batch_edges(docs, ref_side, CFG, id_col="doc_id",
                                    text_col="text")
         return edges.select(
@@ -357,7 +321,19 @@ def _q_screen_batch_near_dups(spark, sf):
             F.floor(F.col("jaccard") * 10000.0).cast("long").alias("jaccard_bp"),
         )
 
-    return _memo_query(spark, sf, "screen_batch_near_dups", build)
+    return _memo_query(spark, sf, name, build)
+
+
+def _q_screen_near_dups(spark, sf):
+    """The near-dup screen (_screen_edges)."""
+    return _screen_edges(spark, sf, "screen_near_dups")
+
+
+def _q_screen_batch_near_dups(spark, sf):
+    """The near-dup screen (_screen_edges) under its second contract
+    name: both rows share one oracle, _screen_oracle_sql, and each keeps
+    its own memo entry, so timing one never reads the other's cache."""
+    return _screen_edges(spark, sf, "screen_batch_near_dups")
 
 
 _EMB_DIM = 64  # driver embeddings.parquet schema (fixed-width array<float>)
@@ -1085,7 +1061,7 @@ def _sig_band_ctes(cfg=CFG, table: str = "documents") -> str:
     band_idx, bh, sig); also leaves ``pos`` defined for the exact
     k-gram Jaccard verify.  Used by _minhash_oracle_sql (full
     pair-gen regimes on top) and _screen_oracle_sql (raw directed
-    band join on top — the stream-static screen's shape)."""
+    band join on top — every shared band, the screen's match)."""
     k = cfg.shingle_k
     import deduplication_and_compression_spark.functions.hashing as _H
 
@@ -1130,13 +1106,14 @@ bk AS (
 
 
 def _screen_oracle_sql(cfg=CFG, table: str = "documents") -> str:
-    """DuckDB twin of the near-dup screen's batch shape
-    (streaming/ingest.py:streaming_near_dup_screen applied to the
-    documents table against itself): DIRECTED (id, ref_id) edges for
-    every ordered pair sharing ≥1 LSH band bucket, passing the
-    lane-agreement estimate prefilter, with true k-shingle Jaccard ≥
-    threshold; jaccard floored to basis points.  No value collapse or
-    skew regimes — the screen is a raw stream-static band join."""
+    """DuckDB twin of the near-dup screen (streaming/ingest.py:
+    screen_batch_edges applied to the documents table against itself):
+    DIRECTED (id, ref_id) edges for every ordered pair sharing ≥1 LSH
+    band bucket, passing the lane-agreement estimate prefilter, with
+    true k-shingle Jaccard ≥ threshold; jaccard floored to basis
+    points.  No value collapse or skew regimes — the screen matches
+    every shared band, whether by the broadcast probe or the band
+    join."""
     k = cfg.shingle_k
     t = cfg.jaccard_threshold
     slack = 3.0 * (t * (1.0 - t) / cfg.num_perm) ** 0.5

@@ -6,7 +6,7 @@ measurements go here.
 Modes:
   python bench_extra.py plans <outdir> [names...]  # .explain("formatted") per query, ids normalised
   python bench_extra.py time [names...]            # noop-sink walls, repeats round-robin
-  python bench_extra.py stages <cores> [replicate] [tiers]  # per-stage pipeline walls
+  python bench_extra.py stages <cores> [replicate] [tiers] [stop_after]  # per-stage pipeline walls
 
 ``plans`` and ``time`` cover every contract query (__spark_entry__)
 plus the two Zipf-corpus Jaccard plans, at $SPARK_GRAFT_SF_DIR on
@@ -150,8 +150,13 @@ def cmd_time(names: list[str], repeats: int = 3) -> None:
     spark.stop()
 
 
+class _StopAfter(Exception):
+    """Raised by cmd_stages once its ``stop_after`` stage is written."""
+
+
 def cmd_stages(cores: int, replicate: int = 1,
-               tiers: tuple[str, ...] = ALL_TIERS) -> None:
+               tiers: tuple[str, ...] = ALL_TIERS,
+               stop_after: str | None = None) -> None:
     """Per-stage walls of the image pipeline at local[cores], on the
     cached STAGE_ROWS-row image fixture replicated ``replicate`` times
     (each copy under its own ids).
@@ -161,8 +166,10 @@ def cmd_stages(cores: int, replicate: int = 1,
     union, connected components and assignments.  Every stage reads its
     input from a written checkpoint table, so each wall is that stage's
     own time; run_pipeline's concurrent tier walls include cross-tier
-    contention.  Prints one JSON line {"cores", "rows", "stages":
-    {stage: wall_sec}, "jobs": {stage: spark_jobs}, "total_sec"}."""
+    contention.  With ``stop_after`` (a stage name, e.g. sig_minhash)
+    no later stage runs.  Prints one JSON line {"cores", "rows",
+    "stages": {stage: wall_sec}, "jobs": {stage: spark_jobs},
+    "total_sec"} over the stages that ran."""
     from pyspark.sql import functions as F
 
     from deduplication_and_compression_spark.operators.assign import (
@@ -187,7 +194,10 @@ def cmd_stages(cores: int, replicate: int = 1,
 
     def stage(name, build):  # one job group per stage: its job count
         spark.sparkContext.setJobGroup(name, name)
-        return ck.stage(name, build)
+        out = ck.stage(name, build)
+        if name == stop_after:
+            raise _StopAfter
+        return out
 
     work = tempfile.mkdtemp(prefix="dedup_stages_")
     try:
@@ -196,6 +206,8 @@ def cmd_stages(cores: int, replicate: int = 1,
         pairs = stage("pairs_union", lambda: union_pairs(**frames))
         labels = stage("cc_labels", lambda: connected_components(pairs, CFG))
         stage("assignments", lambda: assignments_from_labels(df, labels))
+    except _StopAfter:
+        pass
     finally:
         shutil.rmtree(work, ignore_errors=True)
     walls = {m["stage"]: round(m["wall_ms"] / 1000.0, 2)
@@ -215,6 +227,7 @@ if __name__ == "__main__":
         cmd_time(args)
     elif mode == "stages":
         cmd_stages(int(args[0]), int(args[1]) if len(args) > 1 else 1,
-                   tuple(args[2].split(",")) if len(args) > 2 else ALL_TIERS)
+                   tuple(args[2].split(",")) if len(args) > 2 else ALL_TIERS,
+                   args[3] if len(args) > 3 else None)
     else:
         raise SystemExit(f"unknown mode {mode!r}")

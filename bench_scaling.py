@@ -44,8 +44,10 @@ def run_bench(cpus: int) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def run_stages(cpus: int, replicate: int = 1, tiers: str = "") -> dict:
-    args = [str(cpus), str(replicate)] + ([tiers] if tiers else [])
+def run_stages(cpus: int, replicate: int = 1, tiers: str = "",
+               stop_after: str = "") -> dict:
+    """``bench_extra.py stages``' JSON line; ``stop_after`` needs ``tiers``."""
+    args = [str(cpus), str(replicate), *filter(None, (tiers, stop_after))]
     out = subprocess.run(
         [sys.executable, str(REPO / "bench_extra.py"), "stages", *args],
         capture_output=True, text=True, check=True,
@@ -98,15 +100,15 @@ def main() -> None:
         f"local[{4*n}]": [r["images_per_sec"] for r in pipe_4n],
     }
     # headline: the sig_minhash stage of a minhash-only run at 4x
-    # replicated rows, so fixed stage latency amortizes.  Best-of-K
-    # with INTERLEAVED legs: co-tenant load on a shared host drifts on
-    # multi-minute scales, so single-shot legs compare two different
-    # machines in effect; min-wall per level estimates uncontended
-    # capability.
+    # replicated rows, so fixed stage latency amortizes; the run stops
+    # after that stage.  Best-of-K with INTERLEAVED legs: co-tenant load
+    # on a shared host drifts on multi-minute scales, so single-shot
+    # legs compare two different machines in effect; min-wall per level
+    # estimates uncontended capability.
     sig_runs_n, sig_runs_4n = [], []
     for _ in range(_SCALE_RUNS):
-        sig_runs_n.append(run_stages(n, 4, "minhash"))
-        sig_runs_4n.append(run_stages(4 * n, 4, "minhash"))
+        sig_runs_n.append(run_stages(n, 4, "minhash", "sig_minhash"))
+        sig_runs_4n.append(run_stages(4 * n, 4, "minhash", "sig_minhash"))
 
     def sig_wall(r):
         return r["stages"]["sig_minhash"]
@@ -166,8 +168,8 @@ images/sec; all runs: {json.dumps(pipe_spread)}).
 ### Signature stage (compute-heavy, {sig_n['rows']} rows)
 
 The `sig_minhash` stage of a minhash-only `bench_extra.py stages`
-run: signatures plus their checkpoint write, no banding.  Best of
-{_SCALE_RUNS} interleaved runs per level (min wall; all walls:
+run that stops after it: signatures plus their checkpoint write, no
+banding.  Best of {_SCALE_RUNS} interleaved runs per level (min wall; all walls:
 {json.dumps(sig_spread)}).
 
 | parallelism | wall (s) | rows/sec |

@@ -39,12 +39,10 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions import hashing as H
 from ..persistence import scoped_persist
 
-# Test instrumentation: when set to a SparkContext accumulator BEFORE a
-# plan is built, every signature-UDF execution adds its batch row
-# count.  Lets tests prove cache-reuse properties (e.g. the streaming
-# screen's static side computes reference signatures exactly once per
-# session, not once per micro-batch).  None in production — the check
-# is a no-op captured at UDF definition time.
+# Test instrumentation: a SparkContext accumulator set here BEFORE a
+# plan is built (signer captures it) counts every signed row, so tests
+# can prove cache reuse (the screen signs its reference once per
+# session, not once per micro-batch).  None in production.
 SIG_ROWS_ACCUMULATOR = None
 
 
@@ -58,8 +56,8 @@ def minhash_signatures(
     """(id, *keep_cols, sig: array<long>[num_perm],
     bands: array<long>[lsh_bands]) — one vectorized UDF pass.
 
-    ``keep_cols`` ride through the projection — the streaming screen
-    uses it to retain the caption without a (stream-stream) re-join.
+    ``keep_cols`` ride through the projection (the screen keeps its
+    captions this way).
 
     The band bucket keys ride along in the same Arrow batch as the
     signature: band b = splitmix64(FNV-fold of lanes b*r..b*r+r-1)
@@ -77,11 +75,7 @@ def minhash_signatures(
     physical operator, not an expression: filters sit above it and can
     never re-instantiate the kernel, so it executes exactly once per
     row regardless of consumer shape."""
-    k = cfg.shingle_k
-    seeds = H.make_seeds(cfg.num_perm, cfg.minhash_seed)
-    n_bands, n_rows = cfg.lsh_bands, cfg.lsh_rows
-    acc = SIG_ROWS_ACCUMULATOR
-
+    sign = signer(cfg)
     src = df.select(
         F.col(id_col).alias("id"), *keep_cols, F.col(text_col).alias("_mh_txt")
     )
@@ -95,18 +89,31 @@ def minhash_signatures(
 
     def _gen(batches):
         for pdf in batches:
-            if acc is not None:
-                acc.add(len(pdf))
-            mat = H.minhash_signatures_batch(
-                pdf["_mh_txt"].fillna("").tolist(), k, seeds
-            )
-            bh = H.band_hashes(mat, n_bands, n_rows)
+            sig, bands = sign(pdf["_mh_txt"])
             out = pdf.drop(columns=["_mh_txt"])
-            out["sig"] = list(H.u64_to_i64(mat))
-            out["bands"] = list(H.u64_to_i64(bh))
+            out["sig"] = list(sig)
+            out["bands"] = list(bands)
             yield out
 
     return src.mapInPandas(_gen, out_schema)
+
+
+def signer(cfg: DedupConfig = DEFAULT_CONFIG):
+    """The signing body of minhash_signatures and the screen's probe:
+    texts (pandas, null → "") → int64 (signature, band hash) matrices;
+    no shingles → the sentinel, -1 in every lane."""
+    k = cfg.shingle_k
+    seeds = H.make_seeds(cfg.num_perm, cfg.minhash_seed)
+    n_bands, n_rows = cfg.lsh_bands, cfg.lsh_rows
+    acc = SIG_ROWS_ACCUMULATOR
+
+    def sign(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+        if acc is not None:
+            acc.add(len(texts))
+        mat = H.minhash_signatures_batch(texts.fillna("").tolist(), k, seeds)
+        return H.u64_to_i64(mat), H.u64_to_i64(H.band_hashes(mat, n_bands, n_rows))
+
+    return sign
 
 
 def band_keys(sig_df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -363,8 +370,7 @@ def jaccard_at_least(
 ) -> DataFrame:
     """(*key_cols, jaccard) for the rows of ``pairs`` whose TRUE
     k-shingle Jaccard between the two ``text_cols`` is ≥
-    cfg.jaccard_threshold: one Arrow pass per batch (one lexsort +
-    bincount, no per-pair Python set ops: hashing.jaccard_batch)."""
+    cfg.jaccard_threshold (hashing.jaccard_batch, one Arrow pass)."""
     return _text_pairs_where(pairs, key_cols, text_cols, _jaccard_score(cfg), "jaccard")
 
 
@@ -398,20 +404,37 @@ def estimate_at_least(sig_a: str, sig_b: str,
     (and ~0 for pairs planted at plant_jaccard), preserving the ≥0.99
     recall budget.  Whole-stage-codegen arithmetic over the two arrays.
 
-    NOTE (r7): an Arrow-kernel variant of this lane-agreement count was
-    measured SLOWER than the interpreted JVM fold — the fold costs ~13 s
-    CPU across 32 cores (~0.4 s wall), while shipping two 128-lane
-    arrays per pair through the Python boundary added more task time
-    than it saved (guide §1.2: the distributed shape, not this per-task
-    expression, bounds the wall)."""
-    t = cfg.jaccard_threshold
-    slack = 3.0 * (t * (1.0 - t) / cfg.num_perm) ** 0.5
+    NOTE (r7): an Arrow-kernel variant was measured SLOWER than this JVM
+    fold, because two 128-lane arrays crossed the Python boundary per
+    pair.  The screen's probe, where neither side crosses it, counts
+    in numpy (estimate_passes)."""
     est = F.aggregate(
         F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, x: acc + x,
     ).cast("double") / F.lit(float(cfg.num_perm))
-    return est >= F.lit(t - slack)
+    return est >= F.lit(_estimate_floor(cfg))
+
+
+# pairs per estimate_passes step: two gathered 16 MB signature blocks
+_ESTIMATE_CHUNK = 1 << 14
+
+
+def estimate_passes(sig_a: np.ndarray, a: np.ndarray, sig_b: np.ndarray,
+                    b: np.ndarray, cfg: DedupConfig = DEFAULT_CONFIG) -> np.ndarray:
+    """numpy twin of estimate_at_least for the signature row pairs
+    (sig_a[a], sig_b[b]), bit-equal to it: the agreeing-lane count as
+    float64 over float(num_perm), against the same threshold − 3σ
+    double.  Rows are gathered _ESTIMATE_CHUNK pairs at a time."""
+    agree = np.concatenate([np.zeros(0, np.int64)] + [
+        (sig_a[a[i:i + _ESTIMATE_CHUNK]] == sig_b[b[i:i + _ESTIMATE_CHUNK]]).sum(axis=1)
+        for i in range(0, len(a), _ESTIMATE_CHUNK)])
+    return agree.astype(np.float64) / float(cfg.num_perm) >= _estimate_floor(cfg)
+
+
+def _estimate_floor(cfg: DedupConfig) -> float:
+    t = cfg.jaccard_threshold
+    return t - 3.0 * (t * (1.0 - t) / cfg.num_perm) ** 0.5
 
 
 def estimate_filter(

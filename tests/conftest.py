@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -41,6 +42,20 @@ def images_df(spark, fixture_pdf, tmp_path_factory):
 @pytest.fixture(scope="session")
 def truth_pairs(fixture_pdf) -> pd.DataFrame:
     return fixture_pdf[1]
+
+
+@contextmanager
+def above_gate(spark):
+    """Turn broadcasting off, which sends every broadcast-gated operator
+    (the exact Jaccard, the screen) to its plan above the gate; the
+    prior threshold is restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def executed_python_nodes(df) -> list[str]:

@@ -7,7 +7,8 @@ import pytest
 
 from deduplication_and_compression_spark.functions import hashing as H
 from deduplication_and_compression_spark.operators.minhash_lsh import (
-    band_keys, minhash_pairs, minhash_signatures, verify_jaccard,
+    band_keys, estimate_at_least, estimate_passes, minhash_pairs,
+    minhash_signatures, verify_jaccard,
 )
 from deduplication_and_compression_spark.operators.substring import verify_substring
 from tests.conftest import executed_python_nodes, pairs_set, transitive_closure_pairs
@@ -65,6 +66,33 @@ def test_minhash_pairs_recall_and_precision(images_df, fixture_pdf, jaccard_orac
     planted_exact = pairs_set(truth[truth.tier == "exact"])
     exact_recall = len(planted_exact & closure) / len(planted_exact)
     assert exact_recall >= 0.99, f"exact-via-minhash recall {exact_recall:.4f}"
+
+
+def test_estimate_numpy_twin_matches_jvm(spark, cfg):
+    """estimate_passes (the screen probe's estimate) keeps exactly the
+    signature pairs the JVM estimate_at_least keeps, at every
+    agreeing-lane count from 0 to num_perm — so at the threshold − 3σ
+    boundary too — and at two more thresholds."""
+    from dataclasses import replace
+
+    from pyspark.sql import types as T
+
+    rng = np.random.default_rng(5)
+    p = cfg.num_perm
+    a = rng.integers(-2**62, 2**62, size=(p + 1, p))
+    b = a.copy()
+    for n in range(p + 1):  # row n agrees on exactly n lanes
+        lanes = rng.permutation(p)[n:]
+        b[n, lanes] = ~b[n, lanes]
+    schema = T.StructType([T.StructField(c, T.ArrayType(T.LongType()))
+                           for c in ("a", "b")])
+    df = spark.createDataFrame([(x.tolist(), y.tolist()) for x, y in zip(a, b)], schema)
+    for t in (cfg.jaccard_threshold, 0.5, 0.9):
+        c = replace(cfg, jaccard_threshold=t)
+        jvm = [r[0] for r in df.select(estimate_at_least("a", "b", c)).collect()]
+        rows = np.arange(p + 1)
+        assert estimate_passes(a, rows, b, rows, c).tolist() == jvm, t
+        assert 0 < sum(jvm) < p + 1
 
 
 def test_band_count(images_df, cfg):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from deduplication_and_compression_spark.functions.images import (
@@ -13,8 +14,9 @@ from deduplication_and_compression_spark.operators.multimodal import (
 )
 from deduplication_and_compression_spark.operators.exact import exact_pairs
 from deduplication_and_compression_spark.streaming.ingest import (
-    run_ingest_once, run_screen_once, streaming_near_dup_screen,
+    build_screen_reference, run_ingest_once, run_screen_once, screen_batch_edges,
 )
+from tests.conftest import above_gate
 
 
 def test_streaming_ingest_dedups_across_batches(spark, fixture_pdf, tmp_path):
@@ -118,8 +120,8 @@ def test_streaming_near_dup_screen(spark, cfg, tmp_path):
     """Stream-static near-dup screening: arriving captions that are
     near-dups of a STATIC reference corpus come out as verified
     (id, ref_id, jaccard) edges; unrelated and sub-shingle rows do not.
-    Uses the foreachBatch drain (run_screen_once), which dedupes the
-    per-band duplicate edges of the stateless plan exactly."""
+    Uses the foreachBatch drain (run_screen_once), which emits exactly
+    one edge per (id, ref_id)."""
     import pandas as pd
 
     ref_caps = [
@@ -159,10 +161,9 @@ def test_streaming_near_dup_screen(spark, cfg, tmp_path):
     # foreachBatch dedup: exactly one edge per (id, ref_id)
     assert len(out) == len(got)
     assert (out["jaccard"] >= cfg.jaccard_threshold).all()
-    # the stateless plan itself runs on a batch frame too (same code
-    # path the continuous-trigger variant uses), duplicates allowed
-    edges = streaming_near_dup_screen(
-        spark.createDataFrame(arriving), reference, cfg
+    # the drain's micro-batch body, called on a plain batch frame
+    edges = screen_batch_edges(
+        spark.createDataFrame(arriving), build_screen_reference(reference, cfg), cfg
     ).toPandas()
     assert {(r.id, r.ref_id) for r in edges.itertuples()} == got
 
@@ -234,10 +235,9 @@ def test_screen_static_side_computed_once_across_batches(spark, cfg, tmp_path):
 
     streamed = spark.read.parquet(str(outp)).toPandas()
     both = pd.concat([drop1, drop2], ignore_index=True)
-    expected = (
-        streaming_near_dup_screen(spark.createDataFrame(both), reference, cfg)
-        .dropDuplicates(["id", "ref_id"]).toPandas()
-    )
+    expected = screen_batch_edges(
+        spark.createDataFrame(both), build_screen_reference(reference, cfg), cfg
+    ).toPandas()
     key = lambda df: {(r.id, r.ref_id, round(r.jaccard, 12))
                       for r in df.itertuples()}
     assert key(streamed) == key(expected)
@@ -280,20 +280,16 @@ def test_screen_exactly_once_on_redelivery(spark, cfg, tmp_path):
 
 
 def test_screen_batch_band_explode_is_keys_only(spark, cfg):
-    """The foreachBatch screen plan must explode (id, band_idx,
-    band_hash) ONLY — the caption and 128-lane signature are
-    re-attached by id after the band match, so neither may ride any
+    """Above the broadcast gate the screen's join plan must explode
+    (id, band_idx, band_hash) ONLY — the caption and 128-lane signature
+    are re-attached by id after the band match, so neither may ride any
     Generate (posexplode) node (VERDICT r4 "what's missing" #2: the
     payload-carrying explode multiplied shuffle bytes by ~bands×).
-    The stateless streaming variant keeps the full-carry shape by
-    documented necessity; this gate covers the batch path only."""
+    Under the gate the probe explodes nothing."""
     import io
     from contextlib import redirect_stdout
 
     import pandas as pd
-    from deduplication_and_compression_spark.streaming.ingest import (
-        build_screen_reference, screen_batch_edges,
-    )
 
     ref = spark.createDataFrame(pd.DataFrame({
         "image_id": ["r0", "r1"],
@@ -305,24 +301,30 @@ def test_screen_batch_band_explode_is_keys_only(spark, cfg):
         "caption": ["a striped cat sits on the warm windowsill looking"],
     }))
     ref_side = build_screen_reference(ref, cfg)
-    edges = screen_batch_edges(batch, ref_side, cfg)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        edges.explain("simple")  # one line per node, full arg lists
-    plan = buf.getvalue()
-    gen_lines = [l for l in plan.splitlines() if "Generate" in l]
-    assert gen_lines, plan  # both band explodes are Generate nodes
+
+    def plan(edges) -> str:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            edges.explain("simple")  # one line per node, full arg lists
+        return buf.getvalue()
+
+    with above_gate(spark):
+        joined = plan(screen_batch_edges(batch, ref_side, cfg))
+    gen_lines = [l for l in joined.splitlines() if "Generate" in l]
+    assert gen_lines, joined  # both band explodes are Generate nodes
     for line in gen_lines:
         low = line.lower()
         assert "txt" not in low and "sig" not in low, line
+    probed = plan(screen_batch_edges(batch, ref_side, cfg))
+    assert "Generate" not in probed and "MapInPandas" in probed, probed
 
 
 def test_screen_batch_verifies_once_and_signs_in_one_task(spark, cfg):
-    """The screen's exact-Jaccard verify is one Python node (no
-    ArrowEvalPython pair from a pushed-down UDF filter), and the
-    micro-batch's cached signature plan is re-planned by AQE, so a
-    small batch signs in one coalesced task instead of one per
-    shuffle partition."""
+    """Above the broadcast gate, the join plan's exact-Jaccard verify is
+    one Python node (no ArrowEvalPython pair from a pushed-down UDF
+    filter), and the micro-batch's cached signature plan is re-planned
+    by AQE, so a small batch signs in one coalesced task instead of one
+    per shuffle partition."""
     import pandas as pd
     from deduplication_and_compression_spark.persistence import persist_scope
     from deduplication_and_compression_spark.streaming.ingest import (
@@ -341,7 +343,7 @@ def test_screen_batch_verifies_once_and_signs_in_one_task(spark, cfg):
                     "an unrelated caption about mountain trails at dawn"],
     }))
     ref_side = build_screen_reference(ref, cfg)
-    with persist_scope():
+    with persist_scope(), above_gate(spark):
         edges = screen_batch_edges(batch, ref_side, cfg)
         nodes = executed_python_nodes(edges)
         rows = edges.collect()
@@ -480,51 +482,196 @@ def _stage_shuffle_write_bytes(spark) -> dict[tuple[int, int], int]:
 
 
 def test_screen_batch_keys_only_measured_shuffle_bytes(spark, cfg, images_df):
-    """MEASURED upgrade of the plan-shape gate above (VERDICT r5 Next
-    #6): with broadcast joins disabled so every band join pays a real
-    exchange, the keys-only batch plan must shuffle-write strictly —
-    and substantially — fewer bytes than the full-carry stateless plan
-    on the same input, because the caption + 128-lane signature never
-    ride the ~lsh_bands× band explode.  Bytes come from the driver's
-    status store (stage-level shuffleWriteBytes, diffed around each
-    plan), so this asserts the actual exchange payload, not the plan
-    string.  BENCH/BASELINE.md ("Round-6 pins") records the same
-    contrast at 100k-doc reference scale."""
+    """MEASURED shuffle bytes of the two screen plans on one input: the
+    broadcast probe under the gate and the keys-only join plan forced
+    above it (threshold -1, so every band join pays a real exchange).
+    Both must give the same edges, and the probe — whose only exchange
+    is the min-caption dedupe of the batch's (id, caption) rows, none
+    here where the fixture is already hash-partitioned by id — must
+    shuffle-write strictly fewer bytes than the join plan, whose band
+    explode, pair dedupe and re-attach joins all shuffle.  Bytes come
+    from the driver's status store (stage-level shuffleWriteBytes,
+    diffed around each plan), so this asserts the actual exchange
+    payload, not the plan string."""
     from deduplication_and_compression_spark.persistence import persist_scope
-    from deduplication_and_compression_spark.streaming.ingest import (
-        build_screen_reference, screen_batch_edges,
-    )
 
     ref = images_df.select("image_id", "caption")
     batch = ref.where(F.pmod(F.xxhash64("image_id"), F.lit(5)) == 0)
     ref_side = build_screen_reference(ref, cfg)
     ref_side.base.persist()
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         ref_side.base.count()  # static side built outside both regions
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert ref_side.probe_index() is not None
 
         before = _stage_shuffle_write_bytes(spark)
         with persist_scope():
-            n_keys = screen_batch_edges(batch, ref_side, cfg).count()
+            probed = screen_batch_edges(batch, ref_side, cfg).toPandas()
         mid = _stage_shuffle_write_bytes(spark)
-        with persist_scope():
-            n_full = (
-                streaming_near_dup_screen(batch, cfg=cfg, ref_side=ref_side)
-                .dropDuplicates(["id", "ref_id"]).count()
-            )
+        with persist_scope(), above_gate(spark):
+            joined = screen_batch_edges(batch, ref_side, cfg).toPandas()
         after = _stage_shuffle_write_bytes(spark)
 
-        keys_bytes = sum(v for k, v in mid.items() if k not in before)
-        full_bytes = sum(v for k, v in after.items() if k not in mid)
-        # same edges from both plans, and both actually shuffled
-        assert n_keys == n_full and n_keys > 0, (n_keys, n_full)
-        assert keys_bytes > 0, "keys-only plan produced no exchange?"
-        # payload-free explode: comfortably under half the bytes even
-        # at this small fixture (the 100k-scale bench records the
-        # production-size ratio)
-        assert full_bytes > 2 * keys_bytes, (keys_bytes, full_bytes)
+        probe_bytes = sum(v for k, v in mid.items() if k not in before)
+        join_bytes = sum(v for k, v in after.items() if k not in mid)
+        key = lambda d: sorted(zip(d["id"], d["ref_id"], d["jaccard"]))
+        assert len(probed) > 0 and key(probed) == key(joined)
+        assert join_bytes > 0, "the forced join plan produced no exchange?"
+        assert probe_bytes < join_bytes, (probe_bytes, join_bytes)
     finally:
-        # restore the PRIOR value, not a duplicated constant (r6 review)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
-        ref_side.base.unpersist()
+        ref_side.release()
+
+
+def _screen_table(rng, ids: list, vocab: list[str], n: int,
+                  sources: list | None = None) -> list[tuple]:
+    """Seeded (image_id, caption) rows: random captions from a small
+    vocabulary and one-word edits of earlier captions (of ``sources``
+    when given), plus null, empty and shorter-than-k captions; ``ids``
+    are drawn with repeats and include nulls."""
+    caps = []
+    for _ in range(n):
+        r = rng.random()
+        pool = [c for c in (sources or caps) if c and len(c) > 8]
+        if r < 0.08:
+            caps.append(None)
+        elif r < 0.12:
+            caps.append("")
+        elif r < 0.16:
+            caps.append("ab")
+        elif pool and r < 0.6:
+            words = pool[int(rng.integers(len(pool)))].split()
+            words[int(rng.integers(len(words)))] = str(rng.choice(vocab))
+            caps.append(" ".join(words))
+        else:
+            caps.append(" ".join(rng.choice(vocab, size=int(rng.integers(6, 14)))))
+    return [(ids[int(i)], c) for i, c in zip(rng.integers(len(ids), size=n), caps)]
+
+
+def _screen_pair(spark, seed: int, id_type: str):
+    """(reference, batch, id maker) for the probe-vs-join parity test."""
+    rng = np.random.default_rng(seed)
+    vocab = [f"w{i}" for i in range(40)]
+    mk = (lambda i: f"id{i:03d}") if id_type == "string" else (lambda i: i * 7919 - 2**40)
+    ref_ids = [mk(i) for i in range(60)] + [None]
+    bat_ids = [mk(i) for i in range(40, 120)] + [None]  # 40..59 on both sides
+    ref_rows = _screen_table(rng, ref_ids, vocab, 150)
+    bat_rows = _screen_table(rng, bat_ids, vocab, 120, [c for _, c in ref_rows])
+    # reference rows re-arriving under their own ids
+    bat_rows += [r for r in ref_rows if r[0] is not None and r[1]][:5]
+    # a hot bucket: 20 reference copies of one caption; one arriving
+    # copy under a new id, one under a reference copy's own id
+    hot = "the same boilerplate caption shared by every copy of a flood"
+    ref_rows += [(mk(200 + i), hot) for i in range(20)]
+    bat_rows += [(mk(300), hot), (mk(205), hot)]
+    # an arriving id under two captions: only the min one is a near-dup
+    bat_rows += [(mk(301), hot + " too"), (mk(301), "zz " + hot)]
+    schema = f"image_id {id_type}, caption string"
+    return (spark.createDataFrame(ref_rows, schema),
+            spark.createDataFrame(bat_rows, schema), mk)
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_screen_probe_matches_join_plan(spark, cfg, id_type):
+    """Under the broadcast gate the screen runs the probe, above it the
+    join plan; on seeded random tables both give exactly the same
+    (id, ref_id, jaccard) rows.  The tables repeat ids on both sides
+    (min caption wins), share ids between batch and reference (an id
+    never pairs with itself), hold null ids, null, empty and
+    shorter-than-k captions, and a 20-copy identical-caption hot
+    bucket; an empty batch gives no rows on either plan."""
+    from deduplication_and_compression_spark.persistence import persist_scope
+
+    key = lambda d: sorted(zip(d["id"], d["ref_id"], d["jaccard"]))
+    for seed in (3, 4):
+        ref, batch, mk = _screen_pair(spark, seed, id_type)
+        ref_side = build_screen_reference(ref, cfg)
+        ref_side.base.persist()
+        try:
+            for b in (batch, batch.limit(0)):
+                with persist_scope():
+                    edges = screen_batch_edges(b, ref_side, cfg)
+                    probed = edges.toPandas()
+                    plan = edges._jdf.queryExecution().executedPlan().toString()
+                with persist_scope(), above_gate(spark):
+                    joined = screen_batch_edges(b, ref_side, cfg).toPandas()
+                assert "MapInPandas" in plan and "Join" not in plan, plan
+                assert key(probed) == key(joined), (seed, len(probed), len(joined))
+            assert len(probed) == 0  # the empty batch, run last
+        finally:
+            ref_side.release()
+        with persist_scope():
+            full = screen_batch_edges(batch, build_screen_reference(ref, cfg), cfg).toPandas()
+        hot_refs = {mk(200 + i) for i in range(20)}
+        per_id = full[full["ref_id"].isin(hot_refs)].groupby("id").size().to_dict()
+        assert per_id == {mk(300): 20, mk(205): 19, mk(301): 20}, per_id
+        assert (full["id"] != full["ref_id"]).all()
+        assert len(full) > 59 + 5, len(full)  # the random rows pair too
+
+
+def test_screen_probe_plan_and_job_count(spark, cfg, images_df, tmp_path):
+    """Under the gate the executed micro-batch plan holds exactly one
+    MapInPandas and no join, and a 100-row micro-batch written to the
+    parquet sink runs at most 3 Spark jobs (the join plan ran 10),
+    counted by job group as bench_extra.py does."""
+    from deduplication_and_compression_spark.persistence import persist_scope
+
+    ref_side = build_screen_reference(images_df.select("image_id", "caption"), cfg)
+    ref_side.base.persist()
+    try:
+        ref_side.base.count()
+        ref_side.probe_index()  # built before the stream, as run_screen_once does
+        batch = images_df.select("image_id", "caption").limit(100)
+        sc = spark.sparkContext
+        for i in range(2):
+            group = f"screen-micro-batch-{i}"
+            sc.setJobGroup(group, group)
+            try:
+                with persist_scope():
+                    edges = screen_batch_edges(batch, ref_side, cfg)
+                    edges.write.mode("overwrite").parquet(str(tmp_path / "edges"))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert 0 < len(jobs) <= 3, jobs
+        edges.collect()
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("MapInPandas") == 1 and "Join" not in final, final
+    finally:
+        ref_side.release()
+
+
+def test_run_screen_once_releases_probe_broadcast(spark, cfg, tmp_path, monkeypatch):
+    """run_screen_once builds the probe index once and destroys its
+    broadcast when the drain returns, so drains in one long-lived
+    session leave no driver-held broadcast (block or temp file)."""
+    import os
+
+    import pandas as pd
+    from deduplication_and_compression_spark.streaming import ingest
+
+    made = []
+
+    def recording_broadcast(spark_, value):
+        made.append(spark_.sparkContext.broadcast(value))
+        return made[-1]
+
+    monkeypatch.setattr(ingest, "scoped_broadcast", recording_broadcast)
+    ref = spark.createDataFrame(pd.DataFrame({
+        "image_id": ["r0"],
+        "caption": ["a striped cat sits on the warm windowsill watching birds"],
+    }))
+    inp, outp, chk = tmp_path / "in", tmp_path / "out", tmp_path / "chk"
+    inp.mkdir()
+    pd.DataFrame({
+        "image_id": ["s0"], "bytes": [b""],
+        "w": np.array([1], dtype=np.int32), "h": np.array([1], dtype=np.int32),
+        "fmt": ["raw"],
+        "caption": ["a striped cat sits on the warm windowsill watching crows"],
+        "phash": [0],
+    }).to_parquet(inp / "d1.parquet", index=False)
+    run_screen_once(spark, str(inp), ref, str(outp), str(chk), cfg)
+    out = spark.read.parquet(str(outp)).toPandas()
+    assert set(zip(out["id"], out["ref_id"])) == {("s0", "r0")}
+    assert len(made) == 1
+    assert not made[0]._jbroadcast.isValid()
+    assert not os.path.exists(made[0]._path)

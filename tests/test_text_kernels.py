@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import io
 import math
-from contextlib import contextmanager, nullcontext, redirect_stdout
+from contextlib import nullcontext, redirect_stdout
 
 import numpy as np
 import pytest
@@ -15,6 +15,7 @@ from deduplication_and_compression_spark.functions import hashing as H
 from deduplication_and_compression_spark.functions.text import (
     lcs_length, suffix_array, winnow_fingerprints,
 )
+from tests.conftest import above_gate
 
 
 def _scalar_token_hashes(text: str) -> np.ndarray:
@@ -151,19 +152,6 @@ def test_zipf_plans_agree_and_find_planted_pairs(spark):
     assert planted <= found, planted - found
 
 
-@contextmanager
-def _above_gate(spark):
-    """Turn broadcasting off, which sends the all-pairs Jaccard to the
-    PPJoin plan; the prior threshold is restored afterwards."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _plan(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -216,7 +204,7 @@ def test_allpairs_direct_kernel_matches_join(spark, corpus, threshold_bp):
         return set(rows), out.dtypes, _plan(out)
 
     direct, direct_types, direct_plan = run()
-    with _above_gate(spark):
+    with above_gate(spark):
         joined, join_types, join_plan = run()
     assert "MapInPandas" in direct_plan and "MapInPandas" not in join_plan
     assert direct == joined
@@ -239,7 +227,7 @@ def test_allpairs_direct_kernel_plan(spark):
         plan = _plan(bigram_jaccard_pairs_allpairs(d))
         assert plan.count("MapInPandas") == 1, plan
         assert "Join" not in plan and "bigram" not in plan, plan
-        with _above_gate(spark):
+        with above_gate(spark):
             plan = _plan(bigram_jaccard_pairs_allpairs(d))
         assert "MapInPandas" not in plan and "array_intersect" in plan, plan
 
@@ -255,7 +243,7 @@ def test_allpairs_duplicate_rows_bounded_jaccard(spark):
     assert spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
     docs = spark.createDataFrame([(1, "a b"), (1, "a b"), (2, "a b"), (2, "a b")],
                                  "doc_id bigint, text string")
-    for gate in (nullcontext, _above_gate):
+    for gate in (nullcontext, above_gate):
         for plan in (bigram_jaccard_pairs_allpairs, bigram_jaccard_pairs,
                      bigram_jaccard_pairs_auto):
             with gate(spark):
